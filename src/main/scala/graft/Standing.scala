@@ -1,0 +1,117 @@
+package graft
+
+import java.util.concurrent.atomic.AtomicLong
+
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+
+/** Standing tables: built once, written as parquet, read everywhere.
+  *
+  * Every corpus-grain derivation the engine serves repeatedly (the shared
+  * document corpora, the dedup signature tables, the ANN indexes, the
+  * BM25 stats tables, the staged stream logs) goes through here, so the
+  * whole decision lives in one place:
+  *
+  *   - the KEY is (caller's session, tag, input fingerprint). The session
+  *     scope is deliberate: session conf shapes a build, and a fresh
+  *     session measures a fresh build.
+  *   - the FINGERPRINT is one of two forms. [[corpus]]: a listing of the
+  *     fixture tables the build reads (path, size, mtime — no data read),
+  *     so a table regenerated in place rebuilds instead of being served
+  *     stale. [[frame]]: the canonicalized analyzed plan of a derived
+  *     frame itself (exact plan equality — a `LocalRelation` compares its
+  *     rows, which its string omits) plus the same listing over its input
+  *     files.
+  *   - the build runs ONCE per key: a once-only holder wins the
+  *     `putIfAbsent` and every racing thread forces that holder's lazy
+  *     value (Verify fans queries out in parallel).
+  *   - tables live in [[TempDirs]] (removed recursively at JVM exit); an
+  *     entry outlives every query by design.
+  *   - every build is counted per tag ([[builds]]), so specs and benches
+  *     can pin write-once.
+  *
+  * Parquet, not executor cache: a MEMORY_AND_DISK block falls out of the
+  * storage pool under a long session's memory pressure and its whole
+  * lineage recomputes per action, while a parquet read gives every
+  * consumer real scans with pushdown and pruning — the reference's own
+  * "shred once, read everywhere" storage shape.
+  */
+object Standing {
+
+  /** What an entry was built from: the canonicalized plan of a derived
+    * frame (None for a corpus at rest) and the sorted (path, size, mtime)
+    * of every input file (size -1 marks a missing path). */
+  final case class Input(plan: Option[LogicalPlan], files: Seq[(String, Long, Long)])
+
+  private final class Once(build: => AnyRef) { lazy val value: AnyRef = build }
+
+  private val entries =
+    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, Input), Once]
+
+  private val counts = scala.collection.concurrent.TrieMap.empty[String, AtomicLong]
+
+  /** Builds run so far under `tag`. */
+  def builds(tag: String): Long = counts.get(tag).fold(0L)(_.get)
+
+  /** Builds run so far, every tag. */
+  def builds: Long = counts.values.map(_.get).sum
+
+  /** Fingerprint of the fixture tables `d/<table>.parquet` a build reads. */
+  def corpus(s: SparkSession, d: String, tables: String*): Input =
+    Input(None, listing(s, tables.map(t => s"$d/$t.parquet")))
+
+  /** Fingerprint of a derived frame: its canonicalized analyzed plan and
+    * the files its relations read. */
+  def frame(df: DataFrame): Input = {
+    val plan = df.queryExecution.analyzed
+    val files = plan.collect { case r: LogicalRelation => r.relation }
+      .collect { case h: HadoopFsRelation => h.location.inputFiles.toSeq }.flatten
+    Input(Some(plan.canonicalized), listing(df.sparkSession, files.distinct))
+  }
+
+  /** The entry for (`s`, `tag`, `in`), built by `build` on first use. */
+  def apply[T <: AnyRef](s: SparkSession, tag: String, in: Input)(build: => T): T = {
+    val fresh = new Once({
+      counts.getOrElseUpdate(tag, new AtomicLong).incrementAndGet()
+      build
+    })
+    entries.putIfAbsent((s, tag, in), fresh).getOrElse(fresh).value.asInstanceOf[T]
+  }
+
+  /** A standing parquet table: `df` written once per key (partitioned by
+    * `partitionBy` when non-empty, so an equi-filter on those columns
+    * prunes to its partitions' files), then served from the read. */
+  def table(s: SparkSession, tag: String, in: Input, partitionBy: Seq[String] = Nil)
+           (df: => DataFrame): DataFrame =
+    apply(s, tag, in)(write(s, tag, partitionBy)(df))
+
+  /** Write `df` to a fresh temp parquet dir and read it back — a hard
+    * materialization boundary, uncached (every call writes). */
+  def write(s: SparkSession, tag: String, partitionBy: Seq[String] = Nil)
+           (df: DataFrame): DataFrame = {
+    val dir = TempDirs.create(s"graft-$tag-").toString
+    val w = df.write.mode("overwrite")
+    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).parquet(dir)
+    s.read.parquet(dir)
+  }
+
+  /** Sorted (path, size, mtime) of every file under `paths`: a listing,
+    * no data read. Plain `getFileStatus`/`listStatus`, not `listFiles`:
+    * the located statuses `listFiles` builds load each local file's
+    * permissions, which without the native Hadoop library forks an `ls`
+    * per file — on every cache hit. */
+  private def listing(s: SparkSession, paths: Seq[String]): Seq[(String, Long, Long)] = {
+    val conf = s.sparkContext.hadoopConfiguration
+    def files(fs: FileSystem, st: FileStatus): Seq[FileStatus] =
+      if (st.isDirectory) fs.listStatus(st.getPath).toSeq.flatMap(files(fs, _)) else Seq(st)
+    paths.flatMap { p =>
+      val path = new Path(p)
+      val fs = path.getFileSystem(conf)
+      try files(fs, fs.getFileStatus(path))
+        .map(f => (f.getPath.toString, f.getLen, f.getModificationTime))
+      catch { case _: java.io.FileNotFoundException => Seq((p, -1L, -1L)) }
+    }.sorted
+  }
+}

@@ -171,59 +171,45 @@ object Bm25 {
   }
 
   // ------------------------------------------------ standing stats index
-  /** dir of the standing stats table per (session, key) — write-once. */
-  private val standingMemo = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String), String]
-
-  /** Test hook: how many standing builds ran (Bm25Spec pins write-once). */
-  private[docs] val standingBuilds = new java.util.concurrent.atomic.AtomicLong
-
   /** Build (once per session+key+corpus) the standing stats index for one
     * (corpus, analyzed field): `corpus` holds the 1-row (n, tdl);
     * `terms` holds one (term, df) row per DISTINCT corpus token. KEY
     * CONTRACT: the key names a logical (corpus, analyzer) pair — two
     * analyzers over one column are two different df tables. Correctness
-    * does NOT rest on key discipline alone: the memo key also folds in a
-    * fingerprint of the corpus (the analyzed plan's canonical hash) and
-    * the analyzer expression, so a reused key against a different or
-    * mutated corpus triggers a fresh build instead of silently serving
-    * stale stats. The same frame re-derived query-to-query (e.g. a fresh
-    * parquet read of the same path) canonicalizes identically, so
-    * write-once still holds (pinned by `standingBuilds` in Bm25Spec).
-    * Entries live for the owning session's JVM lifetime by design — the
-    * value is a write-once temp dir, and stats tables are meant to
-    * outlive every query. Returns the table's directory. */
-  def standing(index: DataFrame, toks: Column, key: String): String = {
-    val fp = (index.queryExecution.analyzed.canonicalized.hashCode(),
-      toks.toString).hashCode()
-    standingMemo.getOrElseUpdate((index.sparkSession, s"$key#$fp"), {
-      standingBuilds.incrementAndGet()
-      val dir = graft.TempDirs.create("graft-bm25-stats-").toString
-      val an = index.select(toks.as("_ts"))
+    * does NOT rest on key discipline alone: the entry is a
+    * [[graft.Standing]] keyed on the analyzed frame itself (its canonical
+    * plan, which carries the corpus and the analyzer expression, plus its
+    * input-file listing), so a reused key against a different or mutated
+    * corpus triggers a fresh build instead of silently serving stale
+    * stats. The same frame re-derived query-to-query (e.g. a fresh parquet
+    * read of the same path) canonicalizes identically, so write-once still
+    * holds (pinned in Bm25Spec). Returns the (corpus, terms) tables. */
+  def standing(index: DataFrame, toks: Column, key: String): (DataFrame, DataFrame) = {
+    val s = index.sparkSession
+    val an = index.select(toks.as("_ts"))
+    graft.Standing(s, s"bm25-$key", graft.Standing.frame(an)) {
       // null token arrays (null source text): 0 tokens for tdl (the
       // inline-stats guard), no term rows (explode of null emits none —
       // the same docs array_contains scores 0 for every term)
-      an.agg(count(lit(1)).cast("long").as("n"),
+      (graft.Standing.write(s, "bm25-corpus")(
+        an.agg(count(lit(1)).cast("long").as("n"),
           coalesce(sum(when(col("_ts").isNotNull, size(col("_ts")).cast("long"))
-            .otherwise(0L)), lit(0L)).as("tdl"))
-        .write.mode("overwrite").parquet(s"$dir/corpus")
-      an.select(explode(array_distinct(col("_ts"))).as("term"))
-        .groupBy("term").agg(count(lit(1)).cast("long").as("df"))
-        .write.mode("overwrite").parquet(s"$dir/terms")
-      dir
-    })
+            .otherwise(0L)), lit(0L)).as("tdl"))),
+       graft.Standing.write(s, "bm25-terms")(
+         an.select(explode(array_distinct(col("_ts"))).as("term"))
+           .groupBy("term").agg(count(lit(1)).cast("long").as("df"))))
+    }
   }
 
-  /** Stats for `terms` from a standing table: a 1-row read + a
+  /** Stats for `terms` from the standing tables: a 1-row read + a
     * term-pushdown-filtered read of ≤ |terms| rows. Terms absent from the
     * corpus get df = 0, identical to the inline aggregate. */
-  def statsFromStanding(spark: org.apache.spark.sql.SparkSession,
-                        dir: String, terms: Seq[String]): Stats = {
+  def statsFromStanding(tables: (DataFrame, DataFrame), terms: Seq[String]): Stats = {
     val ts = terms.distinct
-    val c = spark.read.parquet(s"$dir/corpus").collect().head
+    val c = tables._1.collect().head
     val n = c.getLong(0)
     val avg100 = if (n == 0L) 0L else 100L * c.getLong(1) / n
-    val dfs = spark.read.parquet(s"$dir/terms")
+    val dfs = tables._2
       .filter(col("term").isin(ts: _*))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     Stats(n, avg100, ts.map(t => t -> dfs.getOrElse(t, 0L)).toMap)
@@ -234,7 +220,7 @@ object Bm25 {
   def stats(index: DataFrame, toks: Column, terms: Seq[String],
             standingKey: Option[String]): Stats = standingKey match {
     case Some(k) =>
-      statsFromStanding(index.sparkSession, standing(index, toks, k), terms)
+      statsFromStanding(standing(index, toks, k), terms)
     case None => stats(index, toks, terms)
   }
 

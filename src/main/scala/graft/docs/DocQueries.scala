@@ -25,40 +25,36 @@ object DocQueries {
   private val O = "(SELECT * FROM orders WHERE o_custkey % 113 <> 0)"
   private def ck(c: String) = s"CAST($c AS VARCHAR)"
 
-  /** Shared corpora (docs → shredded → assembled) memoized per (session,
-    * dir) and materialized to temp PARQUET, not executor cache: every
-    * registry query starts from these tables, the shred/assemble plan
-    * references its input once per schema node (≈10×), and a
-    * MEMORY_AND_DISK persist demonstrably falls out of cache under the
-    * dedup queries' memory pressure (d16 was 60 s over "cached" data in
+  /** Shared corpora (docs → shredded → assembled): standing parquet tables
+    * ([[graft.Standing]]) over the customer/orders fixture, not executor
+    * cache: every registry query starts from these tables, the
+    * shred/assemble plan references its input once per schema node (≈10×),
+    * and a MEMORY_AND_DISK persist demonstrably falls out of cache under
+    * the dedup queries' memory pressure (d16 was 60 s over "cached" data in
     * round 2). Writing once and re-reading parquet is the literal cluster
     * architecture — "write the shredded tables once, read them everywhere"
     * — and gives every consumer real scans with pushdown + pruning. */
-  private val memo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, String), AnyRef]
-
-  /** Write `df` to a session-temp parquet dir (removed recursively at JVM
-    * exit — graft.TempDirs) and read it back. */
-  private[docs] def mat(s: SparkSession, tag: String)(df: => DataFrame): DataFrame = {
-    val dir = graft.TempDirs.create(s"graft-$tag-")
-    df.write.mode("overwrite").parquet(dir.toString)
-    s.read.parquet(dir.toString)
-  }
+  private def corpus[T <: AnyRef](s: SparkSession, d: String, tag: String)(build: => T): T =
+    graft.Standing(s, tag, graft.Standing.corpus(s, d, "customer", "orders"))(build)
 
   private def docs(s: SparkSession, d: String): DataFrame =
-    memo.getOrElseUpdate((s, d, "docs"),
-      mat(s, "docs")(PlanDocs.docs(s, d))).asInstanceOf[DataFrame]
+    corpus(s, d, "docs")(graft.Standing.write(s, "docs")(PlanDocs.docs(s, d)))
 
   private def shredded(s: SparkSession, d: String): Shredded =
-    memo.getOrElseUpdate((s, d, "shredded"), {
+    corpus(s, d, "shredded") {
       val sh = Shredder.shred(docs(s, d))
-      Shredded(mat(s, "entities")(sh.entities), mat(s, "edges")(sh.edges))
-    }).asInstanceOf[Shredded]
+      Shredded(graft.Standing.write(s, "entities")(sh.entities),
+        graft.Standing.write(s, "edges")(sh.edges))
+    }
 
   private def assembled(s: SparkSession, d: String): DataFrame =
-    memo.getOrElseUpdate((s, d, "assembled"),
-      mat(s, "assembled")(Assembler.assemble(shredded(s, d), schema, "plan")))
-      .asInstanceOf[DataFrame]
+    corpus(s, d, "assembled")(
+      graft.Standing.write(s, "assembled")(Assembler.assemble(shredded(s, d), schema, "plan")))
+
+  /** A standing table over the customer fixture (the planted geo/ip/shape
+    * corpora). */
+  private def customerTable(s: SparkSession, d: String, tag: String)(df: => DataFrame) =
+    graft.Standing.table(s, tag, graft.Standing.corpus(s, d, "customer"))(df)
 
   /** Materialize the shared corpora up front (Verify/Bench call this once
     * before fanning out queries). */
@@ -408,12 +404,14 @@ object DocQueries {
     * (reachability expansion with 4 distincts), and under memory pressure
     * the blocks can drop mid-query (d14 measured 217 s vs ~5 s for the same
     * assembly over materialized inputs in r4). Writing to parquet and
-    * reading back — the same `mat()` boundary the shared corpora use, and
-    * the reference's own semantics (replace persists the shredded state,
-    * `PlanService.java:202-215`) — gives the assembler real re-scannable
-    * tables with pushdown, and leaves nothing pinned in the storage pool. */
+    * reading back — the same [[graft.Standing]] boundary the shared
+    * corpora use, and the reference's own semantics (replace persists the
+    * shredded state, `PlanService.java:202-215`) — gives the assembler
+    * real re-scannable tables with pushdown, and leaves nothing pinned in
+    * the storage pool. */
   private def materialized(s: SparkSession, tag: String, sh: Shredded): Shredded =
-    Shredded(mat(s, s"$tag-entities")(sh.entities), mat(s, s"$tag-edges")(sh.edges))
+    Shredded(graft.Standing.write(s, s"$tag-entities")(sh.entities),
+      graft.Standing.write(s, s"$tag-edges")(sh.edges))
 
   private val d12Sql =
     s"""WITH o AS $O, keep AS (SELECT * FROM customer WHERE c_nationkey <> 3),
@@ -620,20 +618,13 @@ object DocQueries {
     * partition-pruning filter: the scan lists ONE directory regardless of
     * corpus size. */
   private def d19(s: SparkSession, d: String): DataFrame = {
-    val out = java.nio.file.Files.createTempDirectory("graft-entities-").toString
-    shredded(s, d).entities.write.mode("overwrite")
-      .partitionBy("type_tag").parquet(out)
-    val pruned = s.read.parquet(out).filter(col("type_tag") === "planservice")
+    val pruned = graft.Standing.write(s, "entities", Seq("type_tag"))(shredded(s, d).entities)
+      .filter(col("type_tag") === "planservice")
     val res = pruned.agg(
         count(lit(1)).as("n_rows"),
         countDistinct(col("key")).as("n_keys"))
       .select(col("n_rows"), col("n_keys"))
-    val materialized = graft.Eager.pin(res)
-    val p = java.nio.file.Paths.get(out)
-    java.nio.file.Files.walk(p)
-      .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-      .forEach(f => java.nio.file.Files.delete(f))
-    materialized
+    graft.Eager.pin(res)
   }
 
   private val d19Sql =
@@ -4731,15 +4722,14 @@ object DocQueries {
     * lat ∈ [-60, 60], lon ∈ [-180, 179.9]. Materialized to parquet so
     * the geo_distance bounding box hits REAL pushed filters at the scan. */
   private def geoDocs(s: SparkSession, d: String): DataFrame =
-    memo.getOrElseUpdate((s, d, "geo"),
-      mat(s, "geo")(graft.Tables(s, d, "customer").select(struct(
+    customerTable(s, d, "geo")(graft.Tables(s, d, "customer").select(struct(
         concat(lit("plan-"), col("c_custkey").cast("string")).as("objectId"),
         struct(
           (((col("c_custkey") * 37) % 1201 - 600).cast("double") / 10.0).as("lat"),
           (((col("c_custkey") * 73) % 3600 - 1800).cast("double") / 10.0).as("lon")
         ).as("location"),
         col("c_mktsegment").as("planType"),
-        (col("c_custkey") % 50).as("copay")).as("doc")))).asInstanceOf[DataFrame]
+        (col("c_custkey") % 50).as("copay")).as("doc")))
 
   private def geoSchema(df: DataFrame): StructType =
     df.schema("doc").dataType.asInstanceOf[StructType]
@@ -5650,8 +5640,7 @@ object DocQueries {
     * (c_custkey · 2654435761) mod 2^32. Materialized to parquet like the
     * geo corpus. */
   private def ipDocs(s: SparkSession, d: String): DataFrame =
-    memo.getOrElseUpdate((s, d, "ip"),
-      mat(s, "ip")(graft.Tables(s, d, "customer").select(struct(
+    customerTable(s, d, "ip")(graft.Tables(s, d, "customer").select(struct(
         concat(lit("plan-"), col("c_custkey").cast("string")).as("objectId"), {
           val v = pmod(col("c_custkey") * 2654435761L, lit(4294967296L))
           concat_ws(".",
@@ -5660,7 +5649,7 @@ object DocQueries {
             shiftrightunsigned(v, 8).bitwiseAND(lit(255L)).cast("string"),
             v.bitwiseAND(lit(255L)).cast("string"))
         }.as("ip"),
-        (col("c_custkey") % 50).as("copay")).as("doc")))).asInstanceOf[DataFrame]
+        (col("c_custkey") % 50).as("copay")).as("doc")))
 
   private val ipIntSql = "((c_custkey * 2654435761) % 4294967296)"
 
@@ -7049,18 +7038,17 @@ object DocQueries {
   private val d180Query = Seq((5.05, 15.05), (5.05, 45.05), (29.05, 40.05), (25.05, 16.05))
 
   private def shapeDocs(s: SparkSession, d: String): DataFrame =
-    memo.getOrElseUpdate((s, d, "shape"),
-      mat(s, "shape") {
-        val latE = ((col("c_custkey") * 37) % 1201 - 600).cast("double") / 10.0
-        val lonE = ((col("c_custkey") * 73) % 3600 - 1800).cast("double") / 10.0
-        graft.Tables(s, d, "customer").select(struct(
-          concat(lit("plan-"), col("c_custkey").cast("string")).as("objectId"),
-          struct(
-            latE.as("y1"), lonE.as("x1"),
-            (latE + lit(0.8)).as("y2"), (lonE + lit(0.5)).as("x2"),
-            (latE + lit(0.3)).as("y3"), (lonE + lit(1.1)).as("x3")).as("shape"))
-          .as("doc"))
-      }).asInstanceOf[DataFrame]
+    customerTable(s, d, "shape") {
+      val latE = ((col("c_custkey") * 37) % 1201 - 600).cast("double") / 10.0
+      val lonE = ((col("c_custkey") * 73) % 3600 - 1800).cast("double") / 10.0
+      graft.Tables(s, d, "customer").select(struct(
+        concat(lit("plan-"), col("c_custkey").cast("string")).as("objectId"),
+        struct(
+          latE.as("y1"), lonE.as("x1"),
+          (latE + lit(0.8)).as("y2"), (lonE + lit(0.5)).as("x2"),
+          (latE + lit(0.3)).as("y3"), (lonE + lit(1.1)).as("x3")).as("shape"))
+        .as("doc"))
+    }
 
   private def d180(s: SparkSession, d: String): DataFrame = {
     val sh = col("doc").getField("shape")

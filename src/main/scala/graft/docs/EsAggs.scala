@@ -924,7 +924,7 @@ object EsAggs {
               s"histogram offset must be in [0, interval): $offset")
             val minDc = num(spec, "min_doc_count", "histogram").getOrElse(1L)
             val eb = hm.get("extended_bounds").map { ebSpec =>
-              val b = checkSpecKeys(ebSpec, "extended_bounds", Set("min", "max"))
+              checkSpecKeys(ebSpec, "extended_bounds", Set("min", "max"))
               require(minDc == 0L,
                 "extended_bounds without min_doc_count: 0 has no effect (ES rule) — set it explicitly")
               (num(ebSpec, "min", "extended_bounds").getOrElse(
@@ -1038,7 +1038,7 @@ object EsAggs {
             DateHistogram(fieldPath(spec, "date_histogram", ctx), unit, dMinDc, dEb, dTz)
             }
           }).orElse(bf.get("auto_date_histogram").map { spec =>
-            val m = checkSpecKeys(spec, "auto_date_histogram", Set("field", "buckets"))
+            checkSpecKeys(spec, "auto_date_histogram", Set("field", "buckets"))
             val target = num(spec, "buckets", "auto_date_histogram").map(_.toInt).getOrElse(10)
             require(target >= 1, s"auto_date_histogram buckets must be >= 1: $target")
             AutoDateHistogram(fieldPath(spec, "auto_date_histogram", ctx), target)
@@ -1154,7 +1154,7 @@ object EsAggs {
               "duplicate geo_distance bucket keys")
             GeoDistanceAgg(fieldPath(spec, "geo_distance", ctx), olat, olon, ranges)
           }).orElse(bf.get("geotile_grid").map { spec =>
-            val m = checkSpecKeys(spec, "geotile_grid", Set("field", "precision", "size"))
+            checkSpecKeys(spec, "geotile_grid", Set("field", "precision", "size"))
             val precision = num(spec, "precision", "geotile_grid").map(_.toInt).getOrElse(7)
             require(precision >= 0 && precision <= 29,
               s"geotile_grid precision out of range: $precision (0-29)")
@@ -1162,7 +1162,7 @@ object EsAggs {
             require(size0 >= 1, s"geotile_grid size must be >= 1: $size0")
             GeotileGrid(fieldPath(spec, "geotile_grid", ctx), precision, size0)
           }).orElse(bf.get("geohash_grid").map { spec =>
-            val m = checkSpecKeys(spec, "geohash_grid", Set("field", "precision", "size"))
+            checkSpecKeys(spec, "geohash_grid", Set("field", "precision", "size"))
             val precision = num(spec, "precision", "geohash_grid").map(_.toInt).getOrElse(5)
             require(precision >= 1 && precision <= 6,
               s"geohash_grid precision out of implemented range: $precision (1-6; " +
@@ -1171,7 +1171,7 @@ object EsAggs {
             require(size0 >= 1, s"geohash_grid size must be >= 1: $size0")
             GeohashGrid(fieldPath(spec, "geohash_grid", ctx), precision, size0)
           }).orElse(bf.get("geohex_grid").map { spec =>
-            val m = checkSpecKeys(spec, "geohex_grid", Set("field", "precision", "size"))
+            checkSpecKeys(spec, "geohex_grid", Set("field", "precision", "size"))
             val precision = num(spec, "precision", "geohex_grid").map(_.toInt).getOrElse(4)
             require(precision >= 0 && precision <= 8,
               s"geohex_grid precision out of implemented range: $precision (0-8)")
@@ -1321,7 +1321,7 @@ object EsAggs {
             }
             MultiTerms(paths, num(spec, "size", "multi_terms").map(_.toInt).getOrElse(10))
           }).orElse(bf.get("rare_terms").map { spec =>
-            val m = checkSpecKeys(spec, "rare_terms", Set("field", "max_doc_count"))
+            checkSpecKeys(spec, "rare_terms", Set("field", "max_doc_count"))
             val maxDc = num(spec, "max_doc_count", "rare_terms").getOrElse(1L)
             require(maxDc >= 1, s"rare_terms max_doc_count must be >= 1: $maxDc")
             RareTerms(fieldPath(spec, "rare_terms", ctx), maxDc)

@@ -113,9 +113,7 @@ object PartitionedStore {
       .filter(!col("root").isin(roots: _*))
     val out = kept.unionByName(
       fresh.withColumn("shard", shardOf(col("root"), st.nShards)))
-    val stage = graft.TempDirs.create(s"graft-pstore-stage-")
-    out.write.partitionBy("shard").mode("overwrite").parquet(stage.toString)
-    val staged = s.read.parquet(stage.toString)
+    val staged = graft.Standing.write(s, "pstore-stage", Seq("shard"))(out)
     staged.write.partitionBy("shard").mode("overwrite")
       .option("partitionOverwriteMode", "dynamic").parquet(dir)
     // empty-partition drop: a shard whose every row was deleted is absent

@@ -2,7 +2,7 @@ package graft.docs
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** ES `_rank_eval` — the search-quality evaluation API: run N rated
   * search requests, score each ranking against its relevance judgements,

@@ -1514,8 +1514,7 @@ object SearchQuery {
     }
   }
 
-  private def scoreCol0(p: Parsed, doc: Column,
-                        bmBase: Option[Column] = None): Column = {
+  private def scoreCol0(p: Parsed, doc: Column, bmBase: Option[Column]): Column = {
     def clauseCount: Column = bmBase.getOrElse(
       p.shoulds.map(q => coalesce(compile(q, doc).cast("long"), lit(0L))).reduce(_ + _))
     // relevance base for the score-shaping wrappers: the bm25 base when

@@ -58,8 +58,8 @@ object DedupQueries {
   // ----------------------------------------------------- standing index
   /** The dedup family's SHARED frames — tokens, shingle sets, MinHash and
     * SimHash signatures, quantized vectors — materialized ONCE per
-    * (session, sf-dir) as write-once parquet (the DocQueries corpus
-    * pattern, `DocQueries.scala:29-47`) and read from storage by every
+    * (session, corpus) as standing parquet tables ([[graft.Standing]],
+    * the DocQueries corpus pattern) and read from storage by every
     * consumer. NOT executor-cache `.persist()`: a MEMORY_AND_DISK block
     * demonstrably evaporates under the 300+-query session's memory
     * pressure, multiplying dd7/dd8 7× as the whole token→shingle→signature
@@ -75,31 +75,25 @@ object DedupQueries {
     * re-splits the document per window element — O(tokens²) per doc
     * (measured 36-50 s vs 2-4 s at sf0.1 in round 2). Reading `hs` back
     * as a parquet attribute makes the closure a column reference. */
-  private val memo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, String), DataFrame]
-
-  private def mat(s: SparkSession, d: String, tag: String)(df: => DataFrame): DataFrame =
-    memo.getOrElseUpdate((s, d, tag), {
-      val dir = graft.TempDirs.create(s"graft-dd-$tag-")
-      df.write.mode("overwrite").parquet(dir.toString)
-      s.read.parquet(dir.toString)
-    })
+  private def standing(s: SparkSession, d: String, tag: String)(df: => DataFrame): DataFrame =
+    graft.Standing.table(s, s"dd-$tag",
+      graft.Standing.corpus(s, d, "documents", "embeddings"))(df)
 
   /** (doc_id, toks) over the planted corpus. */
   private def matToks(s: SparkSession, d: String): DataFrame =
-    mat(s, d, "toks")(
+    standing(s, d, "toks")(
       planted(s, d).select(col("doc_id"), tokens(col("text")).as("toks")))
 
   /** (doc_id, hs) — per-token MinHash-domain hashes. */
   private def matTokenHs(s: SparkSession, d: String): DataFrame =
-    mat(s, d, "tokenhs")(
+    standing(s, d, "tokenhs")(
       matToks(s, d).select(col("doc_id"), tokenHashes(col("toks")).as("hs")))
 
   /** Distinct (doc_id, h) 3-token shingle hashes — dd2's features and
     * dd13's truth/planner input (dd13's 1-in-3 sample is a FILTER of this
     * frame: membership is decided by doc_id alone). */
   private def matShingle3(s: SparkSession, d: String): DataFrame =
-    mat(s, d, "sh3")(
+    standing(s, d, "sh3")(
       matTokenHs(s, d)
         .select(col("doc_id"), explode(shingleHashes(col("hs"), 3)).as("h"))
         .distinct())
@@ -108,7 +102,7 @@ object DedupQueries {
     * dd13 planner bands — per-doc aggregation, so the sampled variant is
     * again a filter). */
   private def matMinhashSig(s: SparkSession, d: String): DataFrame =
-    mat(s, d, "mhsig") {
+    standing(s, d, "mhsig") {
       val mhCols = MinhashParams.zipWithIndex.map { case ((a, b), i) =>
         min(perm(col("h"), a, b)).as(s"mh$i") }
       matShingle3(s, d).groupBy(col("doc_id")).agg(mhCols.head, mhCols.tail: _*)
@@ -119,7 +113,7 @@ object DedupQueries {
     * (incremental old×batch): the standing index an incremental ingest
     * reads instead of re-sketching the lake. */
   private def matSimhashSig(s: SparkSession, d: String): DataFrame =
-    mat(s, d, "simsig") {
+    standing(s, d, "simsig") {
       val th = matToks(s, d)
         .select(col("doc_id"), explode(shingles(col("toks"), 2)).as("bg"))
         .select(col("doc_id"), stableHash60(col("bg")).as("h")).distinct()
@@ -392,29 +386,17 @@ object DedupQueries {
       s"$p AS p$i, MIN($p) OVER (PARTITION BY doc_id) AS m$i"
     }
 
-  /** The verified-pair table, memoized per (session, dir) as a temp
-    * parquet — dd4 returns it, dd6 clusters it. "Write once, read
+  /** The verified-pair table, a standing parquet table per (session,
+    * corpus) — dd4 returns it, dd6 clusters it. "Write once, read
     * everywhere": the expensive pair pipeline runs a single time per
-    * session (the same shared-artifact pattern as DocQueries' corpora);
-    * whoever asks first pays, everyone else scans parquet. */
-  /** A once-only holder: TrieMap.getOrElseUpdate may evaluate its thunk in
-    * TWO racing threads (Verify fans queries out in parallel — dd4 and dd6
-    * both ask for the pairs), but only ONE holder wins the putIfAbsent and
-    * everyone forces THAT holder's lazy val, so the expensive pipeline runs
-    * at most once per (session, dir). */
-  private final class Memo(thunk: () => DataFrame) { lazy val value: DataFrame = thunk() }
-
-  private val pairsMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Memo]
-
+    * session even when Verify runs dd4 and dd6 in parallel; whoever asks
+    * first pays, everyone else scans parquet. */
   private def verifiedPairs(s: SparkSession, d: String): DataFrame =
-    pairsMemo.getOrElseUpdate((s, d), new Memo(() => {
+    graft.Standing(s, "dd-pairs", graft.Standing.corpus(s, d, "documents")) {
       val (res, cached) = ngramJaccardPairs(planted(s, d))
-      val dir = graft.TempDirs.create("graft-dd-pairs-")
-      res.write.mode("overwrite").parquet(dir.toString)
-      cached.foreach(_.unpersist(false))
-      s.read.parquet(dir.toString)
-    })).value
+      try graft.Standing.write(s, "dd-pairs")(res)
+      finally cached.foreach(_.unpersist(false))
+    }
 
   private def dd4(s: SparkSession, d: String): DataFrame =
     verifiedPairs(s, d).orderBy(col("a"), col("b"))
@@ -478,29 +460,24 @@ object DedupQueries {
   private def dd6(s: SparkSession, d: String): DataFrame = {
     val pairs0 = verifiedPairs(s, d)
     // Iteration boundary = a STORAGE materialization (write parquet, read
-    // back), the same mat() pattern the document corpus uses and the
+    // back), the same Standing boundary the document corpus uses and the
     // literal cluster architecture for iterative graph algorithms
     // (checkpoint the label table per round). Executor-cache persists are
     // NOT a lineage boundary here: each round references the previous one
     // twice (directly + through the neighbor-min), and when cache
     // substitution misses, lineage re-executes with ~3× growth per round
     // (measured 1.7 / 5 / 35 / 97 s across the 3 rounds + final read).
-    def matIter(tag: String)(df: DataFrame): DataFrame = {
-      val dir = graft.TempDirs.create(s"graft-dd6-$tag-")
-      df.write.mode("overwrite").parquet(dir.toString)
-      df.sparkSession.read.parquet(dir.toString)
-    }
-    // pairs0 is already parquet-backed (verifiedPairs memo), so both
+    // pairs0 is already parquet-backed (a standing table), so both
     // branches of the symmetric union are plain scans
     val ab = pairs0.select(col("a"), col("b"))
     val edges = ab.unionByName(ab.select(col("b").as("a"), col("a").as("b")))
-    var lbl = matIter("seed")(
+    var lbl = graft.Standing.write(s, "dd6-seed")(
       edges.select(col("a").as("id")).distinct()
         .select(col("id"), col("id").as("lbl")))
     (1 to 3).foreach { i =>
       val nbrMin = edges.join(lbl.select(col("id").as("b"), col("lbl").as("nlbl")), "b")
         .groupBy(col("a")).agg(min(col("nlbl")).as("nbr_lbl"))
-      lbl = matIter(s"round$i")(
+      lbl = graft.Standing.write(s, s"dd6-round$i")(
         lbl.join(nbrMin.withColumnRenamed("a", "id"), Seq("id"), "left")
           .select(col("id"),
             least(col("lbl"), coalesce(col("nbr_lbl"), col("lbl"))).as("lbl")))
@@ -563,7 +540,7 @@ object DedupQueries {
     val vecs = base.unionByName(pert)
       .withColumn("nrm", sqrt(vecDot(col("v"), col("v"))))
     // standing parquet LSH-signature table (see the standing-index note)
-    val withSig = mat(s, d, "dd5sig")(
+    val withSig = standing(s, d, "dd5sig")(
       vecs.withColumn("sig", Similarity.lshSig(col("v"), planes = 32)))
     // Narrow band rows (ids only): the ~|collisions| candidate pairs are
     // deduped BEFORE the 64-double vectors are joined back in — the wide
@@ -680,10 +657,6 @@ object DedupQueries {
   private val SemTgt = 70L // target cluster size: k = ceil(n / SemTgt)
   private val SemTau = 100L // planted ±1 perturbation gives d² ≤ 64 < 100
 
-  /** Integer squared L2 — exact in any engine (products < 2^31, sums < 2^38). */
-  private def qdist(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)), lit(0L), (acc, z) => acc + z)
-
   /** Shared dd8/dd15 quantized + planted vector table (standing
     * write-once parquet): embeddings quantized ONCE (`round(e·2^12)`,
     * identical ties-away-from-zero in both engines), near-dups planted
@@ -705,7 +678,7 @@ object DedupQueries {
         transform(col("q"), (x, i) => x + stableHash32(concat(
           col("vec_id").cast("string"), lit(":"), i.cast("string"))) % 3 - 1).as("q"))
       .select((col("vec_id") + 1000000L).as("vec_id"), col("q"))
-    mat(s, d, "qvecs")(base.unionByName(pert))
+    standing(s, d, "qvecs")(base.unionByName(pert))
   }
 
   /** Deterministic seed CENTROID FRAME shared by dd8/dd15 (r19 — the
@@ -836,14 +809,14 @@ object DedupQueries {
     }
     // each Lloyd round lands in write-once parquet (lineage reset per
     // round — the dd6 lesson — without any driver round-trip)
-    val c0 = mat(s, d, "semc0")(semSeedFrame(vecs, k))
-    val c1 = mat(s, d, "dd8c1")(semUpdate(c0, assign(c0)))
-    val cFinal = mat(s, d, "dd8c2")(semUpdate(c1, assign(c1)))
+    val c0 = standing(s, d, "semc0")(semSeedFrame(vecs, k))
+    val c1 = standing(s, d, "dd8c1")(semUpdate(c0, assign(c0)))
+    val cFinal = standing(s, d, "dd8c2")(semUpdate(c1, assign(c1)))
     // materialize the final assignment ONCE (write-once parquet, the
     // standing-index pattern): pa, pb and the survivors' projection all
     // read it, so the broadcast-argmin subplan is not triplicated through
     // the pair join (and the audited plan stays the 2 equi-joins)
-    val asgMat = mat(s, d, "dd8asg")(
+    val asgMat = standing(s, d, "dd8asg")(
       assign(cFinal).select(col("vec_id"), col("cluster"), col("q")))
     val asg = withD(asgMat)
       .select(col("vec_id"), col("cluster"), col("qd"), col("n2"))
@@ -1016,12 +989,12 @@ object DedupQueries {
     }
     // Lloyd chain: seed frame + two semUpdate rounds, each landing in
     // write-once parquet (lineage reset per round — the dd6 lesson)
-    val c0 = mat(s, d, "semc0")(semSeedFrame(vecs, k))
-    val c1 = mat(s, d, "dd15c1")(semUpdate(c0, assign2(c0)))
-    val cFinal = mat(s, d, "dd15c2")(semUpdate(c1, assign2(c1)))
+    val c0 = standing(s, d, "semc0")(semSeedFrame(vecs, k))
+    val c1 = standing(s, d, "dd15c1")(semUpdate(c0, assign2(c0)))
+    val cFinal = standing(s, d, "dd15c2")(semUpdate(c1, assign2(c1)))
     // materialize the final assignment once (the dd8 pattern): the pair
     // join reads it twice and the survivors' projection a third time
-    val asgMat = mat(s, d, "dd15asg")(
+    val asgMat = standing(s, d, "dd15asg")(
       assign2(cFinal).select(col("vec_id"), col("cluster"), col("q")))
     val asg = withD(asgMat)
       .select(col("vec_id"), col("cluster"), col("qd"), col("n2"))
@@ -1236,9 +1209,9 @@ object DedupQueries {
   private def dd9(s: SparkSession, d: String): DataFrame = {
     // standing-index frames (see the section note): source-grain shingle
     // sets, written once — the per-source signature table a lake keeps
-    val th = mat(s, d, "dd9th")(Tables(s, d, "documents")
+    val th = standing(s, d, "dd9th")(Tables(s, d, "documents")
       .select(col("source"), tokenHashes(tokens(col("text"))).as("hs")))
-    val sh = mat(s, d, "dd9sh")(
+    val sh = standing(s, d, "dd9sh")(
       th.select(col("source"), explode(shingleHashes(col("hs"), 3)).as("h"))
         .distinct())
     val mhCols = MinhashParams.zipWithIndex.map { case ((a, b), i) =>
@@ -1327,7 +1300,7 @@ object DedupQueries {
         element_at(h, p + 2), element_at(h, p + 3))))
     val fpArr = flatten(transform(array(hs), h => winnow(h)))
     // standing-index frame: the winnowing fingerprint table, written once
-    val fps = mat(s, d, "dd10fps")(Tables(s, d, "documents")
+    val fps = standing(s, d, "dd10fps")(Tables(s, d, "documents")
       .filter(col("n_chars") >= 11)
       .select(col("doc_id"), fpArr.as("fps"))
       .select(col("doc_id"), explode(col("fps")).as("fp")))
@@ -1410,9 +1383,9 @@ object DedupQueries {
       .withColumnRenamed("pos", "para").withColumnRenamed("col", "ptoks")
       .filter(size(col("ptoks")) >= 2)
     // standing-index frames: paragraph-grain token hashes + shingle sets
-    val th = mat(s, d, "dd11th")(
+    val th = standing(s, d, "dd11th")(
       paras.select(col("doc_id"), col("para"), tokenHashes(col("ptoks")).as("hs")))
-    val sh = mat(s, d, "dd11sh")(
+    val sh = standing(s, d, "dd11sh")(
       th.select(col("doc_id"), col("para"),
         explode(shingleHashes(col("hs"), 2)).as("h"))
         .distinct())

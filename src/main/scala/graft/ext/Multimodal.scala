@@ -2,7 +2,6 @@ package graft.ext
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 import graft.Tables
 
@@ -278,11 +277,8 @@ object Multimodal {
     // self-join scans it twice instead of recomputing the hash plan
     // twice; short docs (q = 0) get a NULL sum array → hash 0, exactly
     // the previous left-join-miss behavior
-    val hdir = graft.TempDirs.create("graft-m6hash-")
-    planted.select(col("doc_id"), cs.as("cs"))
-      .select(col("doc_id"), hash.as("h"))
-      .write.mode("overwrite").parquet(hdir.toString)
-    val hashes = s.read.parquet(hdir.toString)
+    val hashes = graft.Standing.write(s, "m6hash")(
+      planted.select(col("doc_id"), cs.as("cs")).select(col("doc_id"), hash.as("h")))
     val bands = hashes.select(col("doc_id"), col("h"), explode(array(
       (0 until 4).map(b => struct(lit(b).as("band"),
         shiftright(col("h"), 8 * b).bitwiseAND(255).as("bv"))): _*)).as("bb"))

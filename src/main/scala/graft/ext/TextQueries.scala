@@ -865,7 +865,6 @@ object TextQueries {
     val grp = Window.partitionBy(col("lang"), col("source"))
     val ord = grp.orderBy(col("tk").desc, col("doc_id").asc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val all = grp.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     val q = DedupQueries.planted(s, d)
       .select(col("doc_id"), col("lang"), col("source"), col("text"),
         tokens(col("text")).as("toks"))

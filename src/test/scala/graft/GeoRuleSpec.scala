@@ -14,10 +14,8 @@ class GeoRuleSpec extends SparkSpec {
   // filter by ConvertToLocalRelation, hiding the rewritten Filter node)
   private lazy val pts = {
     import spark.implicits._
-    val dir = TempDirs.create("graft-georule-")
-    Seq((10.0, 20.0), (25.5, -60.1), (-45.0, 170.0), (89.5, 12.0))
-      .toDF("lat", "lon").write.mode("overwrite").parquet(dir.toString)
-    spark.read.parquet(dir.toString)
+    Standing.write(spark, "georule")(
+      Seq((10.0, 20.0), (25.5, -60.1), (-45.0, 170.0), (89.5, 12.0)).toDF("lat", "lon"))
   }
 
   test("haversine_m is bit-identical to the composed Column form") {

@@ -197,12 +197,8 @@ class PlanAuditSpec extends SparkSpec {
     // edge-table shuffle + dedup per array level (round-2 VERDICT #4).
     import org.apache.spark.sql.functions.col
     val sh0 = graft.docs.Shredder.shred(graft.docs.PlanDocs.docs(spark, sf))
-    def mat(df: DataFrame, tag: String): DataFrame = {
-      val dir = graft.TempDirs.create(s"graft-audit-$tag-")
-      df.write.mode("overwrite").parquet(dir.toString)
-      spark.read.parquet(dir.toString)
-    }
-    val sh = graft.docs.Shredded(mat(sh0.entities, "ent"), mat(sh0.edges, "edg"))
+    val sh = graft.docs.Shredded(graft.Standing.write(spark, "audit-ent")(sh0.entities),
+      graft.Standing.write(spark, "audit-edg")(sh0.edges))
     val asm = graft.docs.Assembler.assemble(sh, graft.model.PlanSchema.plan, "plan")
     assert(!asm.queryExecution.optimizedPlan.toString.contains("Deduplicate"))
     // "O(levels) shuffles, fixed by the schema": the plan-schema assembly
@@ -271,11 +267,11 @@ class PlanAuditSpec extends SparkSpec {
     // node). Round 4 measured 217 s because the input was a LAZY persist()
     // over the reachability-expansion lineage — each reference recomputed
     // the whole mutation. The fix writes the replaced tables through the
-    // parquet mat() boundary; pin it so the boundary can't silently regress:
+    // parquet Standing boundary; pin it so the boundary can't silently regress:
     // every leaf of d14's plan must be a file scan or a literal, never an
     // in-memory cache or a live mutation subtree.
     import org.apache.spark.sql.execution.datasources.LogicalRelation
-    import org.apache.spark.sql.catalyst.plans.logical.{LeafNode, LocalRelation, OneRowRelation}
+    import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, OneRowRelation}
     val leaves = q("d14_replace").queryExecution.optimizedPlan.collectLeaves()
     val offending = leaves.filterNot {
       case _: LogicalRelation => true // parquet file scan
@@ -861,21 +857,15 @@ class PlanAuditSpec extends SparkSpec {
     // silently unusable — round-10 ADVICE); the stored-doc attach is an
     // inner join whose BUILD side is the batch frame. Audited on the RAW
     // Bulk.run mutation lineage (the registry query materializes it).
-    import org.apache.spark.sql.functions.col
     val schema = graft.model.PlanSchema.plan
-    def matLocal(df: DataFrame, tag: String): DataFrame = {
-      val dir = graft.TempDirs.create(s"graft-audit-bulk-$tag-")
-      df.write.mode("overwrite").parquet(dir.toString)
-      spark.read.parquet(dir.toString)
-    }
     val sh0 = graft.docs.Shredder.shred(graft.docs.PlanDocs.docs(spark, sf))
-    val sh = graft.docs.Shredded(
-      matLocal(sh0.entities, "ent"), matLocal(sh0.edges, "edg"))
+    val sh = graft.docs.Shredded(graft.Standing.write(spark, "audit-bulk-ent")(sh0.entities),
+      graft.Standing.write(spark, "audit-bulk-edg")(sh0.edges))
     // the registry's assembled corpus is a materialized parquet table
     // (DocQueries "write once, read everywhere") — reproduce that here so
     // the audit sees the real scan, not a live assembly plan
-    val assembled = matLocal(
-      graft.docs.Assembler.assemble(sh, schema, "plan"), "asm")
+    val assembled = graft.Standing.write(spark, "audit-bulk-asm")(
+      graft.docs.Assembler.assemble(sh, schema, "plan"))
     val ids = Seq("plan-3", "plan-7", "plan-900001")
     val pe = plan(graft.docs.Bulk.existenceScan(assembled, ids))
     val pushedE = pe.linesIterator.filter(_.contains("PushedFilters")).mkString

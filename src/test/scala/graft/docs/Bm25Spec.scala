@@ -131,11 +131,12 @@ class Bm25Spec extends SparkSpec {
       (3L, null.asInstanceOf[String])).toDF("id", "body")
     val toks = split(lower(col("body")), "\\s+")
     val terms = Seq("zeta", "beta", "missingterm")
-    val before = Bm25.standingBuilds.get()
+    def builds = graft.Standing.builds("bm25-bm25spec-standing")
+    val before = builds
     val st1 = Bm25.stats(c, toks, terms, Some("bm25spec-standing"))
-    assert(Bm25.standingBuilds.get() === before + 1)
+    assert(builds === before + 1)
     val st2 = Bm25.stats(c, toks, terms, Some("bm25spec-standing"))
-    assert(Bm25.standingBuilds.get() === before + 1) // memo hit, no rebuild
+    assert(builds === before + 1) // memo hit, no rebuild
     val inline = Bm25.stats(c, toks, terms)
     assert(st1 === inline && st2 === inline)
     assert(st1.df("missingterm") === 0L)
@@ -143,8 +144,7 @@ class Bm25Spec extends SparkSpec {
     // both paths (a null body must not null avgdl)
     assert(st1.nDocs === 3L && st1.avgdl100 === 100L * 5 / 3)
     // the terms read is pushdown-eligible: term IN (...) reaches the scan
-    val dir = Bm25.standing(c, toks, "bm25spec-standing")
-    val plan = spark.read.parquet(s"$dir/terms")
+    val plan = Bm25.standing(c, toks, "bm25spec-standing")._2
       .filter(col("term").isin(terms: _*))
       .queryExecution.executedPlan.toString
     assert(plan.contains("PushedFilters: [In(term"), plan)
@@ -152,13 +152,13 @@ class Bm25Spec extends SparkSpec {
     // must NOT serve stale stats — the memo folds in a corpus
     // fingerprint, so each gets a fresh build
     val c2 = Seq((1L, "alpha alpha zeta")).toDF("id", "body")
-    val afterSame = Bm25.standingBuilds.get()
+    val afterSame = builds
     val stOther = Bm25.stats(c2, toks, terms, Some("bm25spec-standing"))
-    assert(Bm25.standingBuilds.get() === afterSame + 1) // rebuild, not stale
+    assert(builds === afterSame + 1) // rebuild, not stale
     assert(stOther === Bm25.stats(c2, toks, terms))
     val toks2 = split(upper(col("body")), "\\s+") // different analyzer
     Bm25.stats(c, toks2, Seq("ZETA"), Some("bm25spec-standing"))
-    assert(Bm25.standingBuilds.get() === afterSame + 2)
+    assert(builds === afterSame + 2)
   }
 
   test("function_score + pinned fold over the bm25 base (the closed v1 " +

@@ -1,6 +1,6 @@
 package graft.docs
 
-import java.nio.file.{Files, Path}
+import java.nio.file.Files
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.functions._
@@ -34,13 +34,9 @@ class PartitionedStoreSpec extends SparkSpec {
 
   test("sf0.1: one replaced doc rewrites only its owning shard; every other " +
     "shard's files stay byte-identical; read-back equals the full-rebuild replace") {
-    def matLocal(df: org.apache.spark.sql.DataFrame, tag: String) = {
-      val d = graft.TempDirs.create(s"graft-pstore-in-$tag-")
-      df.write.mode("overwrite").parquet(d.toString)
-      spark.read.parquet(d.toString)
-    }
     val sh0 = Shredder.shred(PlanDocs.docs(spark, sf))
-    val sh = Shredded(matLocal(sh0.entities, "ent"), matLocal(sh0.edges, "edg"))
+    val sh = Shredded(graft.Standing.write(spark, "pstore-in-ent")(sh0.entities),
+      graft.Standing.write(spark, "pstore-in-edg")(sh0.edges))
     val depth = Mutations.depth(schema)
     val dir = graft.TempDirs.create("graft-pstore-")
     val st = PartitionedStore.write(sh, dir.toString, 32, "plan", depth)

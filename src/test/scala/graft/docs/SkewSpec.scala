@@ -39,12 +39,8 @@ class SkewSpec extends SparkSpec {
         lit("order").as("objectType")).as("doc"))
     val schema = docs.schema("doc").dataType.asInstanceOf[StructType]
     val sh0 = Shredder.shred(docs)
-    def mat(df: org.apache.spark.sql.DataFrame, tag: String) = {
-      val dir = graft.TempDirs.create(s"graft-skew-$tag-")
-      df.write.mode("overwrite").parquet(dir.toString)
-      spark.read.parquet(dir.toString)
-    }
-    val sh = Shredded(mat(sh0.entities, "ent"), mat(sh0.edges, "edg"))
+    val sh = Shredded(graft.Standing.write(spark, "skew-ent")(sh0.entities),
+      graft.Standing.write(spark, "skew-edg")(sh0.edges))
     assert(sh.edges.count() === hotN + coldParents)
 
     val asm = Assembler.assemble(sh, schema, "order")

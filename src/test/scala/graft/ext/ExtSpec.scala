@@ -431,9 +431,9 @@ class ExtSpec extends SparkSpec {
         Similarity.queries(rb)(spark, sf).collect().toSeq, s"$st vs $rb")
     // second pass: every standing table serves from its memoized parquet
     // (no new builds — the probe-only serving cost the bench repeats see)
-    val before = StandingIndex.builds.get()
+    val before = graft.Standing.builds
     pairs.foreach(p => Similarity.queries(p._1)(spark, sf).collect())
-    assert(StandingIndex.builds.get() === before,
+    assert(graft.Standing.builds === before,
       "standing indexes must not rebuild on repeat probes")
   }
 

@@ -98,7 +98,6 @@ class UnigramViterbiSpec extends SparkSpec {
   }
 
   test("native expression matches the ladder on the real corpus round-1 vocabulary") {
-    import spark.implicits._
     val sf = "/root/testdata/sf0.001"
     val docs = graft.Tables(spark, sf, "documents")
     val words = docs.select(explode(split(col("text"), "\\s+")).as("w"))

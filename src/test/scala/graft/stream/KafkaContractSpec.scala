@@ -85,9 +85,7 @@ class KafkaContractSpec extends SparkSpec {
           col("w.partition").cast("int").as("partition"),
           col("w.offset").as("offset"), col("w.value").as("value"))
       // staged overwrite (reading + overwriting one path is refused)
-      val stage = graft.TempDirs.create("graft-kafka-stage-")
-      next.write.mode(SaveMode.Overwrite).parquet(stage.toString)
-      spark.read.parquet(stage.toString)
+      graft.Standing.write(spark, "kafka-stage")(next)
         .write.mode(SaveMode.Overwrite).parquet(store)
     }
 
