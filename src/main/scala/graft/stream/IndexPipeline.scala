@@ -1,12 +1,12 @@
 package graft.stream
 
-import java.nio.file.{Files, Path}
-import java.util.Comparator
+import java.nio.file.Files
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.types.StructType
 
 import graft.Tables
 
@@ -94,8 +94,7 @@ object IndexPipeline {
   /** Isolated session for one streaming query's run (own SQLConf, shared
     * SparkContext — staged fixtures key on the root session, so they
     * still hit). Stateful streaming operators create one state-store
-    * instance PER SHUFFLE PARTITION per operator (and per side, for
-    * stream-stream joins): every micro-batch pays a
+    * instance PER SHUFFLE PARTITION per operator: every micro-batch pays a
     * load+commit+delta-file+fsync per instance, so the session
     * default sized for the 32-core batch engine spends its time on store
     * bookkeeping for a few-MB log, not on the engine (the st6 r15 finding
@@ -107,13 +106,84 @@ object IndexPipeline {
     * 100 TB), never to a constant — the conf is the deployment's knob,
     * the semantics are partition-count-independent, and the final
     * orderBy in every query pins the output regardless. */
-  private[stream] val streamShufflePartitions: Int =
-    sys.env.get("SPARK_GRAFT_STREAM_PARTITIONS").map(_.toInt).getOrElse(8)
-
-  private def streamSession(s0: SparkSession): SparkSession = {
+  private[stream] def streamSession(s0: SparkSession): SparkSession = {
     val s = s0.newSession()
     s.conf.set("spark.sql.shuffle.partitions", streamShufflePartitions)
     s
+  }
+
+  /** [[streamSession]] for stream-stream joins. A join holds four state
+    * stores per partition (key→count and key-index→value, per side); join
+    * state format 3 keeps all four in ONE RocksDB store as virtual column
+    * families, so each micro-batch loads and commits one store instance
+    * per partition instead of four (format 3 requires RocksDB). Joins
+    * only: RocksDB under the four-store format, and under the other
+    * stateful operators, measured no gain (ROADMAP item 2), so those stay
+    * on the HDFS-backed default. */
+  private[stream] def joinSession(s0: SparkSession): SparkSession = {
+    val s = streamSession(s0)
+    s.conf.set("spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    s.conf.set("spark.sql.streaming.join.stateFormatVersion", 3L)
+    s
+  }
+
+  /** State partitions of every stream session. Read per session, never in
+    * this object's initializer: a malformed value then fails the query
+    * that reads it, instead of failing class initialization and with it
+    * every later stream query. */
+  private[stream] def streamShufflePartitions: Int =
+    parsePartitions(sys.env.get("SPARK_GRAFT_STREAM_PARTITIONS"))
+
+  /** SPARK_GRAFT_STREAM_PARTITIONS: a positive integer, 8 when unset. */
+  private[stream] def parsePartitions(raw: Option[String]): Int = raw match {
+    case None => 8
+    case Some(v) => v.trim.toIntOption.filter(_ > 0).getOrElse(
+      throw new IllegalArgumentException(
+        s"SPARK_GRAFT_STREAM_PARTITIONS must be a positive integer, got '$v'"))
+  }
+
+  /** The staged log as a stream, one file per micro-batch. */
+  private def source(s: SparkSession, schema: StructType, srcDir: String): DataFrame =
+    s.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(s"$srcDir/b*")
+
+  /** One owner for a stream query's temp state: a temp dir for its checkpoint
+    * and the memory-sink name `<name>_<nanos>`. The sink's temp view and
+    * the dir (with any RocksDB store checkpointed in it) are dropped in a
+    * finally, so a failed stream leaks neither. The view is dropped from
+    * the session catalog directly: nothing caches a sink view, so
+    * `Catalog.dropTempView`'s uncache pass, which compares the view with
+    * every plan the shared CacheManager holds, has nothing to do. */
+  private def withStreamDir[T](s: SparkSession, name: String)
+                              (body: (String, String) => T): T = {
+    val base = Files.createTempDirectory(s"graft-$name-")
+    val qname = s"${name}_${System.nanoTime()}"
+    try body(base.resolve("ck").toString, qname)
+    finally {
+      s.sessionState.catalog.dropTempView(qname)
+      graft.TempDirs.deleteRecursively(base)
+    }
+  }
+
+  /** Run `plan` over its whole staged source (Trigger.AvailableNow) into a
+    * memory sink, and pin `finish` of the sink table before the temp dir
+    * goes. */
+  private[stream] def drain(plan: DataFrame, name: String, mode: String)
+                           (finish: DataFrame => DataFrame): DataFrame = {
+    val s = plan.sparkSession
+    withStreamDir(s, name) { (ckDir, qname) =>
+      val q = plan.writeStream
+        .outputMode(mode)
+        .format("memory")
+        .queryName(qname)
+        .trigger(Trigger.AvailableNow())
+        .option("checkpointLocation", ckDir)
+        .start()
+      // stop only a query still running (the await was interrupted): a
+      // drained query has no job group left, and stopping it logs a warning
+      try q.awaitTermination() finally if (q.isActive) q.stop()
+      graft.Eager.pin(finish(s.table(qname)))
+    }
   }
 
   /** The `events` table as a mutation log: `event_id` = sequence number,
@@ -173,8 +243,6 @@ object IndexPipeline {
     // state table buckets match the stream session's shuffle partitions so
     // the per-batch merge stays co-partitioned (BucketedJoinSpec property)
     val s = streamSession(s0)
-    val base = Files.createTempDirectory("graft-stream-")
-    val ckDir = base.resolve("ck").toString
 
     // Stage the log as nFiles files split by seq range — deterministic
     // micro-batch boundaries (file order = lexicographic part-file name);
@@ -192,45 +260,37 @@ object IndexPipeline {
       created += name
       name
     }
-    // The state tables and temp dir are dropped in a finally: a failed
-    // stream or merge must not leak catalog tables (they'd shadow the next
-    // run's names for the rest of the session) or the on-disk staging.
-    try {
-      var stateTable = writeState(s.createDataFrame(
-        s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType.fromDDL(
-          "key BIGINT, seq BIGINT, op STRING, event_type STRING, value DOUBLE, n_events BIGINT")),
-        "init")
+    // The state tables are dropped in a finally (the temp dir by
+    // withStreamDir): a failed stream or merge must not leak catalog tables
+    // (they'd shadow the next run's names for the rest of the session).
+    withStreamDir(s, "st1_upsert") { (ckDir, _) =>
+      try {
+        var stateTable = writeState(s.createDataFrame(
+          s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+          StructType.fromDDL(
+            "key BIGINT, seq BIGINT, op STRING, event_type STRING, value DOUBLE, n_events BIGINT")),
+          "init")
 
-      val stream = s.readStream
-        .schema(log.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(s"$srcDir/b*")
-        .writeStream
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", ckDir)
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          stateTable = writeState(merge(s.table(stateTable), batch), s"v$batchId")
-          ()
-        }
-        .start()
-      stream.awaitTermination()
+        val stream = source(s, log.schema, srcDir)
+          .writeStream
+          .trigger(Trigger.AvailableNow())
+          .option("checkpointLocation", ckDir)
+          .foreachBatch { (batch: DataFrame, batchId: Long) =>
+            stateTable = writeState(merge(s.table(stateTable), batch), s"v$batchId")
+            ()
+          }
+          .start()
+        stream.awaitTermination()
 
-      val result = s.table(stateTable).filter(col("op") =!= "DELETE")
-        .select(col("key").as("user_id"), col("seq").as("last_event_id"),
-          col("event_type").as("last_type"), col("value").as("last_value"),
-          col("n_events"))
-        .orderBy(col("user_id"))
-      graft.Eager.pin(result) // materialize before state is dropped
-    } finally {
-      created.foreach(t => s.sql(s"DROP TABLE IF EXISTS $t"))
-      deleteRecursively(base)
+        val result = s.table(stateTable).filter(col("op") =!= "DELETE")
+          .select(col("key").as("user_id"), col("seq").as("last_event_id"),
+            col("event_type").as("last_type"), col("value").as("last_value"),
+            col("n_events"))
+          .orderBy(col("user_id"))
+        graft.Eager.pin(result) // materialize before state is dropped
+      } finally created.foreach(t => s.sql(s"DROP TABLE IF EXISTS $t"))
     }
   }
-
-  private[stream] def deleteRecursively(p: Path): Unit =
-    if (Files.exists(p))
-      Files.walk(p).sorted(Comparator.reverseOrder[Path]()).forEach(f => Files.delete(f))
 
   // ---------------------------------------------------------------- st1
   private def st1(s: SparkSession, d: String): DataFrame = run(s, d)
@@ -257,41 +317,22 @@ object IndexPipeline {
     * order-independent across micro-batch boundaries. */
   private def st2(s0: SparkSession, d: String): DataFrame = {
     val s = streamSession(s0)
-    val base = Files.createTempDirectory("graft-stream2-")
-    val ckDir = base.resolve("ck").toString
-    val nFiles = 3
     val ev = Tables.events(s, d)
       .select(col("event_id"), col("ts_us"), col("event_type"), col("value"))
-    val srcDir = stagedTimeOrdered(s0, ev, nFiles)
-    val qname = s"st2_windowed_${System.nanoTime()}"
-    val stream = s.readStream
-      .schema(ev.schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(s"$srcDir/b*")
+    val plan = source(s, ev.schema, stagedTimeOrdered(s0, ev, 3))
       .withColumn("ts", timestamp_micros(col("ts_us")))
       .withWatermark("ts", "1 hour")
       .groupBy(window(col("ts"), "6 hours"), col("event_type"))
       .agg(count(lit(1)).as("n"),
         sum(col("value").cast(org.apache.spark.sql.types.DecimalType(12, 2))).as("total_dec"))
-      .writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(qname)
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", ckDir)
-      .start()
-    stream.awaitTermination()
-    val out = s.table(qname)
-      .select(
-        col("window.start").cast("long").as("win_start"),
-        col("event_type"), col("n"),
-        col("total_dec").cast(org.apache.spark.sql.types.DecimalType(28, 6))
-          .cast("double").as("total"))
-      .orderBy(col("win_start"), col("event_type"))
-      
-    val pinned = graft.Eager.pin(out)
-    deleteRecursively(base)
-    pinned
+    drain(plan, "st2_windowed", "complete") { sink =>
+      sink.select(
+          col("window.start").cast("long").as("win_start"),
+          col("event_type"), col("n"),
+          col("total_dec").cast(org.apache.spark.sql.types.DecimalType(28, 6))
+            .cast("double").as("total"))
+        .orderBy(col("win_start"), col("event_type"))
+    }
   }
 
   private val st2Sql =
@@ -316,11 +357,7 @@ object IndexPipeline {
     import s.implicits._
     import org.apache.spark.sql.streaming.GroupState
 
-    val base = Files.createTempDirectory("graft-stream3-")
-    val ckDir = base.resolve("ck").toString
     val log = mutationLog(s, d)
-    val nFiles = 3
-    val srcDir = stagedSeqOrdered(s0, log, nFiles)
 
     def update(key: Long, events: Iterator[EntityEvent],
                state: GroupState[EntityState]): EntityState = {
@@ -336,36 +373,22 @@ object IndexPipeline {
       next
     }
 
-    val qname = s"st3_state_${System.nanoTime()}"
-    val stream = s.readStream
-      .schema(log.schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(s"$srcDir/b*")
+    val plan = source(s, log.schema, stagedSeqOrdered(s0, log, 3))
       .as[EntityEvent]
       .groupByKey(_.key)
       .mapGroupsWithState(update _)
-      .writeStream
-      .outputMode("update")
-      .format("memory")
-      .queryName(qname)
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", ckDir)
-      .start()
-    stream.awaitTermination()
+      .toDF()
 
     // update mode emits one row per touched key per batch — latest wins
     val w = Window.partitionBy(col("key")).orderBy(col("seq").desc, col("n_events").desc)
-    val out = s.table(qname)
-      .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-      .filter(col("op") =!= "DELETE")
-      .select(col("key").as("user_id"), col("seq").as("last_event_id"),
-        col("event_type").as("last_type"), col("value").as("last_value"),
-        col("n_events"))
-      .orderBy(col("user_id"))
-      
-    val pinned = graft.Eager.pin(out)
-    deleteRecursively(base)
-    pinned
+    drain(plan, "st3_state", "update") { sink =>
+      sink.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
+        .filter(col("op") =!= "DELETE")
+        .select(col("key").as("user_id"), col("seq").as("last_event_id"),
+          col("event_type").as("last_type"), col("value").as("last_value"),
+          col("n_events"))
+        .orderBy(col("user_id"))
+    }
   }
 
   private val st3Sql = st1Sql // identical last-write-wins semantics
@@ -379,39 +402,20 @@ object IndexPipeline {
     * Complete output mode emits the final session state. */
   private def st4(s0: SparkSession, d: String): DataFrame = {
     val s = streamSession(s0)
-    val base = Files.createTempDirectory("graft-stream4-")
-    val ckDir = base.resolve("ck").toString
-    val nFiles = 3
     val ev = Tables.events(s, d)
       .select(col("event_id"), col("ts_us"), col("user_id"))
-    val srcDir = stagedTimeOrdered(s0, ev, nFiles)
-    val qname = s"st4_sessions_${System.nanoTime()}"
-    val stream = s.readStream
-      .schema(ev.schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(s"$srcDir/b*")
+    val plan = source(s, ev.schema, stagedTimeOrdered(s0, ev, 3))
       .withColumn("ts", timestamp_micros(col("ts_us")))
       .withWatermark("ts", "1 hour")
       .groupBy(col("user_id"), session_window(col("ts"), "30 minutes"))
       .agg(count(lit(1)).as("n_events"))
-      .writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(qname)
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", ckDir)
-      .start()
-    stream.awaitTermination()
-    val out = s.table(qname)
-      .select(col("user_id"),
-        col("session_window.start").cast("long").as("sess_start"),
-        col("session_window.end").cast("long").as("sess_end"),
-        col("n_events"))
-      .orderBy(col("user_id"), col("sess_start"))
-      
-    val pinned = graft.Eager.pin(out)
-    deleteRecursively(base)
-    pinned
+    drain(plan, "st4_sessions", "complete") { sink =>
+      sink.select(col("user_id"),
+          col("session_window.start").cast("long").as("sess_start"),
+          col("session_window.end").cast("long").as("sess_end"),
+          col("n_events"))
+        .orderBy(col("user_id"), col("sess_start"))
+    }
   }
 
   private val st4Sql =
@@ -455,9 +459,6 @@ object IndexPipeline {
     * ingest runs for months). */
   private def st5(s0: SparkSession, d: String): DataFrame = {
     val s = streamSession(s0)
-    val base = Files.createTempDirectory("graft-stream5-")
-    val ckDir = base.resolve("ck").toString
-    val nFiles = 3
     val ev = Tables.events(s, d)
       .select(col("event_id"), col("ts_us"), col("event_type"), col("value"))
     val dups = ev.filter(col("event_id") % 5 === 0)
@@ -465,33 +466,18 @@ object IndexPipeline {
     val log = ev.unionByName(dups)
     // staged by EVENT TIME so a re-delivery lands in a later file than
     // its original whenever the +2 h crosses a file boundary
-    val srcDir = stagedTimeOrdered(s0, log, nFiles)
-    val qname = s"st5_dedup_${System.nanoTime()}"
-    val stream = s.readStream
-      .schema(log.schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(s"$srcDir/b*")
+    val plan = source(s, log.schema, stagedTimeOrdered(s0, log, 3))
       .withColumn("ts", timestamp_micros(col("ts_us")))
       .withWatermark("ts", "6 hours")
       .dropDuplicatesWithinWatermark("event_id")
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(qname)
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", ckDir)
-      .start()
-    stream.awaitTermination()
-    val out = s.table(qname)
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n"),
-        sum(col("value").cast(org.apache.spark.sql.types.DecimalType(12, 2)))
-          .cast(org.apache.spark.sql.types.DecimalType(28, 6))
-          .cast("double").as("total"))
-      .orderBy(col("event_type"))
-    val pinned = graft.Eager.pin(out)
-    deleteRecursively(base)
-    pinned
+    drain(plan, "st5_dedup", "append") { sink =>
+      sink.groupBy(col("event_type"))
+        .agg(count(lit(1)).as("n"),
+          sum(col("value").cast(org.apache.spark.sql.types.DecimalType(12, 2)))
+            .cast(org.apache.spark.sql.types.DecimalType(28, 6))
+            .cast("double").as("total"))
+        .orderBy(col("event_type"))
+    }
   }
 
   /** The oracle is the duplicate-free truth: re-deliveries carry the same
@@ -513,28 +499,23 @@ object IndexPipeline {
     * join emits each match exactly once as it forms; the final per-user
     * aggregate runs batch-side on the sink table.
     *
-    * Scale shape: join state is keyed by user in the state store
-    * (RocksDB at cluster scale), partitioned by the equi-key — one
-    * shuffle per batch per side; state size is bounded by the 1 h event-
-    * time window, not by stream lifetime. */
+    * Scale shape: join state is keyed by user in one RocksDB state store
+    * per partition (join state format 3, see [[joinSession]]),
+    * partitioned by the equi-key — one shuffle per batch per side; state
+    * size is bounded by the 1 h event-time window, not by stream
+    * lifetime. */
   private def st6(s0: SparkSession, d: String): DataFrame = {
-    // Isolated session (shared SparkContext, own SQLConf): stream-stream
-    // join state lives in shuffle-partition-many store instances PER SIDE
-    // PER BATCH — at 32 partitions that is 32×4×3 tiny state files plus
-    // fsyncs for a 10k-row log. 8 partitions carry the same semantics at
-    // a quarter of the fixed cost; the conf change must not leak into the
-    // 100-query session, hence newSession.
-    val s = streamSession(s0)
-    val base = Files.createTempDirectory("graft-stream6-")
-    val ckDir = base.resolve("ck").toString
-    val nFiles = 3
+    // Isolated join session (shared SparkContext, own SQLConf): each
+    // micro-batch loads and commits ONE store instance per shuffle
+    // partition for both sides' state — at the HDFS default's four stores
+    // and 32 partitions that was 32×4 delta files plus fsyncs per batch
+    // for a 10k-row log. The confs must not leak into the 100-query
+    // session, hence newSession.
+    val s = joinSession(s0)
     val ev = Tables.events(s, d)
       .select(col("event_id"), col("ts_us"), col("user_id"), col("event_type"))
-    val srcDir = stagedTimeOrdered(s0, ev, nFiles)
-    def stream(tpe: String, alias: String) = s.readStream
-      .schema(ev.schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(s"$srcDir/b*")
+    val srcDir = stagedTimeOrdered(s0, ev, 3)
+    def stream(tpe: String, alias: String) = source(s, ev.schema, srcDir)
       .filter(col("event_type") === tpe)
       .select(col("event_id").as(s"${alias}_id"), col("user_id").as(s"${alias}_user"),
         timestamp_micros(col("ts_us")).as(s"${alias}_ts"))
@@ -543,24 +524,13 @@ object IndexPipeline {
       col("c_user") === col("e_user") &&
         col("e_ts") >= col("c_ts") &&
         col("e_ts") <= col("c_ts") + expr("INTERVAL 1 HOUR"))
-    val qname = s"st6_join_${System.nanoTime()}"
-    val q = joined.writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(qname)
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", ckDir)
-      .start()
-    q.awaitTermination()
-    val out = s.table(qname)
-      .groupBy(col("c_user").as("user_id"))
-      .agg(count(lit(1)).as("n_attributed"),
-        min(col("c_id")).as("first_click"),
-        max(col("e_id")).as("last_error"))
-      .orderBy(col("user_id"))
-    val pinned = graft.Eager.pin(out)
-    deleteRecursively(base)
-    pinned
+    drain(joined, "st6_join", "append") { sink =>
+      sink.groupBy(col("c_user").as("user_id"))
+        .agg(count(lit(1)).as("n_attributed"),
+          min(col("c_id")).as("first_click"),
+          max(col("e_id")).as("last_error"))
+        .orderBy(col("user_id"))
+    }
   }
 
   /** Oracle: the same attribution join in plain SQL over the full log. */
@@ -582,8 +552,6 @@ object IndexPipeline {
     * the dimension broadcasts — exactly how a cluster would enrich. */
   private def st7(s0: SparkSession, d: String): DataFrame = {
     val s = streamSession(s0)
-    val base = Files.createTempDirectory("graft-stream7-")
-    val ckDir = base.resolve("ck").toString
     val nFiles = 3
     // the stream-static join is TIME-FREE (no watermark, no state), so
     // the fixture needs no event-time column and no min/max staging
@@ -600,35 +568,17 @@ object IndexPipeline {
       }
     }
     val dim = Tables(s, d, "nation").select(col("n_nationkey"), col("n_name"))
-    val qname = s"st7_static_join_${System.nanoTime()}"
-    try {
-      val stream = s.readStream
-      .schema(ev.schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(s"$srcDir/b*")
+    val plan = source(s, ev.schema, srcDir)
       .withColumn("nk", pmod(col("user_id"), lit(25L)))
       .join(broadcast(dim), col("nk") === col("n_nationkey"))
       .groupBy(col("n_name"))
       .agg(count(lit(1)).as("n_events"),
         sum(col("value").cast(org.apache.spark.sql.types.DecimalType(12, 2))).as("total_dec"))
-      .writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(qname)
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", ckDir)
-      .start()
-      stream.awaitTermination()
-      val out = s.table(qname)
-        .select(col("n_name"), col("n_events"),
+    drain(plan, "st7_static_join", "complete") { sink =>
+      sink.select(col("n_name"), col("n_events"),
           col("total_dec").cast(org.apache.spark.sql.types.DecimalType(28, 6))
             .cast("double").as("total"))
         .orderBy(col("n_name"))
-      graft.Eager.pin(out)
-    } finally {
-      // a failed stream or read must not leak the staging dir/checkpoint
-      // (the same contract as run()'s finally)
-      deleteRecursively(base)
     }
   }
 
@@ -663,10 +613,22 @@ object IndexPipeline {
     * orphan, so the result equals the batch LEFT JOIN exactly — the
     * oracle is that batch join. State cost: watermark-bounded on both
     * sides (2 h of events per side), independent of stream length. */
-  private def st8(s0: SparkSession, d: String): DataFrame = {
-    val s = streamSession(s0)
-    val base = Files.createTempDirectory("graft-stream8-")
-    val ckDir = base.resolve("ck").toString
+  private def st8(s0: SparkSession, d: String): DataFrame =
+    drain(flushedJoin(s0, d, "left_outer"), "st8_left_join", "append") { sink =>
+      sink.filter(col("c_user") >= 0L) // drop any sentinel residue
+        .groupBy(col("c_user").as("user_id"))
+        .agg(count(lit(1)).cast("long").as("n_rows"),
+          count(col("e_id")).cast("long").as("n_pairs"),
+          (count(lit(1)) - count(col("e_id"))).cast("long").as("n_orphans"),
+          min(col("c_id")).as("first_click"),
+          max(col("e_id")).as("last_error"))
+        .orderBy(col("user_id"))
+    }
+
+  /** st8's and st13's click→error interval join of type `how`, over the
+    * time-staged log plus its flush sentinels, in a [[joinSession]]. */
+  private def flushedJoin(s0: SparkSession, d: String, how: String): DataFrame = {
+    val s = joinSession(s0)
     val nFiles = 3
     val ev = Tables.events(s, d)
       .select(col("event_id"), col("ts_us"), col("user_id"), col("event_type"))
@@ -678,7 +640,7 @@ object IndexPipeline {
     // sentinel file is PART of the staged fixture (a query-specific
     // "time-flush" memo mode — it must never leak into the plain
     // time-ordered dirs other queries share), so it is written once
-    // with the rest of the log.
+    // with the rest of the log and shared by st8 and st13.
     val srcDir = stagedDir(s0, ev, nFiles, "time-flush") { dir =>
       stageTimeOrdered(ev, dir, nFiles)
       val maxTs = ev.agg(max(col("ts_us"))).head().getLong(0)
@@ -687,43 +649,18 @@ object IndexPipeline {
         .toDF("event_id", "ts_us", "user_id", "event_type")
         .coalesce(1).write.parquet(s"$dir/b$nFiles")
     }
-    def stream(tpe: String, alias: String) = s.readStream
-      .schema(ev.schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(s"$srcDir/b*")
+    def stream(tpe: String, alias: String) = source(s, ev.schema, srcDir)
       .select(col("event_id").as(s"${alias}_id"), col("user_id").as(s"${alias}_user"),
         col("event_type").as(s"${alias}_type"),
         timestamp_micros(col("ts_us")).as(s"${alias}_ts"))
       .withWatermark(s"${alias}_ts", "1 hour")
       .filter(col(s"${alias}_type") === tpe)
       .drop(s"${alias}_type")
-    val joined = stream("click", "c").join(stream("error", "e"),
+    stream("click", "c").join(stream("error", "e"),
       col("c_user") === col("e_user") &&
         col("e_ts") >= col("c_ts") &&
         col("e_ts") <= col("c_ts") + expr("INTERVAL 1 HOUR"),
-      "left_outer")
-    val qname = s"st8_left_join_${System.nanoTime()}"
-    val q = joined.writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(qname)
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", ckDir)
-      .start()
-    try q.awaitTermination() finally q.stop()
-    val out = s.table(qname)
-      .filter(col("c_user") >= 0L) // drop any sentinel residue
-      .groupBy(col("c_user").as("user_id"))
-      .agg(count(lit(1)).cast("long").as("n_rows"),
-        count(col("e_id")).cast("long").as("n_pairs"),
-        (count(lit(1)) - count(col("e_id"))).cast("long").as("n_orphans"),
-        min(col("c_id")).as("first_click"),
-        max(col("e_id")).as("last_error"))
-      .orderBy(col("user_id"))
-    val pinned = graft.Eager.pin(out)
-    s.catalog.dropTempView(qname)
-    deleteRecursively(base)
-    pinned
+      how)
   }
 
   /** Oracle: the same attribution LEFT join in plain SQL over the log —
@@ -754,67 +691,21 @@ object IndexPipeline {
     * a time condition bounding e_ts relative to c_ts so BOTH sides'
     * state evicts at watermark-minus-interval instead of growing
     * forever. Result equals the batch FULL JOIN exactly — the oracle. */
-  private def st13(s0: SparkSession, d: String): DataFrame = {
-    val s = streamSession(s0)
-    val base = Files.createTempDirectory("graft-stream13-")
-    val ckDir = base.resolve("ck").toString
-    val nFiles = 3
-    val ev = Tables.events(s, d)
-      .select(col("event_id"), col("ts_us"), col("user_id"), col("event_type"))
-    import s.implicits._
-    // same staged fixture as st8 (identical frame + flush sentinels) —
-    // the "time-flush" memo mode keeps the sentinel file out of the
-    // plain time-ordered dirs other queries share
-    val srcDir = stagedDir(s0, ev, nFiles, "time-flush") { dir =>
-      stageTimeOrdered(ev, dir, nFiles)
-      val maxTs = ev.agg(max(col("ts_us"))).head().getLong(0)
-      Seq((-1L, maxTs + 3L * 3600L * 1000000L, -1L, "click"),
-          (-2L, maxTs + 3L * 3600L * 1000000L, -2L, "error"))
-        .toDF("event_id", "ts_us", "user_id", "event_type")
-        .coalesce(1).write.parquet(s"$dir/b$nFiles")
+  private def st13(s0: SparkSession, d: String): DataFrame =
+    drain(flushedJoin(s0, d, "full_outer"), "st13_full_join", "append") { sink =>
+      sink.filter(coalesce(col("c_user"), col("e_user")) >= 0L) // sentinel residue
+        .groupBy(coalesce(col("c_user"), col("e_user")).as("user_id"))
+        .agg(
+          sum(when(col("c_id").isNotNull && col("e_id").isNotNull, 1L).otherwise(0L))
+            .cast("long").as("n_pairs"),
+          sum(when(col("c_id").isNotNull && col("e_id").isNull, 1L).otherwise(0L))
+            .cast("long").as("n_click_orphans"),
+          sum(when(col("c_id").isNull && col("e_id").isNotNull, 1L).otherwise(0L))
+            .cast("long").as("n_error_orphans"),
+          min(col("c_id")).as("first_click"),
+          max(col("e_id")).as("last_error"))
+        .orderBy(col("user_id"))
     }
-    def stream(tpe: String, alias: String) = s.readStream
-      .schema(ev.schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(s"$srcDir/b*")
-      .select(col("event_id").as(s"${alias}_id"), col("user_id").as(s"${alias}_user"),
-        col("event_type").as(s"${alias}_type"),
-        timestamp_micros(col("ts_us")).as(s"${alias}_ts"))
-      .withWatermark(s"${alias}_ts", "1 hour")
-      .filter(col(s"${alias}_type") === tpe)
-      .drop(s"${alias}_type")
-    val joined = stream("click", "c").join(stream("error", "e"),
-      col("c_user") === col("e_user") &&
-        col("e_ts") >= col("c_ts") &&
-        col("e_ts") <= col("c_ts") + expr("INTERVAL 1 HOUR"),
-      "full_outer")
-    val qname = s"st13_full_join_${System.nanoTime()}"
-    val q = joined.writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(qname)
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", ckDir)
-      .start()
-    try q.awaitTermination() finally q.stop()
-    val out = s.table(qname)
-      .filter(coalesce(col("c_user"), col("e_user")) >= 0L) // sentinel residue
-      .groupBy(coalesce(col("c_user"), col("e_user")).as("user_id"))
-      .agg(
-        sum(when(col("c_id").isNotNull && col("e_id").isNotNull, 1L).otherwise(0L))
-          .cast("long").as("n_pairs"),
-        sum(when(col("c_id").isNotNull && col("e_id").isNull, 1L).otherwise(0L))
-          .cast("long").as("n_click_orphans"),
-        sum(when(col("c_id").isNull && col("e_id").isNotNull, 1L).otherwise(0L))
-          .cast("long").as("n_error_orphans"),
-        min(col("c_id")).as("first_click"),
-        max(col("e_id")).as("last_error"))
-      .orderBy(col("user_id"))
-    val pinned = graft.Eager.pin(out)
-    s.catalog.dropTempView(qname)
-    deleteRecursively(base)
-    pinned
-  }
 
   /** Oracle: the same attribution FULL join in plain SQL over the log. */
   private val st13Sql =
@@ -842,36 +733,18 @@ object IndexPipeline {
     * the duration/slide-factor row expansion before the partial agg. */
   private def st9(s0: SparkSession, d: String): DataFrame = {
     val s = streamSession(s0)
-    val base = Files.createTempDirectory("graft-stream9-")
-    val ckDir = base.resolve("ck").toString
-    val nFiles = 3
     val ev = Tables.events(s, d)
       .select(col("event_id"), col("ts_us"), col("event_type"))
-    val srcDir = stagedTimeOrdered(s0, ev, nFiles)
-    val qname = s"st9_sliding_${System.nanoTime()}"
-    val stream = s.readStream
-      .schema(ev.schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(s"$srcDir/b*")
+    val plan = source(s, ev.schema, stagedTimeOrdered(s0, ev, 3))
       .withColumn("ts", timestamp_micros(col("ts_us")))
       .withWatermark("ts", "1 hour")
       .groupBy(window(col("ts"), "12 hours", "6 hours"), col("event_type"))
       .agg(count(lit(1)).as("n"))
-      .writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(qname)
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", ckDir)
-      .start()
-    stream.awaitTermination()
-    val out = s.table(qname)
-      .select(col("window.start").cast("long").as("win_start"),
-        col("event_type"), col("n"))
-      .orderBy(col("win_start"), col("event_type"))
-    val pinned = graft.Eager.pin(out)
-    deleteRecursively(base)
-    pinned
+    drain(plan, "st9_sliding", "complete") { sink =>
+      sink.select(col("window.start").cast("long").as("win_start"),
+          col("event_type"), col("n"))
+        .orderBy(col("win_start"), col("event_type"))
+    }
   }
 
   private val st9Sql =
@@ -892,42 +765,22 @@ object IndexPipeline {
     * percolation through the full ES-body parser). */
   private def st10(s0: SparkSession, d: String): DataFrame = {
     val s = streamSession(s0)
-    val base = Files.createTempDirectory("graft-stream10-")
-    val ckDir = base.resolve("ck").toString
-    val nFiles = 3
     val ev = Tables.events(s, d)
       .select(col("event_id"), col("ts_us"), col("event_type"), col("user_id"),
         col("value"))
-    val srcDir = stagedTimeOrdered(s0, ev, nFiles)
     val registry: Seq[(String, (String => Column) => Column)] = Seq(
       "a_error" -> (r => r("event_type") === "error"),
       "a_big_value" -> (r => r("value") >= 99.0),
       "a_vip_purchase" -> (r =>
         r("event_type") === "purchase" && r("user_id") % 100 === 0))
-    val qname = s"st10_percolate_${System.nanoTime()}"
-    val src = s.readStream
-      .schema(ev.schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(s"$srcDir/b*")
+    val src = source(s, ev.schema, stagedTimeOrdered(s0, ev, 3))
     val row: String => Column = col
     val alerts = src.select(col("event_id"), col("user_id"),
         explode(array(registry.map { case (n, p) =>
           when(coalesce(p(row), lit(false)), lit(n)).otherwise(lit(null).cast("string"))
         }: _*)).as("alert_id"))
       .filter(col("alert_id").isNotNull)
-    val stream = alerts.writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(qname)
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", ckDir)
-      .start()
-    stream.awaitTermination()
-    val out = s.table(qname)
-      .orderBy(col("event_id"), col("alert_id"))
-    val pinned = graft.Eager.pin(out)
-    deleteRecursively(base)
-    pinned
+    drain(alerts, "st10_percolate", "append")(_.orderBy(col("event_id"), col("alert_id")))
   }
 
   private val st10Sql =
@@ -954,17 +807,9 @@ object IndexPipeline {
     * exactly as in batch. */
   private def st11(s0: SparkSession, d: String): DataFrame = {
     val s = streamSession(s0)
-    val base = Files.createTempDirectory("graft-stream11-")
-    val ckDir = base.resolve("ck").toString
-    val nFiles = 3
     val ev = Tables.events(s, d)
       .select(col("event_id"), col("ts_us"), col("user_id"))
-    val srcDir = stagedTimeOrdered(s0, ev, nFiles)
-    val qname = s"st11_geofence_${System.nanoTime()}"
-    val src = s.readStream
-      .schema(ev.schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(s"$srcDir/b*")
+    val src = source(s, ev.schema, stagedTimeOrdered(s0, ev, 3))
       .withColumn("lat", ((col("user_id") * 37) % 1201 - 600).cast("double") / 10.0)
       .withColumn("lon", ((col("user_id") * 73) % 3600 - 1800).cast("double") / 10.0)
     val fences: Seq[(String, Double, Double, Double)] = Seq(
@@ -976,21 +821,11 @@ object IndexPipeline {
             lit(n)).otherwise(lit(null).cast("string"))
         }: _*)).as("fence_id"))
       .filter(col("fence_id").isNotNull)
-    val stream = alerts.writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(qname)
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", ckDir)
-      .start()
-    stream.awaitTermination()
-    val out = s.table(qname)
-      .groupBy(col("fence_id"), col("user_id"))
-      .agg(count(lit(1)).as("n_events"))
-      .orderBy(col("fence_id"), col("user_id"))
-    val pinned = graft.Eager.pin(out)
-    deleteRecursively(base)
-    pinned
+    drain(alerts, "st11_geofence", "append") { sink =>
+      sink.groupBy(col("fence_id"), col("user_id"))
+        .agg(count(lit(1)).as("n_events"))
+        .orderBy(col("fence_id"), col("user_id"))
+    }
   }
 
   private val st11Sql = {
@@ -1022,40 +857,21 @@ object IndexPipeline {
     * budget every Kibana panel downstream of an agg has. */
   private def st12(s0: SparkSession, d: String): DataFrame = {
     val s = streamSession(s0)
-    val base = Files.createTempDirectory("graft-stream12-")
-    val ckDir = base.resolve("ck").toString
-    val nFiles = 3
     val ev = Tables.events(s, d)
       .select(col("event_id"), col("ts_us"), col("event_type"))
-    val srcDir = stagedTimeOrdered(s0, ev, nFiles)
-    val qname = s"st12_topk_${System.nanoTime()}"
-    val stream = s.readStream
-      .schema(ev.schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(s"$srcDir/b*")
+    val plan = source(s, ev.schema, stagedTimeOrdered(s0, ev, 3))
       .withColumn("ts", timestamp_micros(col("ts_us")))
       .withWatermark("ts", "1 hour")
       .groupBy(window(col("ts"), "6 hours"), col("event_type"))
       .agg(count(lit(1)).as("n"))
-      .writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(qname)
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", ckDir)
-      .start()
-    stream.awaitTermination()
-    val wRank = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("win_start")).orderBy(col("n").desc, col("event_type"))
-    val out = s.table(qname)
-      .select(col("window.start").cast("long").as("win_start"),
-        col("event_type"), col("n"))
-      .withColumn("rank", row_number().over(wRank).cast("long"))
-      .filter(col("rank") <= 3)
-      .orderBy(col("win_start"), col("rank"))
-    val pinned = graft.Eager.pin(out)
-    deleteRecursively(base)
-    pinned
+    val wRank = Window.partitionBy(col("win_start")).orderBy(col("n").desc, col("event_type"))
+    drain(plan, "st12_topk", "complete") { sink =>
+      sink.select(col("window.start").cast("long").as("win_start"),
+          col("event_type"), col("n"))
+        .withColumn("rank", row_number().over(wRank).cast("long"))
+        .filter(col("rank") <= 3)
+        .orderBy(col("win_start"), col("rank"))
+    }
   }
 
   private val st12Sql =
@@ -1091,8 +907,6 @@ object IndexPipeline {
   private def st14(s0: SparkSession, d: String): DataFrame = {
     import graft.ext.TextFunctions._
     val s = streamSession(s0)
-    val base = Files.createTempDirectory("graft-stream14-")
-    val ckDir = base.resolve("ck").toString
     val docsT = Tables(s, d, "documents").select(col("doc_id"), col("text"))
     // FLAT shingle form: the positional shingleHashes lambda would close
     // over the un-materialized token-hash chain — O(tokens²) per doc (the
@@ -1147,11 +961,7 @@ object IndexPipeline {
     }
     val statBands = s.read.parquet(corpusBandsDir)
     val statSh = s.read.parquet(corpusShDir)
-    val qname = s"st14_neardup_${System.nanoTime()}"
-    val stream = s.readStream
-      .schema(incoming.schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(s"$srcDir/b*")
+    val plan = source(s, incoming.schema, srcDir)
       .transform(withShingles)
       .transform(df => bandRows(df, "new_id"))
       .join(statBands, Seq("band", "sig"), "left")
@@ -1160,44 +970,32 @@ object IndexPipeline {
         size(array_intersect(col("shs"), col("c_shs"))).as("n_inter"),
         (size(col("shs")) + size(col("c_shs"))
           - size(array_intersect(col("shs"), col("c_shs")))).as("n_union"))
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(qname)
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", ckDir)
-      .start()
-    stream.awaitTermination()
     // batch-side verdict: best candidate per incoming doc by exact Jaccard
-    val sink = s.table(qname)
-      .groupBy(col("new_id"), col("c_id"))
-      .agg(max(col("n_inter")).as("n_inter"), max(col("n_union")).as("n_union"))
-    // sink is already one row per (new_id, c_id), so the candidate count
-    // is a plain conditional sum over the new_id window (same shuffle as
-    // the rank — and no self-join against the MemorySink relation, whose
-    // attribute ids conflict under self-join)
-    val ranked = sink
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy(col("new_id")).orderBy(
-          (col("n_inter").cast("double") / col("n_union")).desc_nulls_last,
-          col("c_id").asc_nulls_last)))
-      .withColumn("n_cand", sum(when(col("c_id").isNotNull, 1L).otherwise(0L))
-        .over(Window.partitionBy(col("new_id"))))
-    val out = ranked.filter(col("rnk") === 1)
-      .select(col("new_id"),
-        when(col("c_id").isNotNull && col("n_inter") * 10 >= col("n_union") * 6,
-          lit("duplicate")).otherwise(lit("unique")).as("verdict"),
-        when(col("c_id").isNotNull && col("n_inter") * 10 >= col("n_union") * 6,
-          col("c_id")).as("match_id"),
-        when(col("c_id").isNotNull && col("n_inter") * 10 >= col("n_union") * 6,
-          col("n_inter").cast("long")).as("best_inter"),
-        when(col("c_id").isNotNull && col("n_inter") * 10 >= col("n_union") * 6,
-          col("n_union").cast("long")).as("best_union"),
-        col("n_cand"))
-      .orderBy(col("new_id"))
-    val pinned = graft.Eager.pin(out)
-    deleteRecursively(base)
-    pinned
+    drain(plan, "st14_neardup", "append") { sinkRows =>
+      val sink = sinkRows
+        .groupBy(col("new_id"), col("c_id"))
+        .agg(max(col("n_inter")).as("n_inter"), max(col("n_union")).as("n_union"))
+      // sink is already one row per (new_id, c_id), so the candidate count
+      // is a plain conditional sum over the new_id window (same shuffle as
+      // the rank — and no self-join against the MemorySink relation, whose
+      // attribute ids conflict under self-join)
+      val ranked = sink
+        .withColumn("rnk", row_number().over(
+          Window.partitionBy(col("new_id")).orderBy(
+            (col("n_inter").cast("double") / col("n_union")).desc_nulls_last,
+            col("c_id").asc_nulls_last)))
+        .withColumn("n_cand", sum(when(col("c_id").isNotNull, 1L).otherwise(0L))
+          .over(Window.partitionBy(col("new_id"))))
+      val dup = col("c_id").isNotNull && col("n_inter") * 10 >= col("n_union") * 6
+      ranked.filter(col("rnk") === 1)
+        .select(col("new_id"),
+          when(dup, lit("duplicate")).otherwise(lit("unique")).as("verdict"),
+          when(dup, col("c_id")).as("match_id"),
+          when(dup, col("n_inter").cast("long")).as("best_inter"),
+          when(dup, col("n_union").cast("long")).as("best_union"),
+          col("n_cand"))
+        .orderBy(col("new_id"))
+    }
   }
 
   private val st14Sql = {
@@ -1311,37 +1109,21 @@ object IndexPipeline {
     import s0.implicits._
     import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
     val s = streamSession(s0)
-    val base = Files.createTempDirectory("graft-stream16-")
-    val ckDir = base.resolve("ck").toString
     val ev = Tables.events(s, d)
       .filter(col("event_type").isin("view", "click", "purchase"))
       .select(col("event_id"), col("user_id"), col("event_type"), col("ts_us"))
     // time-ordered micro-batches: 3 files split on the ts range (equal
     // timestamps never straddle a boundary)
-    val srcDir = stagedTimeOrdered(s0, ev, 3)
-    val qname = s"st16_eql_${System.nanoTime()}"
-    val stream = s.readStream
-      .schema(ev.schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(s"$srcDir/b*")
+    val plan = source(s, ev.schema, stagedTimeOrdered(s0, ev, 3))
       .as[SeqEvent]
       .groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(seqFold _)
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(qname)
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", ckDir)
-      .start()
-    stream.awaitTermination()
-    val out = s.table(qname)
-      .select(col("user_id"), col("t1_us"), col("t2_us"), col("t3_us"),
-        col("span_us"))
-      .orderBy(col("user_id"), col("t1_us"), col("t2_us"), col("t3_us"))
-    val pinned = graft.Eager.pin(out)
-    deleteRecursively(base)
-    pinned
+      .toDF()
+    drain(plan, "st16_eql", "append") { sink =>
+      sink.select(col("user_id"), col("t1_us"), col("t2_us"), col("t3_us"),
+          col("span_us"))
+        .orderBy(col("user_id"), col("t1_us"), col("t2_us"), col("t3_us"))
+    }
   }
 
   /** The batch d208 oracle verbatim — streaming must equal batch. */
@@ -1386,62 +1168,45 @@ object IndexPipeline {
     * fails the gate loudly. */
   private def st17(s0: SparkSession, d: String): DataFrame = {
     val s = streamSession(s0)
-    val base = Files.createTempDirectory("graft-stream17-")
-    val ckDir = base.resolve("ck").toString
-    val nFiles = 3
     val ev = Tables.events(s, d)
       .select(col("event_id"), col("ts_us"), col("event_type"),
         expr("CAST(FLOOR(value) AS BIGINT)").as("v"))
-    val srcDir = stagedTimeOrdered(s0, ev, nFiles)
-    val qname = s"st17_quantiles_${System.nanoTime()}"
-    val stream = s.readStream
-      .schema(ev.schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(s"$srcDir/b*")
+    val plan = source(s, ev.schema, stagedTimeOrdered(s0, ev, 3))
       .withColumn("ts", timestamp_micros(col("ts_us")))
       .withWatermark("ts", "1 hour")
       .groupBy(window(col("ts"), "6 hours"), col("event_type"))
       .agg(count(lit(1)).as("n"),
         expr("approx_percentile(v, 0.5, 1000)").as("_a50"))
-      .writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(qname)
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", ckDir)
-      .start()
-    stream.awaitTermination()
-    val streamed = s.table(qname)
-      .select(col("window.start").cast("long").as("win_start"),
-        col("event_type"), col("n"), col("_a50"))
-    // batch-side audit + the oracle-checkable exact values
-    // FLOOR division (pmod keeps it exact long arithmetic): window() and
-    // the DuckDB // operator both floor, while DIV truncates toward zero
-    // — the three bucket computations must agree even for pre-1970 ts
-    val corpus = ev
-      .withColumn("win_start",
-        expr("(ts_us - pmod(ts_us, 21600000000)) DIV 21600000000") * 21600L)
-    // the returned value occupies the RANK INTERVAL [count(<)+1, count(≤)]
-    // (duplicates make it a run, not a point); the audit passes iff that
-    // interval intersects the target band — counting only ≤ would fail a
-    // correct answer whose duplicates extend past the band
-    val audited = corpus
-      .join(broadcast(streamed), Seq("win_start", "event_type"))
-      .groupBy(col("win_start"), col("event_type"))
-      .agg(
-        expr("percentile(v, 0.5)").as("exact_p50"),
-        first(col("n")).as("n"),
-        sum(when(col("v") < col("_a50"), 1L).otherwise(0L)).as("_lt"),
-        sum(when(col("v") <= col("_a50"), 1L).otherwise(0L)).as("_le"))
-      .select(col("win_start"), col("event_type"),
-        col("exact_p50"), col("n"),
-        (col("_lt") + 1 <= col("n") * 0.5 + (col("n") * 0.005 + 1) &&
-          col("_le") >= col("n") * 0.5 - (col("n") * 0.005 + 1))
-          .as("gk_within_bound"))
-      .orderBy(col("win_start"), col("event_type"))
-    val pinned = graft.Eager.pin(audited)
-    deleteRecursively(base)
-    pinned
+    drain(plan, "st17_quantiles", "complete") { sink =>
+      val streamed = sink
+        .select(col("window.start").cast("long").as("win_start"),
+          col("event_type"), col("n"), col("_a50"))
+      // batch-side audit + the oracle-checkable exact values
+      // FLOOR division (pmod keeps it exact long arithmetic): window() and
+      // the DuckDB // operator both floor, while DIV truncates toward zero
+      // — the three bucket computations must agree even for pre-1970 ts
+      val corpus = ev
+        .withColumn("win_start",
+          expr("(ts_us - pmod(ts_us, 21600000000)) DIV 21600000000") * 21600L)
+      // the returned value occupies the RANK INTERVAL [count(<)+1, count(≤)]
+      // (duplicates make it a run, not a point); the audit passes iff that
+      // interval intersects the target band — counting only ≤ would fail a
+      // correct answer whose duplicates extend past the band
+      corpus
+        .join(broadcast(streamed), Seq("win_start", "event_type"))
+        .groupBy(col("win_start"), col("event_type"))
+        .agg(
+          expr("percentile(v, 0.5)").as("exact_p50"),
+          first(col("n")).as("n"),
+          sum(when(col("v") < col("_a50"), 1L).otherwise(0L)).as("_lt"),
+          sum(when(col("v") <= col("_a50"), 1L).otherwise(0L)).as("_le"))
+        .select(col("win_start"), col("event_type"),
+          col("exact_p50"), col("n"),
+          (col("_lt") + 1 <= col("n") * 0.5 + (col("n") * 0.005 + 1) &&
+            col("_le") >= col("n") * 0.5 - (col("n") * 0.005 + 1))
+            .as("gk_within_bound"))
+        .orderBy(col("win_start"), col("event_type"))
+    }
   }
 
   private val st17Sql =

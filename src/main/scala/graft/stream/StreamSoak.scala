@@ -122,7 +122,7 @@ object StreamSoak {
       }
       s.catalog.dropTempView(qname)
       stats
-    } finally IndexPipeline.deleteRecursively(base)
+    } finally graft.TempDirs.deleteRecursively(base)
   }
 
   def main(args: Array[String]): Unit = {
