@@ -117,9 +117,9 @@ object IndexPipeline {
     * state format 3 keeps all four in ONE RocksDB store as virtual column
     * families, so each micro-batch loads and commits one store instance
     * per partition instead of four (format 3 requires RocksDB). Joins
-    * only: RocksDB under the four-store format, and under the other
-    * stateful operators, measured no gain (ROADMAP item 2), so those stay
-    * on the HDFS-backed default. */
+    * only: the other stateful operators ran slower on RocksDB (st5 0.73×,
+    * st4 0.84×, st12 0.85× over 10 A/B pairs, ROADMAP item 2), so they
+    * stay on the HDFS-backed default. */
   private[stream] def joinSession(s0: SparkSession): SparkSession = {
     val s = streamSession(s0)
     s.conf.set("spark.sql.streaming.stateStore.providerClass",
@@ -150,17 +150,14 @@ object IndexPipeline {
   /** One owner for a stream query's temp state: a temp dir for its checkpoint
     * and the memory-sink name `<name>_<nanos>`. The sink's temp view and
     * the dir (with any RocksDB store checkpointed in it) are dropped in a
-    * finally, so a failed stream leaks neither. The view is dropped from
-    * the session catalog directly: nothing caches a sink view, so
-    * `Catalog.dropTempView`'s uncache pass, which compares the view with
-    * every plan the shared CacheManager holds, has nothing to do. */
+    * finally, so a failed stream leaks neither. */
   private def withStreamDir[T](s: SparkSession, name: String)
                               (body: (String, String) => T): T = {
     val base = Files.createTempDirectory(s"graft-$name-")
     val qname = s"${name}_${System.nanoTime()}"
     try body(base.resolve("ck").toString, qname)
     finally {
-      s.sessionState.catalog.dropTempView(qname)
+      s.catalog.dropTempView(qname)
       graft.TempDirs.deleteRecursively(base)
     }
   }
