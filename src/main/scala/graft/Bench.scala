@@ -21,16 +21,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors()).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    warmCollation(spark)
+    val spark = GraftSession.local()
     // Warm up codegen/JIT/parquet-footer paths once so the first measured
     // query doesn't absorb ~30 s of one-time JVM cost (seen in BENCH_r01).
     try SparkEntry.queries("q1_agg")(spark, sfDir).count()
@@ -151,12 +142,6 @@ object Bench {
       }
     def f(v: Double): String = BigDecimal(v)
       .setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
-    def jstr(s: String): String = "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val qs = results.map { case (k, v) => jstr(k) + ":" + f(v) }
       .mkString("{", ",", "}")
     // a query where fewer than 3 runs succeeded reports a DEGRADED
@@ -204,6 +189,16 @@ object Bench {
     println(
       s"""{"metric":"total","value":${f(total)},"unit":"sec","runs_per_query":3,"per_query_stat":"median","n_queries":${results.size},$calibJson,"degraded":$degraded,"wall":${f(wall)},"queries":$slowest,"queries_note":"12 slowest of ${results.size}; full map in $outFile","leaks":$lk,"errs":$esCompact,"sf":"$sfDir"}""")
   }
+
+  /** A JSON string literal: quote, backslash and every control char
+    * escaped, so a tab or CR in a query name or SQL text cannot break the
+    * reader's `json.load`. */
+  private[graft] def jstr(s: String): String = "\"" + s.flatMap {
+    case '"' => "\\\""
+    case '\\' => "\\\\"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
 
   private def err(e: Throwable): String =
     e.getClass.getSimpleName + ": " +

@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Optimization-round helper: dump `.explain("formatted")` for named
@@ -23,16 +22,7 @@ object ExplainDump {
     val outDir = args(1)
     val suffix = args(2)
     val names = args(3).split(",").toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors()).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Bench.warmCollation(spark)
+    val spark = GraftSession.local()
     Files.createDirectories(Paths.get(outDir))
     names.foreach { n =>
       val fn = SparkEntry.queries(n)

@@ -188,6 +188,7 @@ object Bulk {
       .join(broadcast(presentDf), col("id") === col("_cid"), "inner")
   }
 
+  /** `maxDepth` is unused; the benchmark client pins this signature. */
   def run(assembled: DataFrame, sh: Shredded, ndjson: String,
           schema: StructType, maxDepth: Int,
           docCol: String = "doc"): Outcome = {
@@ -238,8 +239,8 @@ object Bulk {
     val patches = col("_p")
 
     // ids whose final state is absent but whose closure is in the index.
-    // PINNED (batch-bounded driver rows): the cascade's fixed-depth
-    // expansion embeds its root frame in every join round, and the fresh
+    // PINNED (batch-bounded driver rows): the cascade embeds its root
+    // frame in the closure of every anti-join, and the fresh
     // shred embeds the doc frame once per schema node — left lazy, the
     // broadcast-join + patch-chain plan is duplicated ~15× and re-executed
     // per copy (measured 30 s vs ~5 s at sf0.1). The batch is request-
@@ -260,14 +261,13 @@ object Bulk {
 
     // ONE cascade for both the final deletions and the replaced docs' old
     // closures (M8 replace = cascade + fresh shred; running its cascade
-    // separately from the delete cascade would double the fixed-depth
-    // join rounds — both root sets are pinned literals, so their union is
-    // free), then the fresh shred unions in.
+    // separately from the delete cascade would double the closure scan —
+    // both root sets are pinned literals, so their union is free), then
+    // the fresh shred unions in.
     val newRoots = newDocs.select(
       concat(col(s"$docCol.objectType"), lit("_"), col(s"$docCol.objectId")).as("key"))
     val cleaned = Mutations.cascadeDelete(sh,
-      deleteRoots.unionByName(newRoots), maxDepth,
-      currentDocs = Some(assembled), docCol = docCol)
+      deleteRoots.unionByName(newRoots), assembled, docCol)
     val fresh = Shredder.shredComputed(newDocs, docCol)
     Outcome(resp.orderBy(col("seq")), Shredded(
       cleaned.entities.unionAll(fresh.entities),

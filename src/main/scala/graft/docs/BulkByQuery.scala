@@ -95,15 +95,14 @@ object BulkByQuery {
     * tables). Returns the post-delete state and the matched-root count
     * (the ES response's `deleted`). */
   def deleteByQuery(assembled: DataFrame, sh: Shredded, body: String,
-                    schema: StructType, maxDepth: Int,
+                    schema: StructType,
                     docCol: String = "doc"): (Shredded, DataFrame) = {
     val root = parseRoot(body, Set("query"))
     require(root.contains("query"), "_delete_by_query body must contain \"query\"")
     val q = SearchQuery.fromJson(body, schema)
     val roots = assembled.filter(SearchQuery.compile(q, col(docCol)))
       .select(col("key"))
-    (Mutations.cascadeDelete(sh, roots, maxDepth,
-        currentDocs = Some(assembled), docCol = docCol),
+    (Mutations.cascadeDelete(sh, roots, assembled, docCol),
       roots.agg(count(lit(1)).cast("long").as("deleted")))
   }
 
@@ -173,7 +172,7 @@ object BulkByQuery {
     * reference's own update shape, `PlanService.java:202-215`, here one
     * set-oriented plan instead of a per-document request loop). */
   def updateByQuery(assembled: DataFrame, sh: Shredded, body: String,
-                    schema: StructType, maxDepth: Int,
+                    schema: StructType,
                     docCol: String = "doc"): Shredded = {
     import org.json4s._
     val root = parseRoot(body, Set("query", "script"))
@@ -194,7 +193,6 @@ object BulkByQuery {
     val newVal = SearchQuery.compileScriptWith(us.expr, p => field(doc, p),
       lit(null).cast("double"))
     val updated = matched.select(setField(doc, us.path, newVal, schema).as(docCol))
-    Mutations.replace(sh, updated, maxDepth, docCol,
-      currentDocs = Some(assembled))
+    Mutations.replace(sh, updated, assembled, docCol)
   }
 }

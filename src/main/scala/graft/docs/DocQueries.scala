@@ -384,15 +384,14 @@ object DocQueries {
        |ORDER BY object_id""".stripMargin
 
   // ---------------------------------------------------------------- d12
-  /** M6 cascade delete — reachability expansion + anti-join; remaining
-    * entity counts per type tag. */
+  /** M6 cascade delete — closure from the assembled docs + anti-join;
+    * remaining entity counts per type tag. */
   private def d12(s: SparkSession, d: String): DataFrame = {
     val sh = shredded(s, d)
     val roots = assembled(s, d)
       .filter(col("doc._org") === "org-3.example.com")
       .select(col("key"))
-    Mutations.cascadeDelete(sh, roots, mdepth,
-      currentDocs = Some(assembled(s, d))).entities
+    Mutations.cascadeDelete(sh, roots, assembled(s, d)).entities
       .groupBy(col("type_tag")).agg(count(lit(1)).as("n"))
       .orderBy(col("type_tag"))
   }
@@ -472,8 +471,8 @@ object DocQueries {
         lit("plan").as("objectType"),
         lit("REPLACED").as("planType"),
         lit("01-01-2021").as("creationDate")).as("doc"))
-    val after = materialized(s, "d14", Mutations.replace(sh, replacements, mdepth,
-      currentDocs = Some(assembled(s, d))))
+    val after = materialized(s, "d14",
+      Mutations.replace(sh, replacements, assembled(s, d)))
     Assembler.assemble(after, schema, "plan").select(
       col("doc.objectId").as("object_id"),
       col("doc.planType").as("plan_type"),
@@ -6819,7 +6818,7 @@ object DocQueries {
         |    "ctx._source.planCostShares.copay = ctx._source.planCostShares.copay * 2 + 7" }
         |}""".stripMargin
     val after = materialized(s, "d175",
-      BulkByQuery.updateByQuery(assembled(s, d), shredded(s, d), body, schema, mdepth))
+      BulkByQuery.updateByQuery(assembled(s, d), shredded(s, d), body, schema))
     Assembler.assemble(after, schema, "plan").select(
       col("doc.objectId").as("object_id"),
       col("doc.planType").as("plan_type"),
@@ -6852,7 +6851,7 @@ object DocQueries {
         |    { "range": { "planCostShares.copay": { "gte": 25 } } } ] } }
         |}""".stripMargin
     val (after, deleted) =
-      BulkByQuery.deleteByQuery(assembled(s, d), shredded(s, d), body, schema, mdepth)
+      BulkByQuery.deleteByQuery(assembled(s, d), shredded(s, d), body, schema)
     after.entities.groupBy(col("type_tag")).agg(count(lit(1)).as("n"))
       .unionByName(deleted.select(lit("_deleted_docs").as("type_tag"),
         col("deleted").as("n")))
@@ -6948,7 +6947,7 @@ object DocQueries {
     // the delete-by-query plan lazily skips a full parquet write of both
     // tables AND the edges half of the mutation machinery outright.
     val liveEnts = BulkByQuery
-      .deleteByQuery(pit, shredded(s, d), delBody, schema, mdepth)._1.entities
+      .deleteByQuery(pit, shredded(s, d), delBody, schema)._1.entities
     def lastKey(p: DataFrame): String =
       p.agg(max(col("objectId"))).collect()(0).getString(0) // 1-row cursor fetch
     val p2 = SearchExec.search(pit, "doc", pageBody(Some(lastKey(p1))), schema)

@@ -9,12 +9,10 @@ import org.apache.spark.sql.types.StructType
   *
   * Cascade delete re-expresses `PlanService.deletePlan`
   * (`PlanService.java:135-200`) — per-key recursive Redis deletes driven by
-  * `KEYS planKey_*` glob scans — as graph reachability over the `edges`
-  * table: a fixed number of equi-join rounds (the document schema's depth,
-  * known statically) expands the root keys to the full reachable closure,
-  * then one anti-join removes them from `entities` and `edges`. No driver
-  * loop over documents, no `collect()` — deleting one doc or a billion is
-  * the same plan.
+  * `KEYS planKey_*` glob scans — as one set operation: the root keys'
+  * closure comes from the assembled documents' trees, then one anti-join
+  * removes it from `entities` and `edges`. No driver loop over documents,
+  * no `collect()` — deleting one doc or a billion is the same plan.
   */
 object Mutations {
 
@@ -29,37 +27,19 @@ object Mutations {
     d(schema)
   }
 
-  /** All keys reachable from `rootKeys` (single column `key`), inclusive.
-    * `maxDepth` bounds the join rounds — pass `depth(schema)`. */
-  def reachable(sh: Shredded, rootKeys: DataFrame, maxDepth: Int): DataFrame = {
-    val edges = sh.edges.filter(col("child_key").isNotNull)
-      .select(col("parent_key"), col("child_key"))
-    var frontier = rootKeys.select(col("key")).distinct()
-    var all = frontier
-    for (_ <- 1 to maxDepth) {
-      frontier = edges.join(frontier, col("parent_key") === col("key"))
-        .select(col("child_key").as("key")).distinct()
-      all = all.unionAll(frontier)
-    }
-    all.distinct()
-  }
-
-  /** Reachable-closure keys computed from the DOCUMENTS instead of by
-    * edge-table join rounds (r19, guide §2.4 — remove shuffles outright):
-    * when the caller holds the assembled `(key, doc)` table of the SAME
-    * corpus `sh` was shredded from, the closure of a set of ROOT keys is
-    * just every node key in those documents' trees — one semi-join plus
-    * the Shredder's per-schema-node projections (keys only; column
-    * pruning drops the json residue), versus [[reachable]]'s `maxDepth`
-    * edge-table joins + per-round distincts, each executed once PER
-    * MUTATION OUTPUT TABLE. The root keys union in unconditionally so
-    * keys absent from `docs` (fresh inserts — no tree to remove) behave
-    * exactly as reachable() treats them.
+  /** The closure of a set of ROOT keys, read from the documents: the
+    * assembled `(key, doc)` table of the SAME corpus `sh` was shredded
+    * from holds each root's whole tree, so the closure is every node key
+    * in the matched documents — one semi-join plus the Shredder's
+    * per-schema-node projections (keys only; column pruning drops the
+    * json residue), with no edge-table join rounds. The root keys union in
+    * unconditionally, so a key absent from `docs` (a fresh insert, with no
+    * tree to remove) is still in its own closure.
     *
-    * CONTRACT (loud, because the generic path has no such requirement):
-    * `rootKeys` must be ROOT document keys — a mid-tree key has a tree in
-    * `sh` but no row in `docs`, and its closure would silently be missed;
-    * every registry caller passes root keys by construction. */
+    * CONTRACT: `rootKeys` are ROOT document keys, as in
+    * `PlanService.deletePlan(planKey)`. A mid-tree key has a tree in `sh`
+    * but no row in `docs`, so its subtree would be missed; every caller
+    * passes root keys by construction. */
   def docClosure(docs: DataFrame, rootKeys: DataFrame,
                  docCol: String = "doc"): DataFrame = {
     val schema = docs.schema(docCol).dataType.asInstanceOf[StructType]
@@ -95,18 +75,11 @@ object Mutations {
     }
   }
 
-  /** M6 — remove the reachable closure of `rootKeys` from both tables.
-    * `currentDocs` (the assembled corpus, when the caller has it) selects
-    * the one-pass [[docClosure]] instead of the generic join-round
-    * expansion — identical key set (oracle-gated d12/d14/d175/d176/d191),
-    * `maxDepth` fewer shuffles per consumer of the result. */
-  def cascadeDelete(sh: Shredded, rootKeys: DataFrame, maxDepth: Int,
-                    currentDocs: Option[DataFrame] = None,
+  /** M6 — remove the closure of `rootKeys` ([[docClosure]] over
+    * `currentDocs`, the assembled corpus) from both tables. */
+  def cascadeDelete(sh: Shredded, rootKeys: DataFrame, currentDocs: DataFrame,
                     docCol: String = "doc"): Shredded = {
-    val gone = currentDocs match {
-      case Some(docs) => docClosure(docs, rootKeys, docCol)
-      case None => reachable(sh, rootKeys, maxDepth)
-    }
+    val gone = docClosure(currentDocs, rootKeys, docCol)
     Shredded(
       sh.entities.join(gone, Seq("key"), "left_anti"),
       sh.edges.join(gone.select(col("key").as("parent_key")), Seq("parent_key"), "left_anti"))
@@ -115,12 +88,11 @@ object Mutations {
   /** M8 — full-document replace: cascade-delete the incoming docs' root keys,
     * then union the fresh shred (`PlanService.updatePlan`,
     * `PlanService.java:202-215` = delete-then-save). */
-  def replace(sh: Shredded, newDocs: DataFrame, maxDepth: Int,
-              docCol: String = "doc",
-              currentDocs: Option[DataFrame] = None): Shredded = {
+  def replace(sh: Shredded, newDocs: DataFrame, currentDocs: DataFrame,
+              docCol: String = "doc"): Shredded = {
     val rootKeys = newDocs.select(
       concat(col(s"$docCol.objectType"), lit("_"), col(s"$docCol.objectId")).as("key"))
-    val cleaned = cascadeDelete(sh, rootKeys, maxDepth, currentDocs, docCol)
+    val cleaned = cascadeDelete(sh, rootKeys, currentDocs, docCol)
     val fresh = Shredder.shredComputed(newDocs, docCol)
     Shredded(
       cleaned.entities.unionAll(fresh.entities),

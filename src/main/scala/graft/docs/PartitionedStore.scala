@@ -50,8 +50,8 @@ object PartitionedStore {
     pmod(xxhash64(root), lit(n.toLong))
 
   /** Root-key assignment: fixed-depth propagation of each root's key down
-    * the edge graph (the write-time analogue of Mutations.reachable,
-    * carrying the root instead of just membership). */
+    * the edge graph, one join round per level of `maxDepth`, carrying the
+    * owning root with each key. */
   private def rootAssignment(sh: Shredded, rootTag: String, maxDepth: Int): DataFrame = {
     val roots = sh.entities.filter(col("type_tag") === rootTag)
       .select(col("key"), col("key").as("root"))

@@ -32,15 +32,6 @@ object Similarity {
 
   type Q = (SparkSession, String) => DataFrame
 
-  /** Sequential fold-left dot product via composed built-ins — the
-    * reference implementation `vec_dot` is verified against (kept for
-    * tests/fallback; the hot paths use the native expression). */
-  def dot(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, z) => acc + z)
-
-  def cosine(a: Column, b: Column): Column =
-    dot(a, b) / (sqrt(dot(a, a)) * sqrt(dot(b, b)))
-
   /** Random-hyperplane signature (`planes` bits, default 16): codegen'd dots against literal
     * weight arrays (LCG-derived, engine-portable — TextFunctions). */
   def lshSig(v: Column, dims: Int = 64, planes: Int = 16): Column =
@@ -50,12 +41,9 @@ object Similarity {
       when(vecDot(v, w) >= 0, lit(1L << p)).otherwise(lit(0L))
     }.reduce(_ + _)
 
-  /** DuckDB mirror of `dot` — sequential list_reduce from a 0.0 seed. */
+  /** DuckDB mirror of `vec_dot` — sequential list_reduce from a 0.0 seed. */
   def dotSql(a: String, b: String): String =
     s"list_reduce(list_prepend(0.0, list_transform(list_zip($a, $b), z -> z[1] * z[2])), (acc, x) -> acc + x)"
-
-  def cosineSql(a: String, b: String): String =
-    s"(${dotSql(a, b)} / (sqrt(${dotSql(a, a)}) * sqrt(${dotSql(b, b)})))"
 
   /** DuckDB mirror of `lshSig` — recomputes the same LCG weights inline. */
   def lshSigSql(v: String, planes: Int = 16): String =

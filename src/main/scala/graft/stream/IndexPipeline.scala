@@ -136,12 +136,8 @@ object IndexPipeline {
     parsePartitions(sys.env.get("SPARK_GRAFT_STREAM_PARTITIONS"))
 
   /** SPARK_GRAFT_STREAM_PARTITIONS: a positive integer, 8 when unset. */
-  private[stream] def parsePartitions(raw: Option[String]): Int = raw match {
-    case None => 8
-    case Some(v) => v.trim.toIntOption.filter(_ > 0).getOrElse(
-      throw new IllegalArgumentException(
-        s"SPARK_GRAFT_STREAM_PARTITIONS must be a positive integer, got '$v'"))
-  }
+  private[stream] def parsePartitions(raw: Option[String]): Int =
+    graft.GraftSession.positiveInt("SPARK_GRAFT_STREAM_PARTITIONS", raw, 8)
 
   /** The staged log as a stream, one file per micro-batch. */
   private def source(s: SparkSession, schema: StructType, srcDir: String): DataFrame =
@@ -151,8 +147,8 @@ object IndexPipeline {
     * and the memory-sink name `<name>_<nanos>`. The sink's temp view and
     * the dir (with any RocksDB store checkpointed in it) are dropped in a
     * finally, so a failed stream leaks neither. */
-  private def withStreamDir[T](s: SparkSession, name: String)
-                              (body: (String, String) => T): T = {
+  private[stream] def withStreamDir[T](s: SparkSession, name: String)
+                                      (body: (String, String) => T): T = {
     val base = Files.createTempDirectory(s"graft-$name-")
     val qname = s"${name}_${System.nanoTime()}"
     try body(base.resolve("ck").toString, qname)

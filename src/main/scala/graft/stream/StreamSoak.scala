@@ -1,6 +1,6 @@
 package graft.stream
 
-import java.nio.file.Files
+import java.nio.file.Paths
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -33,16 +33,15 @@ object StreamSoak {
   final case class BatchStat(batchId: Long, inputRows: Long, stateRows: Long,
                              stateBytes: Long, watermark: String)
 
-  /** Run one shape for `nBatches` micro-batches; returns per-batch stats
-    * in batch order. */
-  def soak(s0: SparkSession, d: String, which: String,
-           nBatches: Int): Seq[BatchStat] = {
-    val s = s0.newSession()
-    s.conf.set("spark.sql.shuffle.partitions", 8)
-    val base = Files.createTempDirectory(s"graft-soak-$which-")
-    val srcDir = base.resolve("log").toString
-    val ckDir = base.resolve("ck").toString
-    try {
+  /** Run one shape for `nBatches` micro-batches in `s`, a stream session
+    * ([[IndexPipeline.streamSession]]); returns per-batch stats in batch
+    * order. */
+  def soak(s: SparkSession, d: String, which: String,
+           nBatches: Int): Seq[BatchStat] =
+    IndexPipeline.withStreamDir(s, s"soak_$which") { (ckDir, qname) =>
+      // the staged log sits beside the checkpoint, in the dir that
+      // withStreamDir deletes
+      val srcDir = Paths.get(ckDir).resolveSibling("log").toString
       val ev = Tables.events(s, d)
         .select(col("event_id"), col("ts_us"), col("user_id"), col("event_type"))
       val r0 = ev.agg(min(col("ts_us")), max(col("ts_us"))).head()
@@ -104,7 +103,6 @@ object StreamSoak {
             .toDF()
         case other => throw new IllegalArgumentException(s"unknown soak $other")
       }
-      val qname = s"soak_${which}_${System.nanoTime()}"
       val q = plan.writeStream
         .outputMode("append")
         .format("memory")
@@ -112,35 +110,23 @@ object StreamSoak {
         .trigger(Trigger.AvailableNow())
         .option("checkpointLocation", ckDir)
         .start()
-      try q.awaitTermination() finally q.stop()
-      val stats = q.recentProgress.toSeq.map { p =>
+      try q.awaitTermination() finally if (q.isActive) q.stop()
+      q.recentProgress.toSeq.map { p =>
         val ops = Option(p.stateOperators).map(_.toSeq).getOrElse(Nil)
         BatchStat(p.batchId, p.numInputRows,
           ops.map(_.numRowsTotal).sum, ops.map(_.memoryUsedBytes).sum,
           Option(p.eventTime).flatMap(m => Option(m.get("watermark")))
             .getOrElse("-"))
       }
-      s.catalog.dropTempView(qname)
-      stats
-    } finally graft.TempDirs.deleteRecursively(base)
-  }
+    }
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("scaledata/sf1")
     val nBatches = args.lift(1).map(_.toInt).getOrElse(20)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors()).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.Bench.warmCollation(spark)
+    val spark = graft.GraftSession.local()
     Seq("st6_inner", "st8_left_outer", "st13_full_outer", "st16_eql")
       .foreach { which =>
-        val stats = soak(spark, sfDir, which, nBatches)
+        val stats = soak(IndexPipeline.streamSession(spark), sfDir, which, nBatches)
         println(s"== $which ($sfDir, $nBatches batches) ==")
         println("batch | input_rows | state_rows | state_bytes | watermark")
         stats.foreach { b =>

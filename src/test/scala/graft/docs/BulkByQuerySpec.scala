@@ -42,13 +42,13 @@ class BulkByQuerySpec extends SparkSpec {
     val empty: DataFrame = spark.emptyDataFrame
     val sh = Shredded(empty, empty)
     assert(intercept[IllegalArgumentException](BulkByQuery.deleteByQuery(
-      empty, sh, """{"query": {"match_all": {}}, "size": 5}""", sch, 3))
+      empty, sh, """{"query": {"match_all": {}}, "size": 5}""", sch))
       .getMessage.contains("unsupported body key"))
     assert(intercept[IllegalArgumentException](BulkByQuery.updateByQuery(
-      empty, sh, """{"query": {"match_all": {}}}""", sch, 3))
+      empty, sh, """{"query": {"match_all": {}}}""", sch))
       .getMessage.contains("script"))
     assert(intercept[IllegalArgumentException](BulkByQuery.deleteByQuery(
-      empty, sh, """{}""", sch, 3)).getMessage.contains("query"))
+      empty, sh, """{}""", sch)).getMessage.contains("query"))
   }
 
   test("reindex body guards: unknown keys, wrong source index, bad dest reject loudly") {

@@ -130,8 +130,10 @@ class DocEngineSpec extends SparkSpec {
   }
 
   test("cascade delete removes exactly the reachable closure") {
+    // a mid-tree key: the edge-join reference takes any key; the product's
+    // cascadeDelete takes root keys, as deletePlan(planKey) does
     val roots = spark.createDataFrame(Seq(Tuple1("planservice_27283xvx9asdff-504"))).toDF("key")
-    val after = Mutations.cascadeDelete(sh, roots, Mutations.depth(PlanSchema.plan))
+    val after = MutationsReference.cascadeDelete(sh, roots, Mutations.depth(PlanSchema.plan))
     val keys = after.entities.select("key").collect().map(_.getString(0)).toSet
     assert(keys === Set(
       "plan_12xvxc345ssdsds-508",

@@ -45,6 +45,11 @@ class DocPropertySpec extends SparkSpec {
       col("objectId"), col("objectType"), col("planType"), col("creationDate")).as("doc"))
   }
 
+  /** The assembled `(key, doc)` table, the closure source of cascadeDelete. */
+  private def assembled(sh: Shredded): DataFrame =
+    Assembler.assemble(sh, corpus(1, 0L).schema("doc").dataType
+      .asInstanceOf[org.apache.spark.sql.types.StructType], "plan")
+
   private def canon(df: DataFrame): Set[String] = {
     val schema = df.schema("doc").dataType
     df.select(to_json(CanonicalJson.canonicalize(col("doc"), schema)))
@@ -73,10 +78,30 @@ class DocPropertySpec extends SparkSpec {
     val docs = corpus(10, 7L)
     val sh = Shredder.shred(docs)
     val roots = sh.entities.filter(col("type_tag") === "plan").select(col("key"))
-    val after = Mutations.cascadeDelete(sh, roots,
-      Mutations.depth(PlanSchema.plan))
+    val after = Mutations.cascadeDelete(sh, roots, assembled(sh))
     assert(after.entities.count() === 0)
     assert(after.edges.count() === 0)
+  }
+
+  test("cascade-delete closure matches the edge-join reference for random root subsets") {
+    val depth = Mutations.depth(PlanSchema.plan)
+    def keys(df: DataFrame, c: String): Set[String] =
+      df.select(col(c)).collect().map(_.getString(0)).toSet
+    for (seed <- 1L to 4L) {
+      val sh = Shredder.shred(corpus(10, seed))
+      val rnd = new scala.util.Random(seed)
+      val rootKeys = keys(sh.entities.filter(col("type_tag") === "plan"), "key").toSeq.sorted
+      val picked = rootKeys.filter(_ => rnd.nextInt(3) == 0)
+      import spark.implicits._
+      val roots = picked.toDF("key")
+      val after = Mutations.cascadeDelete(sh, roots, assembled(sh))
+      val closure = keys(MutationsReference.reachable(sh, roots, depth), "key")
+      val ctx = s"seed=$seed roots=$picked"
+      assert(keys(sh.entities, "key") -- keys(after.entities, "key") === closure, ctx)
+      val keptEdges = sh.edges.filter(!col("parent_key").isin(closure.toSeq: _*))
+      assert(after.edges.exceptAll(keptEdges).isEmpty &&
+        keptEdges.exceptAll(after.edges).isEmpty, ctx)
+    }
   }
 
   test("pagination consistency: from/size pages and search_after cursors tile the full sort") {
@@ -121,10 +146,8 @@ class DocPropertySpec extends SparkSpec {
     val docs = corpus(10, 11L)
     val sh = Shredder.shred(docs)
     val one = sh.entities.filter(col("key") === "plan_plan-3").select(col("key"))
-    val after = Mutations.cascadeDelete(sh, one, Mutations.depth(PlanSchema.plan))
-    val schema = docs.schema("doc").dataType
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
-    val back = Assembler.assemble(after, schema, "plan")
+    val after = Mutations.cascadeDelete(sh, one, assembled(sh))
+    val back = assembled(after)
     val expected = docs.filter(col("doc.objectId") =!= "plan-3")
     assert(canon(back.select(col("doc"))) === canon(expected))
   }

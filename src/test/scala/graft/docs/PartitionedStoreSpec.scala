@@ -64,7 +64,7 @@ class PartitionedStoreSpec extends SparkSpec {
     // semantics: the partition-limited rewrite equals the set-machinery
     // replace over the whole table (M8), both directions
     val got = PartitionedStore.read(spark, st)
-    val want = Mutations.replace(sh, newDoc, depth)
+    val want = Mutations.replace(sh, newDoc, Assembler.assemble(sh, schema, "plan"))
     assert(got.entities.except(want.entities).isEmpty &&
       want.entities.except(got.entities).isEmpty, "entities state diverged")
     assert(got.edges.except(want.edges).isEmpty &&

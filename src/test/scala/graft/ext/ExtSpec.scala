@@ -40,7 +40,7 @@ class ExtSpec extends SparkSpec {
       .limit(50)
     val cmp = df.select(
       graft.functions.GraftFunctions.vecDot(col("v"), col("v")).as("native"),
-      Similarity.dot(col("v"), col("v")).as("composed"))
+      SimilarityReference.dot(col("v"), col("v")).as("composed"))
     // exact equality: both are sequential fold-left double sums
     assert(cmp.filter(col("native") =!= col("composed")).count() === 0)
   }
@@ -50,8 +50,8 @@ class ExtSpec extends SparkSpec {
       """SELECT array(1.0D, 2.0D, 3.0D) AS a,
         |       array(-2.0D, 1.0D, 0.0D) AS b""".stripMargin)
     val Row(self: Double, orth: Double) = df.select(
-      Similarity.cosine(col("a"), col("a")),
-      Similarity.cosine(col("a"), col("b"))).head()
+      SimilarityReference.cosine(col("a"), col("a")),
+      SimilarityReference.cosine(col("a"), col("b"))).head()
     assert(math.abs(self - 1.0) < 1e-12)
     assert(math.abs(orth) < 1e-12)
   }

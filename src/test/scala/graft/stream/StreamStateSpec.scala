@@ -28,7 +28,7 @@ class StreamStateSpec extends SparkSpec {
         .option("checkpointLocation", base.resolve("ck").toString)
         .trigger(Trigger.AvailableNow())
         .start()
-      try q.awaitTermination() finally q.stop()
+      try q.awaitTermination() finally if (q.isActive) q.stop()
       val progress = q.recentProgress.toSeq
       assert(progress.size >= events.map(_._1).distinct.size,
         "one progress per staged file at least")
@@ -72,14 +72,25 @@ class StreamStateSpec extends SparkSpec {
     } finally graft.TempDirs.deleteRecursively(base)
   }
 
-  test("SPARK_GRAFT_STREAM_PARTITIONS parses to a positive integer or a typed rejection") {
-    assert(IndexPipeline.parsePartitions(None) === 8)
-    assert(IndexPipeline.parsePartitions(Some("12")) === 12)
-    assert(IndexPipeline.parsePartitions(Some(" 3 ")) === 3)
+  /** The parse table of a positive-integer env var read by `parse`. */
+  private def parsesPositiveInt(name: String, parse: Option[String] => Int,
+                                default: Int): Unit = {
+    assert(parse(None) === default)
+    assert(parse(Some("12")) === 12)
+    assert(parse(Some(" 3 ")) === 3)
     Seq("abc", "", "0", "-2", "1.5", "99999999999").foreach { bad =>
-      val e = intercept[IllegalArgumentException](IndexPipeline.parsePartitions(Some(bad)))
-      assert(e.getMessage.contains("SPARK_GRAFT_STREAM_PARTITIONS"), bad)
+      val e = intercept[IllegalArgumentException](parse(Some(bad)))
+      assert(e.getMessage.contains(name), bad)
     }
+  }
+
+  test("SPARK_GRAFT_STREAM_PARTITIONS parses to a positive integer or a typed rejection") {
+    parsesPositiveInt("SPARK_GRAFT_STREAM_PARTITIONS", IndexPipeline.parsePartitions, 8)
+  }
+
+  test("SPARK_GRAFT_CPUS parses to a positive integer or a typed rejection") {
+    parsesPositiveInt("SPARK_GRAFT_CPUS", graft.GraftSession.parseCpus,
+      math.min(32, Runtime.getRuntime.availableProcessors()))
   }
 }
 
@@ -145,7 +156,7 @@ object StreamStateSpec {
       .option("checkpointLocation", ck)
       .trigger(Trigger.AvailableNow())
       .start()
-    try q.awaitTermination() finally q.stop()
+    try q.awaitTermination() finally if (q.isActive) q.stop()
     q
   }
 }
