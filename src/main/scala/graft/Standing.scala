@@ -4,7 +4,7 @@ import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.plans.logical.{LeafNode, LocalRelation, LogicalPlan}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 
 /** Standing tables: built once, written as parquet, read everywhere.
@@ -23,7 +23,8 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
   *     stale. [[frame]]: the canonicalized analyzed plan of a derived
   *     frame itself (exact plan equality — a `LocalRelation` compares its
   *     rows, which its string omits) plus the same listing over its input
-  *     files.
+  *     files; it pins the rows only when every leaf is a file relation or
+  *     a `LocalRelation` ([[canFingerprint]]).
   *   - the build runs ONCE per key: a once-only holder wins the
   *     `putIfAbsent` and every racing thread forces that holder's lazy
   *     value (Verify fans queries out in parallel).
@@ -66,10 +67,22 @@ object Standing {
     * the files its relations read. */
   def frame(df: DataFrame): Input = {
     val plan = df.queryExecution.analyzed
-    val files = plan.collect { case r: LogicalRelation => r.relation }
+    val files = plan.collectWithSubqueries { case r: LogicalRelation => r.relation }
       .collect { case h: HadoopFsRelation => h.location.inputFiles.toSeq }.flatten
     Input(Some(plan.canonicalized), listing(df.sparkSession, files.distinct))
   }
+
+  /** True when [[frame]] pins `df`'s rows: every leaf of its analyzed
+    * plan is a file relation (rows pinned by the listing) or a
+    * `LocalRelation` (rows in the plan). Any other leaf — a memory-sink
+    * table, a DSv2 table — can change its rows under an unchanged plan,
+    * so no entry may be keyed on it. */
+  def canFingerprint(df: DataFrame): Boolean =
+    df.queryExecution.analyzed.collectWithSubqueries { case l: LeafNode => l }.forall {
+      case r: LogicalRelation => r.relation.isInstanceOf[HadoopFsRelation]
+      case _: LocalRelation => true
+      case _ => false
+    }
 
   /** The entry for (`s`, `tag`, `in`), built by `build` on first use. */
   def apply[T <: AnyRef](s: SparkSession, tag: String, in: Input)(build: => T): T = {

@@ -25,31 +25,43 @@ import org.apache.spark.sql.functions._
   * Products stay < 2⁶³ to ~10⁸ docs × avgdl 10⁴ per stats scope; past
   * that, shard the stats scope (stats are per-index anyway).
   *
-  * SCALE SHAPE: `stats` with no standing key is ONE aggregate over the
-  * index frame collected to 2 + |terms| driver values (the
-  * bounded-driver-state class of SCALE.md — ES holds the identical
-  * numbers as index metadata); that inline aggregate is the COLD-START
-  * cost only. A caller that names a `standingKey` gets the 100 TB shape:
-  * a write-once parquet stats index per (session, key) — built once (two
-  * corpus scans: the 1-row corpus aggregate and the distinct-term df
-  * table), after which EVERY query's stats are two bounded reads (1
-  * corpus row + a term-pushdown-filtered |terms|-row scan of the terms
-  * table) and the query's only corpus scan is its own hit scan. This is
-  * dd7's standing-signature-index pattern applied to relevance metadata;
-  * on a live index the table is maintained incrementally like any ES
-  * segment-stats merge. `withScore` is pure per-row expressions (helper
-  * columns + integer DIV) — no shuffle, no join; ranking stays
-  * ORDER BY + LIMIT (TakeOrderedAndProject). */
+  * SCALE SHAPE: stats come from a write-once parquet stats index per
+  * analyzed frame ([[standing]]) — built once (two corpus scans: the
+  * 1-row corpus aggregate and the distinct-term df table), after which
+  * EVERY query's stats are two bounded reads (1 corpus row + a
+  * term-pushdown-filtered |terms|-row scan of the terms table) and the
+  * query's only corpus scan is its own hit scan. This is dd7's
+  * standing-signature-index pattern applied to relevance metadata (ES
+  * holds the identical numbers as index metadata); on a live index the
+  * table is maintained incrementally like any ES segment-stats merge. An
+  * index [[graft.Standing]] cannot fingerprint (a memory-sink or DSv2
+  * table) gets ONE inline aggregate per query instead ([[scan]]).
+  * [[withScore]] is pure per-row expressions (helper columns + integer
+  * DIV) — no shuffle, no join; ranking stays ORDER BY + LIMIT
+  * (TakeOrderedAndProject). */
 object Bm25 {
 
   /** Index-level stats for a query's terms: corpus size, average document
     * length ×100 (integer), and per-term document frequency. */
   final case class Stats(nDocs: Long, avgdl100: Long, df: Map[String, Long])
 
-  /** Compute stats over `index` (the UNFILTERED index frame — ES
-    * relevance uses index-level frequencies, not the hit set's). One
-    * aggregate, 2 + |terms| values fetched to the driver. */
-  def stats(index: DataFrame, toks: Column, terms: Seq[String]): Stats = {
+  /** The [[graft.Standing]] tag every stats index is built under. */
+  val standingTag = "bm25"
+
+  /** Stats for `terms` over `index` (the UNFILTERED index frame — ES
+    * relevance uses index-level frequencies, not the hit set's) analyzed
+    * by `toks`. Served from the standing stats index ([[standing]]) when
+    * [[graft.Standing]] can fingerprint the index; otherwise its plan may
+    * stay put while its rows change (a memory-sink or DSv2 table), and
+    * the only correct stats are a fresh [[scan]]. */
+  def stats(index: DataFrame, toks: Column, terms: Seq[String]): Stats =
+    if (graft.Standing.canFingerprint(index))
+      fromStanding(standing(index, toks), terms)
+    else scan(index, toks, terms)
+
+  /** The inline stats: one aggregate over `index`, 2 + |terms| values
+    * fetched to the driver. */
+  private[docs] def scan(index: DataFrame, toks: Column, terms: Seq[String]): Stats = {
     val ts = terms.distinct
     // null token arrays (null source text) contribute 0 tokens — Spark's
     // size(null) is -1 under the default conf, while the oracle's
@@ -67,32 +79,49 @@ object Bm25 {
     Stats(n, avg100, ts.zipWithIndex.map { case (t, i) => t -> r.getLong(2 + i) }.toMap)
   }
 
-  /** Append `out` = Σ over `terms` of the fixed-point BM25 of `toks`
-    * against `st`. Helper columns are added for the integer `DIV` (its
-    * operands must be named) and dropped before returning; `tag` keeps
-    * concurrent attachments (several scored clauses on one frame) from
-    * colliding. */
-  def withScore(df: DataFrame, toks: Column, terms: Seq[String], st: Stats,
-                out: String, tag: String = "b"): DataFrame = {
+  /** The fixed-point per-term score over the integer columns named `tf`
+    * and `dl`, with the term's integer idf folded in as a literal. */
+  private def termSql(idf: Long, tf: String, dl: String, avgdl100: Long): String =
+    s"""(CASE WHEN $tf > 0 THEN
+       |  (${idf}L * $tf * 22000L * ${avgdl100}L)
+       |  DIV (10000L * ${avgdl100}L * $tf
+       |       + 3000L * ${avgdl100}L + 900000L * $dl)
+       |ELSE 0L END)""".stripMargin.replace('\n', ' ')
+
+  /** Append `out` = Σ over `terms` of the fixed-point BM25 of the token
+    * arrays `fields` against `st`. One field is the plain per-field
+    * score. Several fields score their MERGED pseudo-field (r18, closing
+    * the combined_fields scoring deviation — Lucene CombinedFieldQuery's
+    * BM25F simplification with unit weights, the SIGIR'20 shape ES
+    * ships): per term, tf = Σ over fields of the field tf; dl = Σ of the
+    * field lengths; df comes from `st` (caller-blended as the max across
+    * fields — Lucene's merged-statistics rule) and avgdl100 from `st`
+    * (caller-combined as the Σ of per-field avgdl100 — the integer
+    * contract both engines replay identically). Helper columns are added
+    * for the integer `DIV` (its operands must be named) and dropped
+    * before returning; `tag` keeps concurrent attachments (several scored
+    * clauses on one frame) from colliding. Pure per-row expressions, no
+    * shuffle. */
+  def withScore(df: DataFrame, fields: Seq[Column], terms: Seq[String],
+                st: Stats, out: String, tag: String = "b"): DataFrame = {
     val ts = terms.distinct
-    if (ts.isEmpty || st.nDocs == 0L || st.avgdl100 == 0L)
+    if (ts.isEmpty || fields.isEmpty || st.nDocs == 0L || st.avgdl100 == 0L)
       return df.withColumn(out, lit(0L))
+    val p = s"_bm_${tag}_"
     var d = df
-      .withColumn(s"_bm_${tag}_ts", toks)
-      .withColumn(s"_bm_${tag}_dl", size(col(s"_bm_${tag}_ts")).cast("long"))
+    fields.zipWithIndex.foreach { case (t, f) => d = d.withColumn(s"${p}ts$f", t) }
+    val fCols = fields.indices.map(f => col(s"${p}ts$f"))
+    d = d.withColumn(s"${p}dl", fCols.map(c => size(c).cast("long")).reduce(_ + _))
     val parts = ts.zipWithIndex.map { case (t, i) =>
-      d = d.withColumn(s"_bm_${tag}_tf$i",
-        size(filter(col(s"_bm_${tag}_ts"), x => x === lit(t))).cast("long"))
-      val idf = st.nDocs - st.df.getOrElse(t, 0L)
-      s"""(CASE WHEN _bm_${tag}_tf$i > 0 THEN
-         |  (${idf}L * _bm_${tag}_tf$i * 22000L * ${st.avgdl100}L)
-         |  DIV (10000L * ${st.avgdl100}L * _bm_${tag}_tf$i
-         |       + 3000L * ${st.avgdl100}L + 900000L * _bm_${tag}_dl)
-         |ELSE 0L END)""".stripMargin.replace('\n', ' ')
+      d = d.withColumn(s"${p}tf$i",
+        fCols.map(c => size(filter(c, x => x === lit(t))).cast("long"))
+          .reduce(_ + _))
+      termSql(st.nDocs - st.df.getOrElse(t, 0L), s"${p}tf$i", s"${p}dl",
+        st.avgdl100)
     }
     d.withColumn(out, expr(parts.mkString(" + ")))
-      .drop((s"_bm_${tag}_ts" +: s"_bm_${tag}_dl" +:
-        ts.indices.map(i => s"_bm_${tag}_tf$i")): _*)
+      .drop((fields.indices.map(f => s"${p}ts$f") :+ s"${p}dl") ++
+        ts.indices.map(i => s"${p}tf$i"): _*)
   }
 
   /** Append `out` = the fixed-point BM25 of the PHRASE `terms` as one
@@ -123,71 +152,27 @@ object Bm25 {
     df.withColumn(s"_bmp_${tag}_ts", toks)
       .withColumn(s"_bmp_${tag}_dl", size(col(s"_bmp_${tag}_ts")).cast("long"))
       .withColumn(s"_bmp_${tag}_tf", tfp)
-      .withColumn(out, expr(
-        s"""(CASE WHEN _bmp_${tag}_tf > 0 THEN
-           |  (${idfSum}L * _bmp_${tag}_tf * 22000L * ${st.avgdl100}L)
-           |  DIV (10000L * ${st.avgdl100}L * _bmp_${tag}_tf
-           |       + 3000L * ${st.avgdl100}L + 900000L * _bmp_${tag}_dl)
-           |ELSE 0L END)""".stripMargin.replace('\n', ' ')))
+      .withColumn(out, expr(termSql(idfSum, s"_bmp_${tag}_tf", s"_bmp_${tag}_dl",
+        st.avgdl100)))
       .drop(s"_bmp_${tag}_ts", s"_bmp_${tag}_dl", s"_bmp_${tag}_tf")
   }
 
-  /** Append `out` = the fixed-point BM25 of `terms` against the MERGED
-    * pseudo-field of `toksFields` (r18, closing the combined_fields
-    * scoring deviation — Lucene CombinedFieldQuery's BM25F
-    * simplification with unit weights, the SIGIR'20 shape ES ships):
-    * per term, tf = Σ over fields of the field tf; dl = Σ of the field
-    * lengths; df comes from `st` (caller-blended as the max across
-    * fields — Lucene's merged-statistics rule) and avgdl100 from `st`
-    * (caller-combined as the Σ of per-field avgdl100 — the integer
-    * contract both engines replay identically). Pure per-row
-    * expressions, no shuffle. */
-  def withCombinedScore(df: DataFrame, toksFields: Seq[Column],
-                        terms: Seq[String], st: Stats, out: String,
-                        tag: String = "c"): DataFrame = {
-    val ts = terms.distinct
-    if (ts.isEmpty || st.nDocs == 0L || st.avgdl100 == 0L || toksFields.isEmpty)
-      return df.withColumn(out, lit(0L))
-    var d = df
-    toksFields.zipWithIndex.foreach { case (t, f) =>
-      d = d.withColumn(s"_bmc_${tag}_ts$f", t) }
-    val fCols = toksFields.indices.map(f => col(s"_bmc_${tag}_ts$f"))
-    d = d.withColumn(s"_bmc_${tag}_dl",
-      fCols.map(c => size(c).cast("long")).reduce(_ + _))
-    val parts = ts.zipWithIndex.map { case (t, i) =>
-      d = d.withColumn(s"_bmc_${tag}_tf$i",
-        fCols.map(c => size(filter(c, x => x === lit(t))).cast("long"))
-          .reduce(_ + _))
-      val idf = st.nDocs - st.df.getOrElse(t, 0L)
-      s"""(CASE WHEN _bmc_${tag}_tf$i > 0 THEN
-         |  (${idf}L * _bmc_${tag}_tf$i * 22000L * ${st.avgdl100}L)
-         |  DIV (10000L * ${st.avgdl100}L * _bmc_${tag}_tf$i
-         |       + 3000L * ${st.avgdl100}L + 900000L * _bmc_${tag}_dl)
-         |ELSE 0L END)""".stripMargin.replace('\n', ' ')
-    }
-    d.withColumn(out, expr(parts.mkString(" + ")))
-      .drop((toksFields.indices.map(f => s"_bmc_${tag}_ts$f") :+
-        s"_bmc_${tag}_dl") ++ ts.indices.map(i => s"_bmc_${tag}_tf$i"): _*)
-  }
-
   // ------------------------------------------------ standing stats index
-  /** Build (once per session+key+corpus) the standing stats index for one
-    * (corpus, analyzed field): `corpus` holds the 1-row (n, tdl);
-    * `terms` holds one (term, df) row per DISTINCT corpus token. KEY
-    * CONTRACT: the key names a logical (corpus, analyzer) pair — two
-    * analyzers over one column are two different df tables. Correctness
-    * does NOT rest on key discipline alone: the entry is a
-    * [[graft.Standing]] keyed on the analyzed frame itself (its canonical
-    * plan, which carries the corpus and the analyzer expression, plus its
-    * input-file listing), so a reused key against a different or mutated
-    * corpus triggers a fresh build instead of silently serving stale
-    * stats. The same frame re-derived query-to-query (e.g. a fresh parquet
-    * read of the same path) canonicalizes identically, so write-once still
-    * holds (pinned in Bm25Spec). Returns the (corpus, terms) tables. */
-  def standing(index: DataFrame, toks: Column, key: String): (DataFrame, DataFrame) = {
+  /** Build (once per session and analyzed frame) the standing stats index
+    * for one (corpus, analyzed field): `corpus` holds the 1-row (n, tdl);
+    * `terms` holds one (term, df) row per DISTINCT corpus token. The
+    * entry is a [[graft.Standing]] keyed on the analyzed frame itself:
+    * its canonical plan carries the corpus and the analyzer expression,
+    * and its input-file listing catches a corpus rewritten in place, so
+    * a different field, analyzer or corpus is a fresh build, never stale
+    * stats. The same frame re-derived query-to-query (e.g. a fresh
+    * parquet read of the same path) canonicalizes identically, so
+    * write-once still holds (pinned in Bm25Spec). Returns the (corpus,
+    * terms) tables. */
+  private[docs] def standing(index: DataFrame, toks: Column): (DataFrame, DataFrame) = {
     val s = index.sparkSession
     val an = index.select(toks.as("_ts"))
-    graft.Standing(s, s"bm25-$key", graft.Standing.frame(an)) {
+    graft.Standing(s, standingTag, graft.Standing.frame(an)) {
       // null token arrays (null source text): 0 tokens for tdl (the
       // inline-stats guard), no term rows (explode of null emits none —
       // the same docs array_contains scores 0 for every term)
@@ -204,7 +189,7 @@ object Bm25 {
   /** Stats for `terms` from the standing tables: a 1-row read + a
     * term-pushdown-filtered read of ≤ |terms| rows. Terms absent from the
     * corpus get df = 0, identical to the inline aggregate. */
-  def statsFromStanding(tables: (DataFrame, DataFrame), terms: Seq[String]): Stats = {
+  private def fromStanding(tables: (DataFrame, DataFrame), terms: Seq[String]): Stats = {
     val ts = terms.distinct
     val c = tables._1.collect().head
     val n = c.getLong(0)
@@ -213,15 +198,6 @@ object Bm25 {
       .filter(col("term").isin(ts: _*))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     Stats(n, avg100, ts.map(t => t -> dfs.getOrElse(t, 0L)).toMap)
-  }
-
-  /** `stats` through the standing index when `standingKey` names one
-    * (building it on first use), else the inline one-scan aggregate. */
-  def stats(index: DataFrame, toks: Column, terms: Seq[String],
-            standingKey: Option[String]): Stats = standingKey match {
-    case Some(k) =>
-      statsFromStanding(standing(index, toks, k), terms)
-    case None => stats(index, toks, terms)
   }
 
   /** The DuckDB twin of the per-term score, for oracle SQL: `tf`, `dl`,

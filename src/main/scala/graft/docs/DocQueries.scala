@@ -9600,12 +9600,12 @@ object DocQueries {
         |   "should": [{"match": {"text": "vector merge window"}}],
         |   "filter": [{"range": {"n_chars": {"gte": 150}}}]}},
         | "_source": ["objectId"], "size": 25}""".stripMargin
-    // statsKey: stats ride the standing per-(corpus, field) parquet
-    // stats table (Bm25.standing) — built once per session, after which
-    // this query's ONLY corpus scan is its own hit scan
+    // stats ride the standing stats index of the analyzed corpus
+    // (Bm25.standing) — built once per session, after which this
+    // query's ONLY corpus scan is its own hit scan
     SearchExec.search(docs, "doc", body,
       docs.schema("doc").dataType.asInstanceOf[org.apache.spark.sql.types.StructType],
-      similarity = "bm25", statsKey = Some(s"dsl:$d"))
+      similarity = "bm25")
   }
 
   private val d259Sql = {
@@ -9648,8 +9648,7 @@ object DocQueries {
         || SORT _score DESC, doc_id ASC
         || LIMIT 30""".stripMargin
     Esql.run(Map("documents" ->
-      s.read.parquet(s"$d/documents.parquet")), q, scoreMode = "bm25",
-      statsKey = Some(s"esql:$d"))
+      s.read.parquet(s"$d/documents.parquet")), q, scoreMode = "bm25")
   }
 
   private val d260Sql = {
@@ -9704,7 +9703,7 @@ object DocQueries {
         | "_source": ["objectId"], "size": 15}""".stripMargin
     SearchExec.search(docs, "doc", body,
       docs.schema("doc").dataType.asInstanceOf[org.apache.spark.sql.types.StructType],
-      similarity = "bm25", statsKey = Some(s"dsl:$d"))
+      similarity = "bm25")
   }
 
   private val d263Sql = {
@@ -9766,7 +9765,7 @@ object DocQueries {
         | "size": 25, "_source": ["objectId"]}""".stripMargin
     SearchExec.search(docs, "doc", body,
       docs.schema("doc").dataType.asInstanceOf[org.apache.spark.sql.types.StructType],
-      similarity = "bm25", statsKey = Some(s"dsl:$d"))
+      similarity = "bm25")
   }
 
   private val d269Sql = {
@@ -9817,7 +9816,7 @@ object DocQueries {
         | "size": 20, "_source": ["objectId"]}""".stripMargin
     SearchExec.search(docs, "doc", body,
       docs.schema("doc").dataType.asInstanceOf[org.apache.spark.sql.types.StructType],
-      similarity = "bm25", statsKey = Some(s"dsl:$d"))
+      similarity = "bm25")
   }
 
   private val d270Sql = {
@@ -9868,7 +9867,7 @@ object DocQueries {
         | "size": 25, "_source": ["objectId"]}""".stripMargin
     SearchExec.search(docs, "doc", body,
       docs.schema("doc").dataType.asInstanceOf[org.apache.spark.sql.types.StructType],
-      similarity = "bm25", statsKey = Some(s"dsl:$d"))
+      similarity = "bm25")
   }
 
   private val d271Sql = {
@@ -9916,7 +9915,7 @@ object DocQueries {
         | "_source": ["objectId"], "size": 25}""".stripMargin
     SearchExec.search(docs, "doc", body,
       docs.schema("doc").dataType.asInstanceOf[org.apache.spark.sql.types.StructType],
-      similarity = "bm25", statsKey = Some(s"dsl:$d"))
+      similarity = "bm25")
   }
 
   private val d276Sql = {
@@ -9963,7 +9962,7 @@ object DocQueries {
         | "_source": ["objectId"], "size": 25}""".stripMargin
     SearchExec.search(docs, "doc", body,
       docs.schema("doc").dataType.asInstanceOf[org.apache.spark.sql.types.StructType],
-      similarity = "bm25", statsKey = Some(s"dsl:$d"))
+      similarity = "bm25")
   }
 
   private val d277Sql = {
@@ -10017,7 +10016,7 @@ object DocQueries {
         | "_source": ["objectId"], "size": 30}""".stripMargin
     SearchExec.search(docs, "doc", body,
       docs.schema("doc").dataType.asInstanceOf[org.apache.spark.sql.types.StructType],
-      similarity = "bm25", statsKey = Some(s"dsl:$d"))
+      similarity = "bm25")
   }
 
   private val d278Sql = {
@@ -10080,7 +10079,7 @@ object DocQueries {
         | "_source": ["objectId"], "size": 30}""".stripMargin
     SearchExec.search(docs, "doc", body,
       docs.schema("doc").dataType.asInstanceOf[org.apache.spark.sql.types.StructType],
-      similarity = "bm25", statsKey = Some(s"dsl:$d"))
+      similarity = "bm25")
   }
 
   private val d286Sql = {
@@ -10157,7 +10156,7 @@ object DocQueries {
         | "_source": ["objectId"], "size": 25}""".stripMargin
     SearchExec.search(docs, "doc", body,
       docs.schema("doc").dataType.asInstanceOf[org.apache.spark.sql.types.StructType],
-      similarity = "bm25", statsKey = Some(s"dsl:$d"))
+      similarity = "bm25")
   }
 
   private val d287Sql = {
@@ -10285,7 +10284,7 @@ object DocQueries {
         | "_source": ["objectId"], "size": 30}""".stripMargin
     SearchExec.search(docs, "doc", body,
       docs.schema("doc").dataType.asInstanceOf[org.apache.spark.sql.types.StructType],
-      similarity = "bm25", statsKey = Some(s"dsl:$d"))
+      similarity = "bm25")
   }
 
   private val d291Sql = {
@@ -10403,7 +10402,7 @@ object DocQueries {
         | "_source": ["objectId"], "size": 30}""".stripMargin
     SearchExec.search(docs, "doc", body,
       docs.schema("doc").dataType.asInstanceOf[org.apache.spark.sql.types.StructType],
-      similarity = "bm25", statsKey = Some(s"dsl:$d"))
+      similarity = "bm25")
   }
 
   private val d293Sql = {

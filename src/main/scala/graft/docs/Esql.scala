@@ -278,10 +278,6 @@ object Esql {
   private val bm25Stats =
     new ThreadLocal[scala.collection.mutable.Map[(String, Seq[String]), Bm25.Stats]]
 
-  /** Standing-stats-table key prefix for this run (run's `statsKey`
-    * argument); absent = inline per-query stats aggregates (cold start). */
-  private val bm25StatsKey = new ThreadLocal[String]
-
   /** Corpus dir whose STANDING IVF index (s15, [[graft.ext.Similarity]])
     * serves `WHERE KNN(...)` probes this run (run's `annDir` argument);
     * absent = KNN stays a loud named reject (a k-nearest predicate
@@ -1186,21 +1182,16 @@ object Esql {
     * default — integer matched-term counts, oracle-exact, d251) or
     * "bm25" (fixed-point BM25 with index-level stats, [[Bm25]]) — the
     * engine-level analogue of ES's per-index similarity setting (ES|QL
-    * itself has no syntax for it; ES is always BM25). `statsKey` (bm25
-    * mode only) names a standing stats table per (corpus, field)
-    * ([[Bm25.standing]]): first use builds it, every later bm25 query
-    * reads its bounded rows instead of aggregating the corpus. */
+    * itself has no syntax for it; ES is always BM25). */
   def run(sources: Map[String, DataFrame], query: String,
           enrich: Map[String, (DataFrame, String)] = Map.empty,
           scoreMode: String = "terms",
-          statsKey: Option[String] = None,
           annDir: Option[String] = None): DataFrame = {
     require(scoreMode == "terms" || scoreMode == "bm25",
       s"esql: scoreMode must be terms or bm25, got $scoreMode")
     curSchema.remove() // no stale frame schema from a previous query (QSTR)
     bm25Index.remove() // no stale stats frame either (also cleared in
     bm25Stats.remove() // the FROM path's finally; TS/ROW never set them)
-    bm25StatsKey.remove()
     annDirTL.remove()
     annDir.foreach(annDirTL.set)
     // split the token stream on top-level pipes (paren-aware: pipes
@@ -1286,13 +1277,9 @@ object Esql {
     // semantic (df/avgdl are index metadata, not hit-set statistics).
     // Cleared after the plan is built: the ThreadLocal would otherwise pin
     // the corpus frame on a pooled thread indefinitely.
-    if (scoreMode == "bm25") {
-      bm25Index.set(base)
-      statsKey.foreach(k => bm25StatsKey.set(k))
-    }
+    if (scoreMode == "bm25") bm25Index.set(base)
     try pipe(base, segments.tail, sources, enrich)
-    finally { bm25Index.remove(); bm25Stats.remove(); bm25StatsKey.remove()
-              annDirTL.remove() }
+    finally { bm25Index.remove(); bm25Stats.remove(); annDirTL.remove() }
   }
 
   /** Apply pipe segments to a running frame — the command interpreter,
@@ -1525,13 +1512,12 @@ object Esql {
                     val allTerms = pooled(f.toString)
                     f.toString -> memo.getOrElseUpdate((f.toString, allTerms),
                       Bm25.stats(index,
-                        graft.ext.TextAnalysis.analyze(compile(f)), allTerms,
-                        Option(bm25StatsKey.get()).map(k => s"$k#${f.toString}")))
+                        graft.ext.TextAnalysis.analyze(compile(f)), allTerms))
                   }.toMap
                 matches.zipWithIndex.foreach { case ((f, q), i) =>
                   val terms = graft.ext.TextAnalysis.analyzeQuery(q)
                   cur = Bm25.withScore(cur,
-                    graft.ext.TextAnalysis.analyze(compile(f)), terms,
+                    Seq(graft.ext.TextAnalysis.analyze(compile(f))), terms,
                     fieldStats(f.toString), s"_bm25_$i", s"w$i")
                   add = add + col(s"_bm25_$i")
                 }

@@ -78,8 +78,7 @@ object SearchExec {
     */
   def search(docs0: DataFrame, docCol: String,
              body0: String, schema0: org.apache.spark.sql.types.StructType,
-             similarity: String = "boolean",
-             statsKey: Option[String] = None): DataFrame = {
+             similarity: String = "boolean"): DataFrame = {
     require(similarity == "boolean" || similarity == "bm25",
       s"similarity must be boolean or bm25, got $similarity")
     // runtime_mappings splice computed fields into the document struct
@@ -116,7 +115,7 @@ object SearchExec {
     // is computed for the filter even when no sort reads it.
     val hits = {
       val scored = if (needScore || b.minScore.nonEmpty) {
-        if (similarity == "bm25") bm25Scored(hits0, docs, doc, b, statsKey)
+        if (similarity == "bm25") bm25Scored(hits0, docs, doc, b)
         else hits0.withColumn("score", SearchQuery.scoreCol(b.parsed, doc))
       } else hits0
       val floored = b.minScore.fold(scored)(ms => scored.filter(col("score") >= lit(ms)))
@@ -259,8 +258,7 @@ object SearchExec {
         val win2 =
           if (rsClauses.isEmpty) window.withColumn("_rsc", lit(1.0))
           else if (similarity == "bm25")
-            bm25ClauseScore(window, docs, doc, rsClauses, "_rsc", "r",
-              statsKey)
+            bm25ClauseScore(window, docs, doc, rsClauses, "_rsc", "r")
           else window.withColumn("_rsc",
             SearchQuery.scoreCol(rs.parsed, doc).cast("double"))
         win2.withColumn("score",
@@ -379,8 +377,7 @@ object SearchExec {
     * onto it, and the pinned ladder rides above it (10¹⁵ rung — the
     * fixed-point scores outgrow the boolean 10⁹ ladder near 10⁸ docs). */
   private def bm25Scored(hits: DataFrame, index: DataFrame, doc: Column,
-                         b: SearchQuery.FullBody,
-                         statsKey: Option[String]): DataFrame = {
+                         b: SearchQuery.FullBody): DataFrame = {
     val p = b.parsed
     // a body whose top level is a bare match (or the inner query of
     // script_score / function_score / pinned organic is one) carries no
@@ -411,7 +408,7 @@ object SearchExec {
       // are similarity-independent)
       hits.withColumn("score", SearchQuery.scoreCol(p, doc))
     else
-      bm25ClauseScore(hits, index, doc, clauses, "_bm25_base", "s", statsKey)
+      bm25ClauseScore(hits, index, doc, clauses, "_bm25_base", "s")
         .withColumn("score",
           SearchQuery.scoreCol(p, doc, Some(col("_bm25_base"))))
         .drop("_bm25_base")
@@ -475,27 +472,23 @@ object SearchExec {
     }
   }
 
-  /** Attach `out` = the bm25-mode relevance of `shoulds` to `df`: each
-    * clause that is a whitespace-analyzed `match` desugar — a
-    * [[SearchQuery.TermMatch]], or an Or/And of TermMatch on one path —
-    * contributes the fixed-point BM25 of its terms against that field;
-    * any other clause keeps its 1-point satisfied score (mixing
-    * constant-score clauses into a BM25 sum is exactly what ES's bool
-    * query does). Stats come from the UNFILTERED `index` — through the
-    * standing stats table when `statsKey` names one ([[Bm25.standing]]),
-    * else one inline bounded aggregate per distinct field path (all
-    * clauses' terms for a path pool into a single scan). */
+  /** Attach `out` = the bm25-mode relevance of `clauses` to `df`, summed
+    * over the clauses: a match desugar scores the fixed-point BM25 of its
+    * terms against its field, a phrase its phrase score, dis_max /
+    * cross_fields / combined_fields fold their legs, and any other clause
+    * keeps its 1-point satisfied score (mixing constant-score clauses
+    * into a BM25 sum is exactly what ES's bool query does). Stats are
+    * [[Bm25.stats]] of the UNFILTERED `index`, one fetch per distinct
+    * field path. */
   private def bm25ClauseScore(df: DataFrame, index: DataFrame, doc: Column,
                               clauses: Seq[SearchQuery], out: String,
-                              tag: String,
-                              statsKey: Option[String]): DataFrame = {
+                              tag: String): DataFrame = {
     import graft.docs.{SearchQuery => SQ}
     def toks(path: Seq[String]): Column =
       split(lower(field(doc, path)), "\\s+")
     // ONE bounded stats fetch per distinct field path — all clauses'
     // terms for a path pool, INCLUDING legs nested inside DisMax (k
-    // same-field clauses must not cost k scans); the standing key is per
-    // (corpus, field) since df tables are analyzer- and field-specific
+    // same-field clauses must not cost k scans)
     def matchLegs(q: SearchQuery): Seq[(Seq[String], Seq[String])] = q match {
       case SQ.DisMax(legs, _) => legs.flatMap(matchLegs)
       // cross_fields/combined_fields need every (field, full term list)
@@ -507,8 +500,7 @@ object SearchExec {
     }
     val statsByPath = clauses.flatMap(matchLegs).groupBy(_._1)
       .map { case (pa, xs) =>
-        pa -> Bm25.stats(index, toks(pa), xs.flatMap(_._2).distinct,
-          statsKey.map(k => s"$k#${pa.mkString(".")}"))
+        pa -> Bm25.stats(index, toks(pa), xs.flatMap(_._2).distinct)
       }
     var cur = df
     var nextId = 0
@@ -524,7 +516,7 @@ object SearchExec {
       case Some((path, terms)) =>
         val name = s"_bm25_${tag}_c$nextId"
         nextId += 1
-        cur = Bm25.withScore(cur, toks(path), terms, statsByPath(path),
+        cur = Bm25.withScore(cur, Seq(toks(path)), terms, statsByPath(path),
           name, s"$tag$nextId")
         bmCols += name
         col(name)
@@ -548,7 +540,7 @@ object SearchExec {
             Bm25.withPhraseScore(cur, toks(path), terms, statsByPath(path),
               name, s"$tag$nextId")
           case _ =>
-            Bm25.withScore(cur, toks(path), terms, statsByPath(path),
+            Bm25.withScore(cur, Seq(toks(path)), terms, statsByPath(path),
               name, s"$tag$nextId")
         }
         bmCols += name
@@ -567,16 +559,16 @@ object SearchExec {
           // unit weights — r18): per term tf = Σ field tfs, dl = Σ field
           // lengths, df = max across fields, avgdl100 = Σ per-field
           // avgdl100 — ONE fixed-point score over the merged field
-          // ([[Bm25.withCombinedScore]]); contrast the cross_fields
-          // branch below, which scores per-field LEGS with blended df
-          // and takes the best.
+          // ([[Bm25.withScore]] over every field); contrast the
+          // cross_fields branch below, which scores per-field LEGS with
+          // blended df and takes the best.
           val dfb: Map[String, Long] = terms.map(t =>
             t -> paths.map(p => statsByPath(p).df.getOrElse(t, 0L)).max).toMap
           val n = statsByPath(paths.head).nDocs
           val a100c = paths.map(p => statsByPath(p).avgdl100).sum
           val name = s"_bm25_${tag}_c$nextId"
           nextId += 1
-          cur = Bm25.withCombinedScore(cur, paths.map(toks), terms,
+          cur = Bm25.withScore(cur, paths.map(toks), terms,
             Bm25.Stats(n, a100c, dfb), name, s"$tag$nextId")
           bmCols += name
           col(name)
@@ -600,7 +592,7 @@ object SearchExec {
               val blended = Bm25.Stats(st.nDocs, st.avgdl100, Map(t -> dfb(t)))
               val name = s"_bm25_${tag}_c$nextId"
               nextId += 1
-              cur = Bm25.withScore(cur, toks(p), Seq(t), blended,
+              cur = Bm25.withScore(cur, Seq(toks(p)), Seq(t), blended,
                 name, s"$tag$nextId")
               bmCols += name
               col(name)

@@ -752,174 +752,126 @@ object SearchQuery {
     }
   }
 
-  /** Recursive-descent parser for the script_score Painless subset (see
-    * [[ScriptExpr]]): standard `+ -` / `* /` precedence, parentheses,
-    * unary minus, `doc['field'].value`, `_score`, `Math.log/sqrt/abs`.
-    * Field paths validate against the schema at parse (array-crossing
-    * fields are rejected — a per-element score needs a nested context
-    * this wrapper does not carry). */
-  private[docs] def parseScript(src: String,
-                                schema: org.apache.spark.sql.types.StructType): ScriptExpr = {
-    val s = src
+  /** A parse position over a script source; errors carry `door` (the
+    * script door's name), the offset and the whole source. */
+  private final class ScriptCursor(val s: String, door: String) {
     var i = 0
     def ws(): Unit = while (i < s.length && s(i).isWhitespace) i += 1
-    def peek: Char = if (i < s.length) s(i) else '\u0000'
+    def atEnd: Boolean = i >= s.length
+    def peek: Option[Char] = if (atEnd) None else Some(s(i))
+    /** What the cursor sees, for error messages. */
+    def got: String = peek.fold("end of input")(c => s"'$c'")
+    /** Consume `lit` when the input continues with it. */
+    def eat(lit: String): Boolean =
+      s.startsWith(lit, i) && { i += lit.length; true }
+    def expect(c: Char, what: String): Unit =
+      if (peek.contains(c)) i += 1 else fail(s"expected $what, got $got")
     def fail(msg: String): Nothing =
-      throw new IllegalArgumentException(s"script_score: $msg at offset $i in: $src")
-    def expr(): ScriptExpr = {
-      var l = term(); ws()
-      while (peek == '+' || peek == '-') {
-        val op = s(i); i += 1; val r = term(); l = SBin(op, l, r); ws()
+      throw new IllegalArgumentException(s"$door: $msg at offset $i in: $s")
+  }
+
+  /** Recursive-descent parser shared by the script doors: standard
+    * `+ -` / `* /` precedence, parentheses, unary minus, number literals,
+    * `Math.<fn>` over `fns` (max/min/pow take two arguments, the rest
+    * one), and the door's own references — `leaf` consumes one at the
+    * cursor, or returns None when none starts there. */
+  private def parseArith(src: String, door: String, fns: Seq[String])
+                        (leaf: ScriptCursor => Option[ScriptExpr]): ScriptExpr = {
+    val c = new ScriptCursor(src, door)
+    // a left-associative chain of `operand`s joined by any of `ops`
+    def chain(ops: String, operand: () => ScriptExpr): ScriptExpr = {
+      var l = operand(); c.ws()
+      while (c.peek.exists(ops.contains(_))) {
+        val op = c.s(c.i); c.i += 1; l = SBin(op, l, operand()); c.ws()
       }
       l
     }
-    def term(): ScriptExpr = {
-      var l = factor(); ws()
-      while (peek == '*' || peek == '/') {
-        val op = s(i); i += 1; val r = factor(); l = SBin(op, l, r); ws()
-      }
-      l
-    }
+    def expr(): ScriptExpr = chain("+-", () => term())
+    def term(): ScriptExpr = chain("*/", () => factor())
     def number(): ScriptExpr = {
-      val st = i
-      while (i < s.length && (s(i).isDigit || s(i) == '.')) i += 1
-      val raw = s.substring(st, i)
-      // Malformed literals (`1.2.3`, `1.`) must raise the parser's loud
+      val st = c.i
+      while (c.peek.exists(ch => ch.isDigit || ch == '.')) c.i += 1
+      val raw = src.substring(st, c.i)
+      // Malformed literals (`1.2.3`) must raise the parser's loud
       // located error, not a bare NumberFormatException.
       try SNum(raw.toDouble)
-      catch { case _: NumberFormatException => fail(s"bad number literal '$raw'") }
-    }
-    def docRef(): ScriptExpr = {
-      i += 4 // "doc["
-      val q0 = peek
-      if (q0 != '\'' && q0 != '"') fail("doc[ needs a quoted field name")
-      i += 1
-      val st = i
-      while (i < s.length && s(i) != q0) i += 1
-      if (i >= s.length) fail("unterminated doc[ field name")
-      val name = s.substring(st, i); i += 1
-      if (!s.startsWith("].value", i)) fail("doc['…'] must be followed by ].value")
-      i += "].value".length
-      val p = name.stripSuffix(".keyword").split('.').toSeq
-      val (arr, _) = splitArrayPath(p, schema)
-      require(arr.isEmpty,
-        s"script_score doc field $name crosses array ${arr.mkString(".")} — not implemented")
-      SField(p)
+      catch { case _: NumberFormatException => c.fail(s"bad number literal '$raw'") }
     }
     def call(): ScriptExpr = {
-      i += 5 // "Math."
-      val st = i
-      while (i < s.length && s(i).isLetter) i += 1
-      val fn = s.substring(st, i)
-      val unary = Set("log", "sqrt", "abs")(fn)
-      val binary = Set("max", "min", "pow")(fn)
-      require(unary || binary,
-        s"script_score: unsupported Math function $fn (log/sqrt/abs/max/min/pow)")
-      ws(); if (peek != '(') fail(s"Math.$fn needs ("); i += 1
-      val a = expr(); ws()
-      if (unary) {
-        if (peek != ')') fail("expected )"); i += 1
-        SCall(fn, a)
-      } else {
-        if (peek != ',') fail(s"Math.$fn needs two arguments"); i += 1
-        val b = expr(); ws(); if (peek != ')') fail("expected )"); i += 1
+      val st = c.i
+      while (c.peek.exists(_.isLetter)) c.i += 1
+      val fn = src.substring(st, c.i)
+      if (!fns.contains(fn)) c.fail(s"unsupported Math.$fn (${fns.mkString("/")})")
+      c.ws(); c.expect('(', s"( after Math.$fn")
+      val a = expr(); c.ws()
+      if (Set("max", "min", "pow")(fn)) {
+        c.expect(',', s"a second Math.$fn argument")
+        val b = expr(); c.ws(); c.expect(')', ")")
         SCall2(fn, a, b)
-      }
+      } else { c.expect(')', ")"); SCall(fn, a) }
     }
     def factor(): ScriptExpr = {
-      ws()
-      peek match {
-        case '(' =>
-          i += 1; val e = expr(); ws()
-          if (peek != ')') fail("expected )")
-          i += 1; e
-        case '-' => i += 1; SBin('-', SNum(0), factor())
-        case c if c.isDigit => number()
-        case '_' if s.startsWith("_score", i) => i += "_score".length; SScore
-        case 'd' if s.startsWith("doc[", i) => docRef()
-        case 'M' if s.startsWith("Math.", i) => call()
-        case other => fail(s"unexpected '$other'")
+      c.ws()
+      c.peek match {
+        case Some('(') =>
+          c.i += 1; val e = expr(); c.ws(); c.expect(')', ")"); e
+        case Some('-') => c.i += 1; SBin('-', SNum(0), factor())
+        case Some(d) if d.isDigit => number()
+        case _ if c.eat("Math.") => call()
+        case _ => leaf(c).getOrElse(c.fail(s"unexpected ${c.got}"))
       }
     }
-    val e = expr(); ws()
-    if (i != s.length) fail(s"trailing input '${s.substring(i)}'")
+    val e = expr(); c.ws()
+    if (!c.atEnd) c.fail(s"trailing input '${src.substring(c.i)}'")
     e
   }
 
-  /** Recursive-descent parser for bucket_script / bucket_selector
-    * arithmetic — the same grammar as [[parseScript]] with `params.<p>`
-    * identifiers in place of `doc[…].value` (`_score` and doc refs do
-    * not exist at the bucket grain and fail the parse). Referenced
-    * params must appear in `params` (the buckets_path keys) — a typo'd
-    * param is a loud error, not a null column. */
-  private[docs] def parseParamsScript(src: String, params: Set[String]): ScriptExpr = {
-    val s = src
-    var i = 0
-    def ws(): Unit = while (i < s.length && s(i).isWhitespace) i += 1
-    def peek: Char = if (i < s.length) s(i) else ' '
-    def fail(msg: String): Nothing =
-      throw new IllegalArgumentException(s"bucket script: $msg at offset $i in: $src")
-    def expr(): ScriptExpr = {
-      var l = term(); ws()
-      while (peek == '+' || peek == '-') {
-        val op = s(i); i += 1; val r = term(); l = SBin(op, l, r); ws()
-      }
-      l
-    }
-    def term(): ScriptExpr = {
-      var l = factor(); ws()
-      while (peek == '*' || peek == '/') {
-        val op = s(i); i += 1; val r = factor(); l = SBin(op, l, r); ws()
-      }
-      l
-    }
-    def number(): ScriptExpr = {
-      val st = i
-      while (i < s.length && (s(i).isDigit || s(i) == '.')) i += 1
-      val raw = s.substring(st, i)
-      try SNum(raw.toDouble)
-      catch { case _: NumberFormatException => fail(s"bad number literal '$raw'") }
-    }
-    def paramRef(): ScriptExpr = {
-      i += "params.".length
-      val st = i
-      while (i < s.length && (s(i).isLetterOrDigit || s(i) == '_')) i += 1
-      val name = s.substring(st, i)
-      if (name.isEmpty) fail("params. needs a name")
-      if (!params(name)) fail(s"params.$name is not in buckets_path (${params.mkString(", ")})")
-      SField(Seq(name))
-    }
-    def call(): ScriptExpr = {
-      i += 5 // "Math."
-      val st = i
-      while (i < s.length && s(i).isLetter) i += 1
-      val fn = s.substring(st, i)
-      if (!Set("log", "sqrt", "abs")(fn)) fail(s"unsupported Math.$fn (log/sqrt/abs)")
-      ws()
-      if (peek != '(') fail(s"Math.$fn needs (")
-      i += 1; val a = expr(); ws()
-      if (peek != ')') fail("expected )")
-      i += 1
-      SCall(fn, a)
-    }
-    def factor(): ScriptExpr = {
-      ws()
-      peek match {
-        case '(' =>
-          i += 1; val e = expr(); ws()
-          if (peek != ')') fail("expected )")
-          i += 1; e
-        case '-' => i += 1; SBin('-', SNum(0), factor())
-        case c if c.isDigit => number()
-        case 'p' if s.startsWith("params.", i) => paramRef()
-        case 'M' if s.startsWith("Math.", i) => call()
-        case other => fail(s"unexpected '$other'")
+  /** The script_score Painless subset (see [[ScriptExpr]]) over
+    * [[parseArith]]: leaves are `doc['field'].value` and `_score`, and
+    * Math offers log/sqrt/abs/max/min/pow. Field paths validate against
+    * the schema at parse (array-crossing fields are rejected — a
+    * per-element score needs a nested context this wrapper does not
+    * carry). */
+  private[docs] def parseScript(src: String,
+                                schema: org.apache.spark.sql.types.StructType): ScriptExpr =
+    parseArith(src, "script_score", Seq("log", "sqrt", "abs", "max", "min", "pow")) { c =>
+      if (c.eat("_score")) Some(SScore)
+      else if (!c.eat("doc[")) None
+      else {
+        val q0 = c.peek.filter(q => q == '\'' || q == '"')
+          .getOrElse(c.fail("doc[ needs a quoted field name"))
+        c.i += 1
+        val st = c.i
+        while (c.peek.exists(_ != q0)) c.i += 1
+        if (c.atEnd) c.fail("unterminated doc[ field name")
+        val name = src.substring(st, c.i); c.i += 1
+        if (!c.eat("].value")) c.fail("doc['…'] must be followed by ].value")
+        val p = name.stripSuffix(".keyword").split('.').toSeq
+        val (arr, _) = splitArrayPath(p, schema)
+        require(arr.isEmpty,
+          s"script_score doc field $name crosses array ${arr.mkString(".")} — not implemented")
+        Some(SField(p))
       }
     }
-    val e = expr(); ws()
-    if (i != s.length) fail(s"trailing input '${s.substring(i)}'")
-    e
-  }
+
+  /** bucket_script / bucket_selector arithmetic over [[parseArith]]:
+    * leaves are `params.<p>` identifiers (`_score` and doc refs do not
+    * exist at the bucket grain and fail the parse), and Math offers
+    * log/sqrt/abs. Referenced params must appear in `params` (the
+    * buckets_path keys) — a typo'd param is a loud error, not a null
+    * column. */
+  private[docs] def parseParamsScript(src: String, params: Set[String]): ScriptExpr =
+    parseArith(src, "bucket script", Seq("log", "sqrt", "abs")) { c =>
+      if (!c.eat("params.")) None
+      else {
+        val st = c.i
+        while (c.peek.exists(ch => ch.isLetterOrDigit || ch == '_')) c.i += 1
+        val name = src.substring(st, c.i)
+        if (name.isEmpty) c.fail("params. needs a name")
+        if (!params(name)) c.fail(s"params.$name is not in buckets_path (${params.mkString(", ")})")
+        Some(SField(Seq(name)))
+      }
+    }
 
   /** Compile a script_score expression; `score` is the wrapped query's
     * base score column. Pure double arithmetic; division rides

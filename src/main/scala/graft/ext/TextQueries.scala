@@ -1205,6 +1205,45 @@ object TextQueries {
       |FROM scored ORDER BY doc_id""".stripMargin
 
   // ---------------------------------------------------------------- t25
+  /** One BPE fit round's pick over a (`syms`, `freq`) word table: the
+    * highest-weighted adjacent symbol pair (l, r, cnt), self-pairs
+    * excluded, ties broken by (l, r) — one row. */
+  private def bpeTopPair(syms: DataFrame): DataFrame =
+    // the when() guard matters: Spark's sequence(1, 0) DESCENDS to
+    // [1, 0] rather than yielding [] (the TextFunctions.shingles
+    // rule), and a 1-symbol word would probe index 0 — an ANSI error
+    syms.select(col("freq"), explode(when(size(col("syms")) < 2,
+        array().cast("array<struct<l:string,r:string>>"))
+      .otherwise(transform(
+        sequence(lit(1), size(col("syms")) - 1),
+        i => struct(element_at(col("syms"), i).as("l"),
+          element_at(col("syms"), i + 1).as("r"))))).as("p"))
+      .groupBy(col("p.l").as("l"), col("p.r").as("r"))
+      .agg(sum(col("freq")).cast("long").as("cnt"))
+      .filter(col("l") =!= col("r"))
+      .orderBy(col("cnt").desc, col("l").asc, col("r").asc)
+      .limit(1)
+
+  /** Merge every occurrence of `top`'s (l, r) pair in `syms`' symbol
+    * arrays; every other column rides through unchanged. */
+  private def bpeMerge(syms: DataFrame, top: DataFrame): DataFrame = {
+    val merged = filter(transform(sequence(lit(1), size(col("syms"))), i => {
+      val n = size(col("syms"))
+      val markHere = i < n &&
+        element_at(col("syms"), i) === col("l") &&
+        element_at(col("syms"), i + 1) === col("r")
+      val markPrev = i > 1 &&
+        element_at(col("syms"), i - 1) === col("l") &&
+        element_at(col("syms"), i) === col("r")
+      when(markHere, concat(col("l"), col("r")))
+        .when(markPrev, lit(null).cast("string"))
+        .otherwise(element_at(col("syms"), i))
+    }), x => x.isNotNull)
+    syms.crossJoin(broadcast(top.select(col("l"), col("r"))))
+      .select(syms.columns.toSeq.map(c =>
+        if (c == "syms") merged.as("syms") else col(c)): _*)
+  }
+
   /** Tokenizer FITTING — the first 3 BPE merge rounds (Sennrich et al.
     * 2016) over the corpus: symbol sequences start as characters, each
     * round picks the highest-weighted adjacent symbol pair and merges
@@ -1223,43 +1262,14 @@ object TextQueries {
       .select(explode(tokens(col("text"))).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).cast("long").as("freq"))
       .select(filter(split(col("w"), ""), c => c =!= "").as("syms"), col("freq"))
-    def topPair(syms: DataFrame): DataFrame =
-      // the when() guard matters: Spark's sequence(1, 0) DESCENDS to
-      // [1, 0] rather than yielding [] (the TextFunctions.shingles
-      // rule), and a 1-symbol word would probe index 0 — an ANSI error
-      syms.select(col("freq"), explode(when(size(col("syms")) < 2,
-          array().cast("array<struct<l:string,r:string>>"))
-        .otherwise(transform(
-          sequence(lit(1), size(col("syms")) - 1),
-          i => struct(element_at(col("syms"), i).as("l"),
-            element_at(col("syms"), i + 1).as("r"))))).as("p"))
-        .groupBy(col("p.l").as("l"), col("p.r").as("r"))
-        .agg(sum(col("freq")).cast("long").as("cnt"))
-        .filter(col("l") =!= col("r"))
-        .orderBy(col("cnt").desc, col("l").asc, col("r").asc)
-        .limit(1)
-    def applyMerge(syms: DataFrame, top: DataFrame): DataFrame =
-      syms.crossJoin(broadcast(top))
-        .select(filter(transform(sequence(lit(1), size(col("syms"))), i => {
-          val n = size(col("syms"))
-          val markHere = i < n &&
-            element_at(col("syms"), i) === col("l") &&
-            element_at(col("syms"), i + 1) === col("r")
-          val markPrev = i > 1 &&
-            element_at(col("syms"), i - 1) === col("l") &&
-            element_at(col("syms"), i) === col("r")
-          when(markHere, concat(col("l"), col("r")))
-            .when(markPrev, lit(null).cast("string"))
-            .otherwise(element_at(col("syms"), i))
-        }), x => x.isNotNull).as("syms"), col("freq"))
     var syms = words
     var out: DataFrame = null
     for (round <- 1 to 3) {
-      val top = topPair(syms)
+      val top = bpeTopPair(syms)
       val row = top.select(lit(round.toLong).as("round"), col("l"), col("r"),
         concat(col("l"), col("r")).as("merged"), col("cnt"))
       out = if (out == null) row else out.unionByName(row)
-      syms = applyMerge(syms, top)
+      syms = bpeMerge(syms, top)
     }
     out.orderBy(col("round"))
   }
@@ -1316,34 +1326,8 @@ object TextQueries {
       .groupBy(col("w")).agg(count(lit(1)).cast("long").as("freq"))
       .select(col("w"), filter(split(col("w"), ""), c => c =!= "").as("syms"),
         col("freq"))
-    def topPair(syms: DataFrame): DataFrame =
-      syms.select(col("freq"), explode(when(size(col("syms")) < 2,
-          array().cast("array<struct<l:string,r:string>>"))
-        .otherwise(transform(
-          sequence(lit(1), size(col("syms")) - 1),
-          i => struct(element_at(col("syms"), i).as("l"),
-            element_at(col("syms"), i + 1).as("r"))))).as("p"))
-        .groupBy(col("p.l").as("l"), col("p.r").as("r"))
-        .agg(sum(col("freq")).cast("long").as("cnt"))
-        .filter(col("l") =!= col("r"))
-        .orderBy(col("cnt").desc, col("l").asc, col("r").asc)
-        .limit(1)
-    def applyMerge(syms: DataFrame, top: DataFrame): DataFrame =
-      syms.crossJoin(broadcast(top.select(col("l"), col("r"))))
-        .select(col("w"), filter(transform(sequence(lit(1), size(col("syms"))), i => {
-          val n = size(col("syms"))
-          val markHere = i < n &&
-            element_at(col("syms"), i) === col("l") &&
-            element_at(col("syms"), i + 1) === col("r")
-          val markPrev = i > 1 &&
-            element_at(col("syms"), i - 1) === col("l") &&
-            element_at(col("syms"), i) === col("r")
-          when(markHere, concat(col("l"), col("r")))
-            .when(markPrev, lit(null).cast("string"))
-            .otherwise(element_at(col("syms"), i))
-        }), x => x.isNotNull).as("syms"), col("freq"))
     var syms = words
-    for (_ <- 1 to 3) syms = applyMerge(syms, topPair(syms))
+    for (_ <- 1 to 3) syms = bpeMerge(syms, bpeTopPair(syms))
     val encoded = syms.select(col("w"),
       size(col("syms")).cast("long").as("n_after"))
     val perWord = docs(s, d)

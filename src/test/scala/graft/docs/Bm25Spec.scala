@@ -33,7 +33,7 @@ class Bm25Spec extends SparkSpec {
     val toks = split(lower(col("body")), "\\s+")
     val st = Bm25.stats(corpus, toks, Seq("zeta"))
     assert(st.nDocs === 6L && st.avgdl100 === 566L && st.df("zeta") === 1L)
-    val scored = Bm25.withScore(corpus, toks, Seq("zeta"), st, "s")
+    val scored = Bm25.withScore(corpus, Seq(toks), Seq("zeta"), st, "s")
     val byId = scored.select("id", "s").collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(byId(2L) === 6L)
@@ -131,34 +131,91 @@ class Bm25Spec extends SparkSpec {
       (3L, null.asInstanceOf[String])).toDF("id", "body")
     val toks = split(lower(col("body")), "\\s+")
     val terms = Seq("zeta", "beta", "missingterm")
-    def builds = graft.Standing.builds("bm25-bm25spec-standing")
+    def builds = graft.Standing.builds(Bm25.standingTag)
     val before = builds
-    val st1 = Bm25.stats(c, toks, terms, Some("bm25spec-standing"))
+    val st1 = Bm25.stats(c, toks, terms)
     assert(builds === before + 1)
-    val st2 = Bm25.stats(c, toks, terms, Some("bm25spec-standing"))
+    val st2 = Bm25.stats(c, toks, terms)
     assert(builds === before + 1) // memo hit, no rebuild
-    val inline = Bm25.stats(c, toks, terms)
+    val inline = Bm25.scan(c, toks, terms)
     assert(st1 === inline && st2 === inline)
     assert(st1.df("missingterm") === 0L)
     // null token arrays: counted in N, contribute 0 tokens — same guard
     // both paths (a null body must not null avgdl)
     assert(st1.nDocs === 3L && st1.avgdl100 === 100L * 5 / 3)
     // the terms read is pushdown-eligible: term IN (...) reaches the scan
-    val plan = Bm25.standing(c, toks, "bm25spec-standing")._2
+    val plan = Bm25.standing(c, toks)._2
       .filter(col("term").isin(terms: _*))
       .queryExecution.executedPlan.toString
     assert(plan.contains("PushedFilters: [In(term"), plan)
-    // ADVICE r14: a reused key against a DIFFERENT corpus or analyzer
-    // must NOT serve stale stats — the memo folds in a corpus
-    // fingerprint, so each gets a fresh build
+    // a DIFFERENT corpus or analyzer must NOT serve stale stats — the
+    // entry is keyed on the analyzed frame, so each gets a fresh build
     val c2 = Seq((1L, "alpha alpha zeta")).toDF("id", "body")
     val afterSame = builds
-    val stOther = Bm25.stats(c2, toks, terms, Some("bm25spec-standing"))
+    val stOther = Bm25.stats(c2, toks, terms)
     assert(builds === afterSame + 1) // rebuild, not stale
-    assert(stOther === Bm25.stats(c2, toks, terms))
+    assert(stOther === Bm25.scan(c2, toks, terms))
     val toks2 = split(upper(col("body")), "\\s+") // different analyzer
-    Bm25.stats(c, toks2, Seq("ZETA"), Some("bm25spec-standing"))
+    Bm25.stats(c, toks2, Seq("ZETA"))
     assert(builds === afterSame + 2)
+  }
+
+  private val zetaBody =
+    """{"query": {"match": {"body": "zeta"}}, "size": 10,
+      | "_source": ["objectId"]}""".stripMargin
+
+  /** objectId → bm25 score of [[zetaBody]] over `rows` (id, body). */
+  private def zetaScores(rows: org.apache.spark.sql.DataFrame): Map[String, Long] = {
+    import org.apache.spark.sql.types.StructType
+    val docs = rows.select(struct(
+      col("id").cast("string").as("objectId"), col("body")).as("doc"))
+    val schema = docs.schema("doc").dataType.asInstanceOf[StructType]
+    SearchExec.search(docs, "doc", zetaBody, schema, similarity = "bm25")
+      .collect().map(r => r.getAs[String]("objectId") -> r.getAs[Long]("score")).toMap
+  }
+
+  test("a default bm25 search over a parquet corpus builds its standing " +
+    "stats once and reads them on the next call") {
+    val dir = graft.TempDirs.create("graft-bm25-parquet-").toString
+    corpus.write.mode("overwrite").parquet(dir)
+    val before = graft.Standing.builds(Bm25.standingTag)
+    val first = zetaScores(spark.read.parquet(dir))
+    val second = zetaScores(spark.read.parquet(dir))
+    assert(graft.Standing.builds(Bm25.standingTag) === before + 1)
+    assert(first === second)
+    assert(first("2") === 6L) // the hand-computed value of the formula pin
+  }
+
+  test("a bm25 search over a memory-sink table scores with the df/N of " +
+    "the rows present at each call") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import spark.implicits._
+    implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val in = MemoryStream[(Long, String)]
+    val q = in.toDF().toDF("id", "body").writeStream
+      .format("memory").queryName("bm25_sink").outputMode("append").start()
+    try {
+      val rows1 = Seq((1L, "zeta word"), (2L, "alpha beta"), (3L, "alpha word"))
+      val rows2 = Seq((4L, "zeta zeta"), (5L, "beta word"), (6L, "gamma word"))
+      in.addData(rows1: _*)
+      q.processAllAvailable()
+      val sink = spark.table("bm25_sink")
+      assert(!graft.Standing.canFingerprint(sink))
+      val builds = graft.Standing.builds(Bm25.standingTag)
+      val first = zetaScores(sink)
+      assert(first === zetaScores(rows1.toDF("id", "body")))
+      in.addData(rows2: _*)
+      q.processAllAvailable()
+      // N 3 → 6 and df(zeta) 1 → 2: doc 1's score moves with them
+      val second = zetaScores(spark.table("bm25_sink"))
+      assert(second === zetaScores((rows1 ++ rows2).toDF("id", "body")))
+      assert(second("1") !== first("1"))
+      assert(graft.Standing.builds(Bm25.standingTag) === builds + 2,
+        "only the two local reference corpora build standing stats")
+    } finally {
+      q.stop()
+      spark.catalog.dropTempView("bm25_sink")
+    }
   }
 
   test("function_score + pinned fold over the bm25 base (the closed v1 " +
@@ -245,7 +302,7 @@ class Bm25Spec extends SparkSpec {
     val empty = corpus.filter(lit(false))
     val st = Bm25.stats(empty, split(lower(col("body")), "\\s+"), Seq("x"))
     assert(st.nDocs === 0L)
-    val z = Bm25.withScore(corpus, split(lower(col("body")), "\\s+"),
+    val z = Bm25.withScore(corpus, Seq(split(lower(col("body")), "\\s+")),
       Seq("x"), st, "s").select("s").collect().map(_.getLong(0))
     assert(z.forall(_ === 0L))
   }
@@ -301,7 +358,7 @@ class Bm25Spec extends SparkSpec {
     def legScores(f: String): Map[Long, Long] = {
       val toks = split(lower(col(f)), "\\s+")
       val st = Bm25.stats(c, toks, Seq("zeta"))
-      Bm25.withScore(c, toks, Seq("zeta"), st, "s").select("id", "s")
+      Bm25.withScore(c, Seq(toks), Seq("zeta"), st, "s").select("id", "s")
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     }
     val sb = legScores("body"); val stg = legScores("tag")
@@ -343,7 +400,7 @@ class Bm25Spec extends SparkSpec {
     def legScores(f: String): Map[Long, Long] = {
       val toks = split(lower(col(f)), "\\s+")
       val st = Bm25.stats(c, toks, Seq("zeta"))
-      Bm25.withScore(c, toks, Seq("zeta"), st, "s").select("id", "s")
+      Bm25.withScore(c, Seq(toks), Seq("zeta"), st, "s").select("id", "s")
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     }
     val sb = legScores("body"); val stg = legScores("tag")
@@ -447,8 +504,8 @@ class Bm25Spec extends SparkSpec {
     def legs(t: String): org.apache.spark.sql.DataFrame = {
       val stB = Bm25.Stats(sb.nDocs, sb.avgdl100, blend(t).df)
       val stT = Bm25.Stats(stg.nDocs, stg.avgdl100, blend(t).df)
-      Bm25.withScore(Bm25.withScore(c, bToks, Seq(t), stB, s"b_$t"),
-        tToks, Seq(t), stT, s"t_$t")
+      Bm25.withScore(Bm25.withScore(c, Seq(bToks), Seq(t), stB, s"b_$t"),
+        Seq(tToks), Seq(t), stT, s"t_$t")
     }
     val exp = legs("zeta").select(col("id"), greatest(col("b_zeta"), col("t_zeta")).as("z"))
       .join(legs("alpha").select(col("id"),
@@ -469,7 +526,7 @@ class Bm25Spec extends SparkSpec {
     val expCmb = {
       val dfb = Seq("zeta", "alpha").map(t =>
         t -> math.max(sb.df(t), stg.df(t))).toMap
-      Bm25.withCombinedScore(c, Seq(bToks, tToks), Seq("zeta", "alpha"),
+      Bm25.withScore(c, Seq(bToks, tToks), Seq("zeta", "alpha"),
         Bm25.Stats(sb.nDocs, sb.avgdl100 + stg.avgdl100, dfb), "cs")
         .select(col("id"), col("cs"))
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -555,7 +612,7 @@ class Bm25Spec extends SparkSpec {
     val toks = split(lower(col("body")), "\\s+")
     val st = Bm25.stats(c, toks, Seq("alpha", "beta", "zeta"))
     val legMap = Bm25.withPhraseScore(
-        Bm25.withScore(c, toks, Seq("zeta"), st, "z"),
+        Bm25.withScore(c, Seq(toks), Seq("zeta"), st, "z"),
         toks, Seq("alpha", "beta"), st, "ab")
       .select("id", "ab", "z")
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap

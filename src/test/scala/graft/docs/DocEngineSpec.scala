@@ -2002,6 +2002,23 @@ class DocEngineSpec extends SparkSpec {
         |  "bottom_right": {"lat": -10.0, "lon": -170.0}}}}}""".stripMargin, sch))
   }
 
+  test("both script doors reject malformed arithmetic with their own " +
+    "located IllegalArgumentException; the end of input reads as such") {
+    def doors(src: String): Seq[String] = Seq(
+      intercept[IllegalArgumentException](
+        SearchQuery.parseScript(src, PlanSchema.plan)).getMessage,
+      intercept[IllegalArgumentException](
+        SearchQuery.parseParamsScript(src, Set("x"))).getMessage)
+    for (src <- Seq("1 +", "(1", "1.2.3", "Math.pow(1)", "params.zz", "doc['x'")) {
+      val Seq(script, bucket) = doors(src)
+      assert(script.startsWith("script_score: "), script)
+      assert(bucket.startsWith("bucket script: "), bucket)
+      assert(!script.contains('\u0000') && !bucket.contains('\u0000'))
+    }
+    assert(doors("1 +").forall(_.contains("unexpected end of input")))
+    assert(doors("(1").forall(_.contains("expected ), got end of input")))
+  }
+
   test("round-8 additions: script_score DSL, wrapper transport, terms lookup, " +
     "sampler/ip/frequent_item_sets/change_point rejections") {
     import SearchQuery.{SBin, SCall, SField, SNum, SScore}

@@ -146,10 +146,22 @@ class DocPropertySpec extends SparkSpec {
     val docs = corpus(10, 11L)
     val sh = Shredder.shred(docs)
     val one = sh.entities.filter(col("key") === "plan_plan-3").select(col("key"))
-    val after = Mutations.cascadeDelete(sh, one, assembled(sh))
+    val del = Mutations.cascadeDelete(sh, one, assembled(sh))
+    // computed once: assembly and the table checks below read these rows
+    val after = Shredded(del.entities.localCheckpoint(), del.edges.localCheckpoint())
     val back = assembled(after)
     val expected = docs.filter(col("doc.objectId") =!= "plan-3")
     assert(canon(back.select(col("doc"))) === canon(expected))
+    // assembly reads only from the surviving roots, so it cannot see rows
+    // orphaned under plan-3: both tables must equal the shred of the rest
+    val fresh = Shredder.shred(expected)
+    def same(got: DataFrame, want: DataFrame): Unit = {
+      def rows(df: DataFrame) =
+        df.select(got.columns.map(col).toSeq: _*).collect().map(_.toString).sorted.toSeq
+      assert(rows(got) === rows(want))
+    }
+    same(after.entities, fresh.entities)
+    same(after.edges, fresh.edges)
   }
 }
 
