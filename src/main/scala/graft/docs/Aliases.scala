@@ -28,8 +28,8 @@ object Aliases {
     * aliases_not_found_exception). */
   def apply(registry: Map[String, AliasDef], body: String): Map[String, AliasDef] = {
     import org.json4s._
-    import org.json4s.jackson.JsonMethods.{compact, render, parse => jparse}
-    val actions = jparse(body) match {
+    import org.json4s.jackson.JsonMethods.{compact, render}
+    val actions = Lex.parseJson("_aliases", body) match {
       case JObject(List(("actions", JArray(as)))) => as
       case other => throw new IllegalArgumentException(
         s"_aliases body must be {\"actions\": [...]}: $other")

@@ -51,7 +51,8 @@ object Bulk {
     * `{"doc": {…partial…}}` — the script form is rejected loudly. */
   def parse(ndjson: String): Seq[Action] = {
     import org.json4s._
-    import org.json4s.jackson.JsonMethods.{compact, render, parse => jparse}
+    import org.json4s.jackson.JsonMethods.{compact, render}
+    def jparse(line: String) = Lex.parseJson("_bulk", line)
     val lines = ndjson.split('\n').map(_.trim).filter(_.nonEmpty).toSeq
     val out = Seq.newBuilder[Action]
     var i = 0

@@ -79,11 +79,7 @@ object BulkByQuery {
   }
 
   private def parseRoot(body: String, allowed: Set[String]): Map[String, org.json4s.JValue] = {
-    import org.json4s._
-    val root = org.json4s.jackson.JsonMethods.parse(body) match {
-      case JObject(fields) => fields.toMap
-      case other => throw new IllegalArgumentException(s"body must be an object: $other")
-    }
+    val root = Lex.bodyObject("by_query", body)
     val unknown = root.keySet -- allowed
     require(unknown.isEmpty, s"unsupported body key(s): ${unknown.mkString(", ")}")
     root

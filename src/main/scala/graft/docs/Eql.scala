@@ -125,18 +125,21 @@ object Eql {
     * filter sits at the scan (pushdown-eligible), head/tail are O(n·log k)
     * per partition with k-row driver state, count one partial-aggregated
     * count. Unknown syntax rejects loudly. */
-  def runEvent(events: DataFrame, query: String): DataFrame = {
+  def runEvent(events: DataFrame, query: String): DataFrame = Lex.planning("eql") {
     val PipeSplit = query.split("\\|").map(_.trim).toList
     require(PipeSplit.nonEmpty && PipeSplit.head.nonEmpty, "eql: empty query")
     val HeadRe = """^\s*(\w+)\s+where\s+(.+)$""".r
-    val (cat, condSrc) = PipeSplit.head match {
-      case HeadRe(c, rest) => (c, rest)
-      case other => throw new IllegalArgumentException(
-        s"unsupported eql event query (need `<category> where <cond>`): $other")
+    val head = PipeSplit.head
+    val (cat, cond) = HeadRe.findFirstMatchIn(head) match {
+      case Some(m) => // condition offsets count from the start of the query
+        val at = query.indexOf(head)
+        (m.group(1), EventCond.parse(query.substring(0, at + head.length), at + m.start(2)))
+      case None => throw new IllegalArgumentException(
+        s"unsupported eql event query (need `<category> where <cond>`): $head")
     }
     val catFilter: Column =
       if (cat == "any") lit(true) else col("event_type") === lit(cat)
-    var df = events.filter(catFilter && EventCond.parse(condSrc))
+    var df = events.filter(catFilter && cond)
       .select(col("event_id"), col("ts_us"), col("user_id"),
         col("event_type"), col("value"))
     val asc = Seq(col("ts_us").asc, col("event_id").asc)
@@ -163,60 +166,48 @@ object Eql {
     * and string/numeric literals, and/or/not, parentheses. Shared shape
     * with the sequence steps' == form but full-boolean. */
   private object EventCond {
-    private val Tok =
-      ("""\s*(?:("(?:[^"\\]|\\.)*")|([A-Za-z_][A-Za-z0-9_.]*)|""" +
-        """(-?[0-9]+(?:\.[0-9]+)?)|(==|!=|<=|>=|[<>()]))""").r
-    def parse(src: String): Column = {
-      var ts = {
-        val out = scala.collection.mutable.ListBuffer[String]()
-        var pos = 0
-        while (pos < src.length) {
-          Tok.findPrefixMatchOf(src.substring(pos)) match {
-            case Some(m) => pos += m.end; out += m.matched.trim
-            case None =>
-              if (src.substring(pos).trim.isEmpty) pos = src.length
-              else throw new IllegalArgumentException(
-                s"eql: cannot tokenize condition at: ${src.substring(pos).take(20)}")
-          }
-        }
-        out.toList
-      }
-      def peek = ts.headOption
-      def pop(): String = { val h = ts.head; ts = ts.tail; h }
-      def atom(): Column = peek match {
-        case Some("(") => pop(); val e = or(); require(pop() == ")", "eql: expected )"); e
-        case Some("not") => pop(); !atom()
+    import Lex.{Id, Num, Op, Str}
+    private val lex = new Lex.Lexer("eql", sqlQuotes = false,
+      Seq("==", "!=", "<=", ">=", "<", ">", "(", ")"), signedNums = true)
+    /** The condition that starts at offset `from` of `src`. */
+    def parse(src: String, from: Int): Column = {
+      val c = new Lex.Cursor("eql", lex(src, from))
+      def atom(): Column = c.peek match {
+        case Some(Op("(")) => c.pop(); val e = c.nested(or()); c.expect(")"); e
+        case Some(Id("not")) => c.pop(); !c.nested(atom())
         case _ =>
-          val f = pop()
-          require(f.headOption.exists(c => c.isLetter || c == '_'),
-            s"eql: expected a field name, got $f")
-          val op = pop()
-          val rhs = pop()
-          val r: Column =
-            if (rhs.startsWith("\"")) lit(rhs.substring(1, rhs.length - 1))
-            else if (rhs.contains('.')) lit(rhs.toDouble) else lit(rhs.toLong)
-          op match {
+          val f = c.ident()
+          val cmp = c.pop() match {
+            case Op(o) if o != "(" && o != ")" => o
+            case t => c.fail(s"expected a comparison, got $t", t)
+          }
+          val r: Column = c.pop() match {
+            case Str(s) => lit(s)
+            case Num(n) if n.contains('.') => lit(n.toDouble)
+            case t @ Num(n) => lit(n.toLongOption.getOrElse(c.fail(s"integer out of range: $n", t)))
+            case t => c.fail(s"expected a string or number, got $t", t)
+          }
+          cmp match {
             case "==" => col(f) === r
             case "!=" => col(f) =!= r
             case "<" => col(f) < r
             case "<=" => col(f) <= r
             case ">" => col(f) > r
-            case ">=" => col(f) >= r
-            case o => throw new IllegalArgumentException(s"eql: unsupported operator $o")
+            case _ => col(f) >= r // the lexer's last comparison
           }
       }
       def and(): Column = {
         var e = atom()
-        while (peek.contains("and")) { pop(); e = e && atom() }
+        while (c.peek.contains(Id("and"))) { c.pop(); e = e && atom() }
         e
       }
       def or(): Column = {
         var e = and()
-        while (peek.contains("or")) { pop(); e = e || and() }
+        while (c.peek.contains(Id("or"))) { c.pop(); e = e || and() }
         e
       }
       val e = or()
-      require(ts.isEmpty, s"eql: trailing condition tokens: ${ts.take(4)}")
+      c.end("condition")
       e
     }
   }
@@ -234,7 +225,7 @@ object Eql {
     * aggregation over the step-filtered scan — conditional `min`s per
     * step, a HAVING that all steps fired. No joins, no windows: the
     * 100 TB shape is a single partial-aggregated pass. */
-  def runSample(events: DataFrame, query: String): DataFrame =
+  def runSample(events: DataFrame, query: String): DataFrame = Lex.planning("eql") {
     query.replaceAll("\\s+", " ").trim match {
       case SampleHead(by, rest) =>
         val steps = StepRe.findAllMatchIn(rest).map { m =>
@@ -259,6 +250,7 @@ object Eql {
       case other => throw new IllegalArgumentException(
         s"unsupported eql sample query: $other")
     }
+  }
 
   /** Run over an event frame carrying (`ts_us` long micros, `event_id`
     * long — the deterministic tiebreak — plus the by/step columns).
@@ -267,7 +259,7 @@ object Eql {
     * last-event timestamp; the engine's canonical order is (by-keys,
     * t1..tn) — the pipe slices THAT order, both ends compiling to a
     * bounded TakeOrderedAndProject heap, never a full sort). */
-  def run(events: DataFrame, query: String): DataFrame = {
+  def run(events: DataFrame, query: String): DataFrame = Lex.planning("eql") {
     val pipeSplit = query.split("\\|").map(_.trim).toList
     val base = runSeq(events, pipeSplit.head)
     val sortCols = base.columns.dropRight(1) // by-keys ++ t1..tn
@@ -320,7 +312,7 @@ object Eql {
     * (O(Π per-key step counts per window)) — WHY last-prefix is the
     * engine default; this mode is for when the analyst wants the full
     * attribution set. */
-  def runAllMatches(events: DataFrame, query: String): DataFrame = {
+  def runAllMatches(events: DataFrame, query: String): DataFrame = Lex.planning("eql") {
     val sq = parse(query)
     require(sq.maxspanUs != Long.MaxValue,
       "eql: all-matches mode requires maxspan (all-chains output over an " +

@@ -542,6 +542,13 @@ object EsAggs {
       "geohash_grid", "geohex_grid", "categorize_text", "ip_range", "ip_prefix",
       "variable_width_histogram", "frequent_item_sets", "geo_line")
 
+  /** Kinds whose `size` (or `shard_size`) counts buckets or sample
+    * members: 0 asks for nothing, so it is rejected with negatives. */
+  private val BucketSizeKinds =
+    Set("terms", "multi_terms", "significant_terms", "significant_text", "composite",
+      "geotile_grid", "geohash_grid", "geohex_grid", "categorize_text",
+      "frequent_item_sets", "geo_line", "sampler", "diversified_sampler")
+
   private val pipelineKinds =
     Set("cumulative_sum", "derivative", "bucket_selector", "bucket_sort",
       "moving_fn", "serial_diff", "bucket_script", "normalize",
@@ -594,10 +601,7 @@ object EsAggs {
 
   def parse(body: String, schema: StructType): Request = {
     import org.json4s._
-    val root = org.json4s.jackson.JsonMethods.parse(body) match {
-      case JObject(fields) => fields.toMap
-      case other => throw new IllegalArgumentException(s"ES body must be an object: $other")
-    }
+    val root = Lex.bodyObject("aggs", body)
     // `size` is allowed (and ignored): aggs bodies set `"size": 0` to
     // suppress hits; this entry point returns only the aggregation rows.
     val unknown = root.keySet -- Set("query", "aggs", "aggregations", "size")
@@ -618,7 +622,7 @@ object EsAggs {
     }
     def num(spec: JValue, key: String, kind: String): Option[Long] = spec match {
       case JObject(f) => f.toMap.get(key).map {
-        case JInt(i) => i.toLong
+        case JInt(i) if i.isValidLong => i.toLong
         case JLong(l) => l
         case JDouble(d) => d.toLong
         case JDecimal(d) => d.toLong
@@ -626,6 +630,20 @@ object EsAggs {
       }
       case _ => None
     }
+    /** A size-like option (`size`, `shard_size`): `d` when absent, else
+      * an Int of at least 1 for the kinds in [[BucketSizeKinds]] (a
+      * request for no buckets) and at least 0 elsewhere. A bare `.toInt`
+      * would wrap 3000000000 to a negative limit. */
+    def size(spec: JValue, kind: String, d: Int, key: String = "size"): Int =
+      sizeOpt(spec, kind, key).getOrElse(d)
+    def sizeOpt(spec: JValue, kind: String, key: String = "size"): Option[Int] =
+      num(spec, key, kind).map { n =>
+        val least = if (BucketSizeKinds(kind)) 1 else 0
+        def bad(why: String) = throw new IllegalArgumentException(s"aggs: $kind $key $why: $n")
+        if (n < least) bad(s"must be >= $least")
+        if (n > Int.MaxValue) bad("must fit in an int")
+        n.toInt
+      }
     /** Resolve an agg `field` against the context: document root (ctx =
       * None, array crossing rejected) or a nested array (ctx =
       * Some((declaredNestedPath, arrayPath)) — ES paths are absolute, so
@@ -908,7 +926,7 @@ object EsAggs {
                 s"show_term_doc_count_error must be a boolean: $other")
             }
             Terms(fieldPath(spec, "terms", ctx),
-              num(spec, "size", "terms").map(_.toInt).getOrElse(10), // ES default
+              size(spec, "terms", 10), // ES default
               parseOrder(m),
               tMinDc,
               incExc("include"), incExc("exclude"), tMissing, tShowOther, partitionOf)
@@ -1158,31 +1176,27 @@ object EsAggs {
             val precision = num(spec, "precision", "geotile_grid").map(_.toInt).getOrElse(7)
             require(precision >= 0 && precision <= 29,
               s"geotile_grid precision out of range: $precision (0-29)")
-            val size0 = num(spec, "size", "geotile_grid").map(_.toInt).getOrElse(10000)
-            require(size0 >= 1, s"geotile_grid size must be >= 1: $size0")
-            GeotileGrid(fieldPath(spec, "geotile_grid", ctx), precision, size0)
+            GeotileGrid(fieldPath(spec, "geotile_grid", ctx), precision,
+              size(spec, "geotile_grid", 10000))
           }).orElse(bf.get("geohash_grid").map { spec =>
             checkSpecKeys(spec, "geohash_grid", Set("field", "precision", "size"))
             val precision = num(spec, "precision", "geohash_grid").map(_.toInt).getOrElse(5)
             require(precision >= 1 && precision <= 6,
               s"geohash_grid precision out of implemented range: $precision (1-6; " +
                 "7+ needs > 35 interleave bits per axis pair — not wired)")
-            val size0 = num(spec, "size", "geohash_grid").map(_.toInt).getOrElse(10000)
-            require(size0 >= 1, s"geohash_grid size must be >= 1: $size0")
-            GeohashGrid(fieldPath(spec, "geohash_grid", ctx), precision, size0)
+            GeohashGrid(fieldPath(spec, "geohash_grid", ctx), precision,
+              size(spec, "geohash_grid", 10000))
           }).orElse(bf.get("geohex_grid").map { spec =>
             checkSpecKeys(spec, "geohex_grid", Set("field", "precision", "size"))
             val precision = num(spec, "precision", "geohex_grid").map(_.toInt).getOrElse(4)
             require(precision >= 0 && precision <= 8,
               s"geohex_grid precision out of implemented range: $precision (0-8)")
-            val size0 = num(spec, "size", "geohex_grid").map(_.toInt).getOrElse(10000)
-            require(size0 >= 1, s"geohex_grid size must be >= 1: $size0")
-            GeohexGrid(fieldPath(spec, "geohex_grid", ctx), precision, size0)
+            GeohexGrid(fieldPath(spec, "geohex_grid", ctx), precision,
+              size(spec, "geohex_grid", 10000))
           }).orElse(bf.get("categorize_text").map { spec =>
             checkSpecKeys(spec, "categorize_text", Set("field", "size"))
-            val size0 = num(spec, "size", "categorize_text").map(_.toInt).getOrElse(10)
-            require(size0 >= 1, s"categorize_text size must be >= 1: $size0")
-            CategorizeText(fieldPath(spec, "categorize_text", ctx), size0)
+            CategorizeText(fieldPath(spec, "categorize_text", ctx),
+              size(spec, "categorize_text", 10))
           }).orElse(bf.get("missing").map { spec =>
             checkSpecKeys(spec, "missing", Set("field"))
             // resolve with array awareness: `missing` ON an array field
@@ -1297,7 +1311,7 @@ object EsAggs {
                 }
               case other => throw new IllegalArgumentException(s"bad after: $other")
             }
-            CompositeAgg(sources, num(spec, "size", "composite").map(_.toInt).getOrElse(10), after)
+            CompositeAgg(sources, size(spec, "composite", 10), after)
           }).orElse(bf.get("adjacency_matrix").map { spec =>
             require(ctx.isEmpty, "adjacency_matrix inside a nested context is not implemented")
             val m = checkSpecKeys(spec, "adjacency_matrix", Set("filters"))
@@ -1319,7 +1333,7 @@ object EsAggs {
               case _ => throw new IllegalArgumentException(
                 "multi_terms needs a terms array of >= 2 fields")
             }
-            MultiTerms(paths, num(spec, "size", "multi_terms").map(_.toInt).getOrElse(10))
+            MultiTerms(paths, size(spec, "multi_terms", 10))
           }).orElse(bf.get("rare_terms").map { spec =>
             checkSpecKeys(spec, "rare_terms", Set("field", "max_doc_count"))
             val maxDc = num(spec, "max_doc_count", "rare_terms").getOrElse(1L)
@@ -1397,9 +1411,7 @@ object EsAggs {
               .map(SearchQuery.asDouble(_, "minimum_support")).getOrElse(0.1)
             require(minSup > 0.0 && minSup <= 1.0,
               s"frequent_item_sets minimum_support out of range: $minSup ((0, 1])")
-            val size0 = num(spec, "size", "frequent_item_sets").map(_.toInt).getOrElse(10)
-            require(size0 >= 1, s"frequent_item_sets size must be >= 1: $size0")
-            FrequentItemSets(p, minSup, size0)
+            FrequentItemSets(p, minSup, size(spec, "frequent_item_sets", 10))
           }).orElse(bf.get("geo_line").map { spec =>
             require(ctx.isEmpty, "geo_line inside a nested context is not implemented")
             val m = checkSpecKeys(spec, "geo_line", Set("point", "sort", "size"))
@@ -1413,9 +1425,7 @@ object EsAggs {
                   throw new IllegalArgumentException(s"geo_line $k needs a field"))
               case _ => throw new IllegalArgumentException(s"geo_line needs a $k {field} object")
             }
-            val size0 = num(spec, "size", "geo_line").map(_.toInt).getOrElse(10000)
-            require(size0 >= 1, s"geo_line size must be >= 1: $size0")
-            GeoLine(fld("point"), fld("sort"), size0)
+            GeoLine(fld("point"), fld("sort"), size(spec, "geo_line", 10000))
           }).orElse(bf.get("date_range").map { spec =>
             val m = checkSpecKeys(spec, "date_range", Set("field", "ranges"))
             val IsoDate = "\\d{4}-\\d{2}-\\d{2}".r
@@ -1479,7 +1489,7 @@ object EsAggs {
                 s"significant_terms $h with $k: false is not implemented (ES default true only)") }
             }
             SignificantTerms(fieldPath(spec, "significant_terms", ctx),
-              num(spec, "size", "significant_terms").map(_.toInt).getOrElse(10), bg,
+              size(spec, "significant_terms", 10), bg,
               heuristics.headOption.getOrElse("jlh"))
           }).orElse(bf.get("significant_text").map[Agg] { _ =>
             throw new IllegalArgumentException(
@@ -1650,7 +1660,7 @@ object EsAggs {
                 case Some(other) => throw new IllegalArgumentException(s"bad bucket_sort sort: $other")
               }
               BucketSort(sorts, num(spec, "from", "bucket_sort").map(_.toInt).getOrElse(0),
-                num(spec, "size", "bucket_sort").map(_.toInt))
+                sizeOpt(spec, "bucket_sort"))
             case (name, other) =>
               throw new IllegalArgumentException(s"bad pipeline agg $name: $other")
           }
@@ -1680,7 +1690,7 @@ object EsAggs {
               }
               // ctx-aware: inside a nested context the hits are ELEMENTS,
               // so sort/_source paths resolve element-relative
-              Some(TopHits(num(spec, "size", "top_hits").map(_.toInt).getOrElse(3),
+              Some(TopHits(size(spec, "top_hits", 3),
                 sorts.map { case (p, a) => (resolvePath(p, "top_hits", ctx), a) },
                 source.map(resolvePath(_, "top_hits", ctx))))
             case List((_, JObject(List(("top_metrics", spec))))) =>
@@ -1709,7 +1719,7 @@ object EsAggs {
                 case other => throw new IllegalArgumentException(
                   s"top_metrics needs a single {field: direction} sort: $other")
               }
-              Some(TopHits(num(spec, "size", "top_metrics").map(_.toInt).getOrElse(1),
+              Some(TopHits(size(spec, "top_metrics", 1),
                 Seq((resolvePath(sort._1, "top_metrics", ctx), sort._2)),
                 metricPaths.map(resolvePath(_, "top_metrics", ctx))))
             case _ => throw new IllegalArgumentException("at most one top_hits per level")
@@ -2210,12 +2220,9 @@ object EsAggs {
           s"unsupported diversified_sampler entry key(s): ${extraneous.mkString(", ")}")
         val sm = checkSpecKeys(f("diversified_sampler"), "diversified_sampler",
           Set("shard_size", "field", "max_docs_per_value", "hash_field"))
-        val n = num(f("diversified_sampler"), "shard_size", "diversified_sampler")
-          .map(_.toInt).getOrElse(100)
-        require(n >= 1, s"diversified_sampler shard_size must be >= 1: $n")
-        val maxPer = num(f("diversified_sampler"), "max_docs_per_value", "diversified_sampler")
-          .map(_.toInt).getOrElse(1) // ES default
-        require(maxPer >= 1, s"diversified_sampler max_docs_per_value must be >= 1: $maxPer")
+        val n = size(f("diversified_sampler"), "diversified_sampler", 100, "shard_size")
+        val maxPer = // ES default 1
+          size(f("diversified_sampler"), "diversified_sampler", 1, "max_docs_per_value")
         def scalarField(key: String, what: String): Seq[String] = sm.get(key) match {
           case Some(JString(v)) =>
             val p = v.stripSuffix(".keyword").split('.').toSeq
@@ -2285,8 +2292,7 @@ object EsAggs {
         require(extraneous.isEmpty,
           s"unsupported sampler entry key(s): ${extraneous.mkString(", ")}")
         val sm = checkSpecKeys(f("sampler"), "sampler", Set("shard_size", "hash_field"))
-        val n = num(f("sampler"), "shard_size", "sampler").map(_.toInt).getOrElse(100)
-        require(n >= 1, s"sampler shard_size must be >= 1: $n")
+        val n = size(f("sampler"), "sampler", 100, "shard_size")
         val hashF = sm.get("hash_field") match {
           case Some(JString(hf)) =>
             val p = hf.split('.').toSeq
@@ -2305,7 +2311,7 @@ object EsAggs {
           case List((_, JObject(List(("significant_text", spec))))) =>
             checkSpecKeys(spec, "significant_text", Set("field", "size"))
             val p = fieldPath(spec, "significant_text", None)
-            val topN = num(spec, "size", "significant_text").map(_.toInt).getOrElse(10)
+            val topN = size(spec, "significant_text", 10)
             Request(query, None, Right(Buckets(SignificantText(p, topN, n, hashF), Nil, None)))
           case other => throw new IllegalArgumentException(
             s"only a single significant_text under sampler is implemented, got: " +
@@ -2337,7 +2343,8 @@ object EsAggs {
   }
 
   /** Run an ES aggs body against the document table. */
-  def run(docs0: DataFrame, docCol: String, body0: String, schema0: StructType): DataFrame = {
+  def run(docs0: DataFrame, docCol: String, body0: String,
+          schema0: StructType): DataFrame = Lex.planning("aggs") {
     // runtime_mappings splice computed fields into the document struct
     // BEFORE any parsing — the rest of the machinery sees plain fields
     val (docs, body, schema) = RuntimeFields(docs0, docCol, body0, schema0)

@@ -80,45 +80,19 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object EsSql {
 
   // ---------------------------------------------------------- tokens
-  private sealed trait Tok
-  private final case class SId(s: String) extends Tok   // ident or keyword
-  private final case class SNum(s: String) extends Tok
-  private final case class SStr(s: String) extends Tok  // decoded '' escape
-  private final case class SOp(s: String) extends Tok
+  import Lex.{Tok, isKw, Id => SId, Num => SNum, Str => SStr, Op => SOp}
 
-  private val TokenRe =
-    ("""\s*(?:('(?:[^']|'')*')|([A-Za-z_][A-Za-z0-9_.]*)|""" +
-      """([0-9]+(?:\.[0-9]+)?)|(<>|<=|>=|!=|\|\||[<>+\-*/%(),=]))""").r
-
-  private def tokenize(q: String): List[Tok] = {
-    var pos = 0
-    val out = scala.collection.mutable.ListBuffer[Tok]()
-    while (pos < q.length) {
-      TokenRe.findPrefixMatchOf(q.substring(pos)) match {
-        case Some(m) =>
-          pos += m.end
-          if (m.group(1) != null)
-            out += SStr(m.group(1).substring(1, m.group(1).length - 1)
-              .replace("''", "'"))
-          else if (m.group(2) != null) out += SId(m.group(2))
-          else if (m.group(3) != null) out += SNum(m.group(3))
-          else out += SOp(m.group(4))
-        case None =>
-          if (q.substring(pos).trim.isEmpty) pos = q.length
-          else throw new IllegalArgumentException(
-            s"es-sql: cannot tokenize at: ${q.substring(pos).take(30)}")
-      }
-    }
-    out.toList
-  }
-
-  private def isKw(t: Tok, k: String): Boolean = t match {
-    case SId(s) => s.equalsIgnoreCase(k)
-    case _ => false
-  }
+  private val tokenize = new Lex.Lexer("es-sql", sqlQuotes = true,
+    Seq("<>", "<=", ">=", "!=", "||", "<", ">", "+", "-", "*", "/", "%", "(", ")", ",", "="),
+    signedNums = false)
 
   private def reject(why: String): Nothing =
     throw new IllegalArgumentException(s"es-sql: unsupported: $why")
+
+  /** The tokens after an opening parenthesis, split at the one that
+    * closes it; `unbalanced` is the rejection when none does. */
+  private def group(ts: List[Tok], unbalanced: String): (List[Tok], List[Tok]) =
+    Lex.closing(ts).getOrElse(reject(unbalanced))
 
   // ------------------------------------------------- clause splitting
   /** Split the top-level token stream into SELECT/FROM/WHERE/GROUP BY/
@@ -165,18 +139,8 @@ object EsSql {
 
   /** Split a clause body on top-level commas. */
   private def commaSplit(ts: List[Tok]): List[List[Tok]] = {
-    val out = scala.collection.mutable.ListBuffer[List[Tok]]()
-    var buf = scala.collection.mutable.ListBuffer[Tok]()
-    var depth = 0
-    ts.foreach {
-      case t @ SOp("(") => depth += 1; buf += t
-      case t @ SOp(")") => depth -= 1; buf += t
-      case SOp(",") if depth == 0 =>
-        out += buf.toList; buf = scala.collection.mutable.ListBuffer[Tok]()
-      case t => buf += t
-    }
-    if (buf.nonEmpty) out += buf.toList
-    out.toList
+    val parts = Lex.splitTop(ts)(_ == SOp(","))
+    if (parts.last.isEmpty) parts.init else parts
   }
 
   // --------------------------------------------- expression re-emission
@@ -265,27 +229,13 @@ object EsSql {
         s"(got: ${emit(expr)})"))
   }
 
-  private def parseItem(ts: List[Tok]): Item = {
+  private def parseItem(ts: List[Tok]): Item =
     // top-level AS splits expr from alias
-    var depth = 0
-    var idx: Option[Int] = None
-    ts.zipWithIndex.foreach { case (t, i) =>
-      t match {
-        case SOp("(") => depth += 1
-        case SOp(")") => depth -= 1
-        case _ if depth == 0 && isKw(t, "AS") && idx.isEmpty => idx = Some(i)
-        case _ => ()
-      }
+    Lex.splitTop(ts)(isKw(_, "AS")) match {
+      case List(e) => Item(e, None)
+      case List(e, List(SId(a))) => Item(e, Some(a))
+      case _ => reject("AS must be followed by a single identifier")
     }
-    idx match {
-      case Some(i) =>
-        ts.drop(i + 1) match {
-          case List(SId(a)) => Item(ts.take(i), Some(a))
-          case _ => reject("AS must be followed by a single identifier")
-        }
-      case None => Item(ts, None)
-    }
-  }
 
   private val Aggs = Set("SUM", "AVG", "MIN", "MAX", "COUNT", "MEDIAN",
     "PERCENTILE", "STD_DEV", "FIRST", "LAST", "FIRST_VALUE", "LAST_VALUE",
@@ -349,16 +299,8 @@ object EsSql {
     var rest = h
     while (rest.nonEmpty) rest match {
       case SId(fn) :: SOp("(") :: tail if Aggs.contains(fn.toUpperCase) =>
-        var depth = 1
-        val body = scala.collection.mutable.ListBuffer[Tok](SId(fn), SOp("("))
-        var rem = tail
-        while (depth > 0) rem match {
-          case (t @ SOp("(")) :: tl => depth += 1; body += t; rem = tl
-          case (t @ SOp(")")) :: tl => depth -= 1; body += t; rem = tl
-          case t :: tl => body += t; rem = tl
-          case Nil => reject("unbalanced parentheses in HAVING")
-        }
-        val it = Item(body.toList, None)
+        val (args, rem) = group(tail, "unbalanced parentheses in HAVING")
+        val it = Item(SId(fn) :: SOp("(") :: args ::: List(SOp(")")), None)
         val key = canonKey(it.expr)
         val name = items
           .find(x => aggCall(x).isDefined && canonKey(x.expr) == key)
@@ -510,19 +452,11 @@ object EsSql {
       case SId(f) :: SOp("(") :: tail if f.equalsIgnoreCase("QUARTER") =>
         // capture the balanced argument so the arithmetic suffix lands
         // AFTER it; the captured tokens re-enter the scan (nested calls)
-        var depth = 1
-        val body = scala.collection.mutable.ListBuffer[Tok]()
-        var rem = tail
-        while (depth > 0) rem match {
-          case (t @ SOp("(")) :: tl => depth += 1; body += t; rem = tl
-          case SOp(")") :: tl => depth -= 1; if (depth > 0) body += SOp(")"); rem = tl
-          case t :: tl => body += t; rem = tl
-          case Nil => reject("unbalanced QUARTER parentheses")
-        }
+        val (body, rem) = group(tail, "unbalanced QUARTER parentheses")
         out ++= List(SId("TO_LONG"), SOp("("), SId("FLOOR"), SOp("("),
           SOp("("), SId("DATE_EXTRACT"), SOp("("), SStr("month_of_year"),
           SOp(","))
-        rest = body.toList ++ List(SOp(")"), SOp("+"), SNum("2"), SOp(")"),
+        rest = body ++ List(SOp(")"), SOp("+"), SNum("2"), SOp(")"),
           SOp("/"), SNum("3"), SOp(")"), SOp(")")) ++ rem
       case SId(f) :: SOp("(") :: _
         if WeekRejectParts.contains(f.toUpperCase) =>
@@ -612,16 +546,8 @@ object EsSql {
     // capture the next balanced atom from the remainder
     def takeRight(rest0: List[Tok]): (List[Tok], List[Tok]) = {
       def balanced(pre: List[Tok], rem0: List[Tok]): (List[Tok], List[Tok]) = {
-        var depth = 1
-        val buf = scala.collection.mutable.ListBuffer[Tok](pre: _*)
-        var rem = rem0
-        while (depth > 0) rem match {
-          case (t @ SOp("(")) :: tl => depth += 1; buf += t; rem = tl
-          case (t @ SOp(")")) :: tl => depth -= 1; buf += t; rem = tl
-          case t :: tl => buf += t; rem = tl
-          case Nil => reject("unbalanced '(' after ||")
-        }
-        (buf.toList, rem)
+        val (inside, rem) = group(rem0, "unbalanced '(' after ||")
+        (pre ++ inside :+ SOp(")"), rem)
       }
       rest0 match {
         case (t @ SId(s)) :: (o @ SOp("(")) :: tl
@@ -797,22 +723,11 @@ object EsSql {
     var rest = ts
     while (rest.nonEmpty) rest match {
       case SId(f) :: SOp("(") :: tail if f.equalsIgnoreCase("NULLIF") =>
-        val a = scala.collection.mutable.ListBuffer[Tok]()
-        val b = scala.collection.mutable.ListBuffer[Tok]()
-        var curArg = a
-        var depth = 1
-        var rem = tail
-        while (depth > 0) rem match {
-          case (t @ SOp("(")) :: tl => depth += 1; curArg += t; rem = tl
-          case SOp(")") :: tl =>
-            depth -= 1; if (depth > 0) curArg += SOp(")"); rem = tl
-          case SOp(",") :: tl if depth == 1 =>
-            if (curArg eq b) reject("NULLIF takes exactly two arguments")
-            curArg = b; rem = tl
-          case t :: tl => curArg += t; rem = tl
-          case Nil => reject("unbalanced NULLIF parentheses")
+        val (args, rem) = group(tail, "unbalanced NULLIF parentheses")
+        val (a, b) = commaSplit(args) match {
+          case List(a, b) if a.nonEmpty => (a, b)
+          case _ => reject("NULLIF takes exactly two arguments")
         }
-        if (a.isEmpty || b.isEmpty) reject("NULLIF takes exactly two arguments")
         rest = List(SId("CASE"), SOp("("), SOp("(")) ++ a ++
           List(SOp(")"), SOp("="), SOp("(")) ++ b ++
           List(SOp(")"), SOp(","), SId("NULL"), SOp(","), SOp("(")) ++ a ++
@@ -833,29 +748,17 @@ object EsSql {
     * balanced paren group followed by WHEN — the simple form with a
     * parenthesized operand (`CASE (x) WHEN ...`), which must NOT be
     * mistaken for the native function form `CASE(cond, v, ...)`. */
-  private def parenCaseIsSimpleForm(tail: List[Tok]): Boolean = {
-    if (!tail.headOption.contains(SOp("("))) return false
-    var depth = 0
-    var rem = tail
-    var first = true
+  private def parenCaseIsSimpleForm(tail: List[Tok]): Boolean = tail match {
     // a top-level comma inside the group means a CASE(...) argument list
     // (CASE takes >= 2 args), never a simple-form operand — a single SQL
     // expression can't contain a bare top-level comma. Without this, a
     // function-form CASE(...) sitting in a non-final THEN branch (so the
     // NEXT branch's WHEN follows its close-paren) was mistaken for the
     // simple form and the END scan miscounted.
-    var topComma = false
-    while (first || depth > 0) {
-      first = false
-      rem match {
-        case SOp("(") :: tl => depth += 1; rem = tl
-        case SOp(")") :: tl => depth -= 1; rem = tl
-        case SOp(",") :: tl => if (depth == 1) topComma = true; rem = tl
-        case _ :: tl => rem = tl
-        case Nil => return false
-      }
+    case SOp("(") :: t => Lex.closing(t).exists { case (inside, after) =>
+      Lex.splitTop(inside)(_ == SOp(",")).size == 1 && after.headOption.exists(isKw(_, "WHEN"))
     }
-    !topComma && rem.headOption.exists(isKw(_, "WHEN"))
+    case _ => false
   }
 
   private def rewriteCaseWhen(ts: List[Tok]): List[Tok] = {
@@ -1002,37 +905,19 @@ object EsSql {
       case SId(c) :: SOp("(") :: tail if c.equalsIgnoreCase("CAST") =>
         // capture the balanced argument up to the matching ')'; the
         // top-level `AS type` inside it splits expr from the target
-        var depth = 1
-        val body = scala.collection.mutable.ListBuffer[Tok]()
-        var rem = tail
-        while (depth > 0) {
-          rem match {
-            case SOp("(") :: t => depth += 1; body += SOp("("); rem = t
-            case SOp(")") :: t => depth -= 1; if (depth > 0) body += SOp(")"); rem = t
-            case tok :: t => body += tok; rem = t
-            case Nil => reject("unbalanced CAST parentheses")
-          }
-        }
+        val (body, rem) = group(tail, "unbalanced CAST parentheses")
         // split on the LAST top-level AS (the target type)
-        var d = 0
-        var asIdx = -1
-        body.zipWithIndex.foreach { case (tok, i) =>
-          tok match {
-            case SOp("(") => d += 1
-            case SOp(")") => d -= 1
-            case t if d == 0 && isKw(t, "AS") => asIdx = i
-            case _ => ()
-          }
-        }
-        if (asIdx < 0) reject("CAST without AS <type>")
-        val target = body.drop(asIdx + 1).toList match {
+        val parts = Lex.splitTop(body)(isKw(_, "AS"))
+        if (parts.size < 2) reject("CAST without AS <type>")
+        val asIdx = body.size - parts.last.size - 1
+        val target = body.drop(asIdx + 1) match {
           case List(SId(tn)) => fnOf.getOrElse(tn.toUpperCase,
             reject(s"CAST target type $tn (supported: " +
               "BIGINT/INTEGER/SMALLINT/LONG/DOUBLE/REAL/FLOAT/VARCHAR/TEXT/KEYWORD)"))
           case other => reject(s"CAST target must be a type name, got: ${emit(other)}")
         }
         out ++= List(SId(target), SOp("(")) // inner expr re-enters the scan
-        rest = body.take(asIdx).toList ++ (SOp(")") :: rem)
+        rest = body.take(asIdx) ++ (SOp(")") :: rem)
       case t :: tail => out += t; rest = tail
     }
     out.toList

@@ -86,39 +86,11 @@ object Esql {
   private val Ipv4Octet = "(25[0-5]|2[0-4][0-9]|1[0-9][0-9]|[1-9]?[0-9])"
 
   // ------------------------------------------------------------ tokens
-  private sealed trait Tok
-  private final case class TId(s: String) extends Tok
-  private final case class TNum(s: String) extends Tok
-  private final case class TStr(s: String) extends Tok
-  private final case class TOp(s: String) extends Tok
-  private case object TPipe extends Tok
+  import Lex.{Tok, Id => TId, Num => TNum, Str => TStr, Op => TOp}
 
-  private val TokenRe =
-    ("""\s*(?:("(?:[^"\\]|\\.)*")|([A-Za-z_][A-Za-z0-9_.]*)|""" +
-      """([0-9]+(?:\.[0-9]+)?)|(==|!=|<=|>=|[<>+\-*/%(),=|\[\]]))""").r
-
-  private def tokenize(q: String): List[Tok] = {
-    var pos = 0
-    val out = scala.collection.mutable.ListBuffer[Tok]()
-    while (pos < q.length) {
-      TokenRe.findPrefixMatchOf(q.substring(pos)) match {
-        case Some(m) =>
-          pos += m.end
-          if (m.group(1) != null)
-            out += TStr(m.group(1).substring(1, m.group(1).length - 1)
-              .replace("\\\"", "\"").replace("\\\\", "\\"))
-          else if (m.group(2) != null) out += TId(m.group(2))
-          else if (m.group(3) != null) out += TNum(m.group(3))
-          else if (m.group(4) == "|") out += TPipe
-          else out += TOp(m.group(4))
-        case None =>
-          if (q.substring(pos).trim.isEmpty) pos = q.length
-          else throw new IllegalArgumentException(
-            s"esql: cannot tokenize at: ${q.substring(pos).take(30)}")
-      }
-    }
-    out.toList
-  }
+  private val tokenize = new Lex.Lexer("esql", sqlQuotes = false,
+    Seq("==", "!=", "<=", ">=", "<", ">", "+", "-", "*", "/", "%", "(", ")", ",", "=", "|",
+      "[", "]"), signedNums = false)
 
   // -------------------------------------------------------- expressions
   private sealed trait Ex
@@ -138,56 +110,42 @@ object Esql {
   private final case class EIsNull(e: Ex, negated: Boolean) extends Ex
 
   /** Pratt-ish recursive-descent over the token list. */
-  private final class P(var ts: List[Tok]) {
-    def peek: Option[Tok] = ts.headOption
-    def pop(): Tok = {
-      require(ts.nonEmpty, "esql: unexpected end of input")
-      val h = ts.head; ts = ts.tail; h
-    }
-    def expectOp(op: String): Unit = pop() match {
-      case TOp(`op`) => ()
-      case other => throw new IllegalArgumentException(s"esql: expected '$op', got $other")
-    }
-    private def isKw(t: Tok, kw: String) = t match {
-      case TId(s) => s.equalsIgnoreCase(kw)
-      case _ => false
-    }
-    def expr(): Ex = orExpr()
+  private final class P(ts: List[Tok]) extends Lex.Cursor[Tok]("esql", ts) {
+    def expr(): Ex = nested(orExpr())
     private def orExpr(): Ex = {
       var l = andExpr()
-      while (peek.exists(isKw(_, "OR"))) { pop(); l = EBin("or", l, andExpr()) }
+      while (isKw("OR")) { pop(); l = EBin("or", l, andExpr()) }
       l
     }
     private def andExpr(): Ex = {
       var l = notExpr()
-      while (peek.exists(isKw(_, "AND"))) { pop(); l = EBin("and", l, notExpr()) }
+      while (isKw("AND")) { pop(); l = EBin("and", l, notExpr()) }
       l
     }
     private def notExpr(): Ex =
-      if (peek.exists(isKw(_, "NOT"))) { pop(); ENot(notExpr()) } else cmpExpr()
+      if (isKw("NOT")) { pop(); ENot(nested(notExpr())) } else cmpExpr()
     private def cmpExpr(): Ex = {
       val l = addExpr()
       peek match {
         case Some(TOp(op @ ("==" | "!=" | "<" | "<=" | ">" | ">="))) =>
           pop(); EBin(op, l, addExpr())
-        case Some(t) if isKw(t, "LIKE") =>
+        case _ if isKw("LIKE") =>
           pop(); EBin("like", l, addExpr())
-        case Some(t) if isKw(t, "RLIKE") =>
+        case _ if isKw("RLIKE") =>
           pop(); EBin("rlike", l, addExpr())
-        case Some(t) if isKw(t, "IN") =>
-          pop(); expectOp("(")
+        case _ if isKw("IN") =>
+          pop(); expect("(")
           val items = scala.collection.mutable.ListBuffer(expr())
           while (peek.contains(TOp(","))) { pop(); items += expr() }
-          expectOp(")")
+          expect(")")
           EIn(l, items.toList)
-        case Some(t) if isKw(t, "IS") =>
+        case _ if isKw("IS") =>
           pop()
-          val neg = peek.exists(isKw(_, "NOT"))
+          val neg = isKw("NOT")
           if (neg) pop()
           pop() match {
             case TId(s) if s.equalsIgnoreCase("NULL") => EIsNull(l, neg)
-            case other => throw new IllegalArgumentException(
-              s"esql: expected NULL after IS${if (neg) " NOT" else ""}, got $other")
+            case t => fail(s"expected NULL after IS${if (neg) " NOT" else ""}, got $t", t)
           }
         case _ => l
       }
@@ -211,8 +169,8 @@ object Esql {
       l
     }
     private def unary(): Ex = peek match {
-      case Some(TOp("-")) => pop(); EBin("-", ELong(0L), unary())
-      case Some(TOp("(")) => pop(); val e = expr(); expectOp(")"); e
+      case Some(TOp("-")) => pop(); EBin("-", ELong(0L), nested(unary()))
+      case Some(TOp("(")) => pop(); val e = expr(); expect(")"); e
       case Some(TOp("[")) => // multivalue literal [e1, e2, …]
         pop()
         val items = scala.collection.mutable.ListBuffer[Ex]()
@@ -220,11 +178,12 @@ object Esql {
           items += expr()
           while (peek.contains(TOp(","))) { pop(); items += expr() }
         }
-        expectOp("]")
+        expect("]")
         require(items.nonEmpty, "esql: empty multivalue literal []")
         EArr(items.toList)
-      case Some(TNum(s)) => pop()
-        if (s.contains('.')) EDouble(s.toDouble) else ELong(s.toLong)
+      case Some(t @ TNum(s)) => pop()
+        if (s.contains('.')) EDouble(s.toDouble)
+        else ELong(s.toLongOption.getOrElse(fail(s"integer literal out of range: $s", t)))
       case Some(TStr(s)) => pop(); EStr(s)
       case Some(TId(s)) =>
         pop()
@@ -235,25 +194,17 @@ object Esql {
             args += expr()
             while (peek.contains(TOp(","))) { pop(); args += expr() }
           }
-          expectOp(")")
+          expect(")")
           EFn(s.toUpperCase, args.toList)
         } else if (s.equalsIgnoreCase("TRUE")) EBool(true)
         else if (s.equalsIgnoreCase("FALSE")) EBool(false)
         else if (s.equalsIgnoreCase("NULL")) ENull
         else EId(s)
-      case other => throw new IllegalArgumentException(s"esql: bad expression at $other")
-    }
-    def ident(): String = pop() match {
-      case TId(n) => n
-      case other => throw new IllegalArgumentException(s"esql: expected an identifier, got $other")
+      case _ => fail("bad expression")
     }
     def string(): String = pop() match {
       case TStr(v) => v
-      case other => throw new IllegalArgumentException(s"esql: expected a string literal, got $other")
-    }
-    def expectKw(k: String): Unit = pop() match {
-      case TId(s) if s.equalsIgnoreCase(k) => ()
-      case other => throw new IllegalArgumentException(s"esql: expected $k, got $other")
+      case t => fail(s"expected a string literal, got $t", t)
     }
   }
 
@@ -1154,26 +1105,6 @@ object Esql {
   }
 
   // ------------------------------------------------------------ commands
-  /** Split a token stream on pipes at parenthesis depth 0. */
-  private def splitPipes(ts: List[Tok]): List[List[Tok]] = {
-    val out = scala.collection.mutable.ListBuffer[List[Tok]]()
-    var cur = scala.collection.mutable.ListBuffer[Tok]()
-    var depth = 0
-    ts.foreach {
-      case TPipe if depth == 0 =>
-        out += cur.toList; cur = scala.collection.mutable.ListBuffer()
-      case t =>
-        t match {
-          case TOp("(") => depth += 1
-          case TOp(")") => depth -= 1
-          case _ => ()
-        }
-        cur += t
-    }
-    out += cur.toList
-    out.toList
-  }
-
   /** Run an ES|QL pipe against the named sources. `enrich` maps a policy
     * name to (policy table, match field) — the replicated lookup index an
     * ENRICH command joins against (always broadcast: policy tables are
@@ -1186,7 +1117,12 @@ object Esql {
   def run(sources: Map[String, DataFrame], query: String,
           enrich: Map[String, (DataFrame, String)] = Map.empty,
           scoreMode: String = "terms",
-          annDir: Option[String] = None): DataFrame = {
+          annDir: Option[String] = None): DataFrame =
+    Lex.planning("esql")(plan(sources, query, enrich, scoreMode, annDir))
+
+  private def plan(sources: Map[String, DataFrame], query: String,
+                   enrich: Map[String, (DataFrame, String)], scoreMode: String,
+                   annDir: Option[String]): DataFrame = {
     require(scoreMode == "terms" || scoreMode == "bm25",
       s"esql: scoreMode must be terms or bm25, got $scoreMode")
     curSchema.remove() // no stale frame schema from a previous query (QSTR)
@@ -1196,7 +1132,7 @@ object Esql {
     annDir.foreach(annDirTL.set)
     // split the token stream on top-level pipes (paren-aware: pipes
     // inside FORK branch parentheses belong to the branch, not the pipe)
-    val segments = splitPipes(tokenize(query))
+    val segments = Lex.splitTop(tokenize(query))(_ == TOp("|"))
     require(segments.nonEmpty && segments.head.nonEmpty, "esql: empty query")
     def kw(t: Tok): String = t match {
       case TId(s) => s.toUpperCase
@@ -1214,7 +1150,7 @@ object Esql {
       val src = hp.ident()
       hp.expectKw("ON")
       val series = hp.ident()
-      require(hp.ts.isEmpty, s"esql: trailing tokens in TS: ${hp.ts.take(4)}")
+      hp.end("TS")
       val t = sources.getOrElse(src, throw new IllegalArgumentException(
         s"esql: unknown index $src (have: ${sources.keys.toSeq.sorted.mkString(", ")})"))
       require(t.columns.contains("ts_us"),
@@ -1233,11 +1169,11 @@ object Esql {
       var go = true
       while (go) {
         val name = hp.ident()
-        hp.expectOp("=")
+        hp.expect("=")
         cols += compile(hp.expr()).as(name)
         if (hp.peek.contains(TOp(","))) hp.pop() else go = false
       }
-      require(hp.ts.isEmpty, s"esql: trailing tokens in ROW: ${hp.ts.take(4)}")
+      hp.end("ROW")
       val one = sources.head._2.sparkSession.range(1).select(cols.toSeq: _*)
       return pipe(one, segments.tail, sources, enrich)
     }
@@ -1265,7 +1201,7 @@ object Esql {
           s"esql: only METADATA _index and _score are supported, got $m"))
       case _ => ()
     }
-    require(hp.ts.isEmpty, s"esql: trailing tokens in FROM: ${hp.ts.take(4)}")
+    hp.end("FROM")
     def load(n: String): DataFrame = {
       val t = sources.getOrElse(n, throw new IllegalArgumentException(
         s"esql: unknown index $n (have: ${sources.keys.toSeq.sorted.mkString(", ")})"))
@@ -1541,8 +1477,8 @@ object Esql {
               }
           }
         case "LIMIT" => p.pop() match {
-          case TNum(n) if !n.contains('.') => df = df.limit(n.toInt)
-          case other => throw new IllegalArgumentException(s"esql: bad LIMIT: $other")
+          case TNum(n) if n.toIntOption.nonEmpty => df = df.limit(n.toInt)
+          case t => p.fail(s"bad LIMIT: $t", t)
         }
         case "SAMPLE" =>
           // SAMPLE <probability> ON <keyCol> (8.19 tech preview).
@@ -1605,7 +1541,7 @@ object Esql {
               case TId(n) => n
               case other => throw new IllegalArgumentException(s"esql: bad EVAL target: $other")
             }
-            p.expectOp("=")
+            p.expect("=")
             df = df.withColumn(name, compile(p.expr()))
             if (p.peek.contains(TOp(","))) p.pop() else go = false
           }
@@ -1715,9 +1651,9 @@ object Esql {
           var go = true
           while (go) {
             val alias = p.ident()
-            p.expectOp("=")
+            p.expect("=")
             val fn = p.ident().toUpperCase
-            p.expectOp("(")
+            p.expect("(")
             val args = scala.collection.mutable.ListBuffer[Ex]()
             p.peek match {
               case Some(TOp("*")) =>
@@ -1727,7 +1663,7 @@ object Esql {
                 args += p.expr()
                 while (p.peek.contains(TOp(","))) { p.pop(); args += p.expr() }
             }
-            p.expectOp(")")
+            p.expect(")")
             val filter: Option[Ex] = p.peek match {
               case Some(TId(s)) if s.equalsIgnoreCase("WHERE") => p.pop(); Some(p.expr())
               case _ => None
@@ -1878,24 +1814,15 @@ object Esql {
           // shared, so the corpus scan is not repeated per branch when the
           // optimizer reuses the exchange.
           val branches = scala.collection.mutable.ListBuffer[List[Tok]]()
-          while (p.ts.nonEmpty) {
-            p.expectOp("(")
-            val buf = scala.collection.mutable.ListBuffer[Tok]()
-            var depth = 1
-            while (depth > 0) {
-              p.pop() match {
-                case TOp("(") => depth += 1; buf += TOp("(")
-                case TOp(")") => depth -= 1; if (depth > 0) buf += TOp(")")
-                case t => buf += t
-              }
-            }
-            branches += buf.toList
+          while (!p.atEnd) {
+            p.expect("(")
+            branches += p.group()
           }
           require(branches.size >= 2 && branches.size <= 8,
             s"esql: FORK takes 2-8 branches, got ${branches.size}")
           val pre = df
           df = branches.toList.zipWithIndex.map { case (toks, i) =>
-            pipe(pre, splitPipes(toks), sources, enrich, tsSeries)
+            pipe(pre, Lex.splitTop(toks)(_ == TOp("|")), sources, enrich, tsSeries)
               .withColumn("_fork", lit(s"fork${i + 1}"))
           }.reduce(_.unionByName(_, allowMissingColumns = true))
         case "CHANGE_POINT" =>
@@ -1913,7 +1840,7 @@ object Esql {
           val value = p.ident(); p.expectKw("ON"); val key = p.ident()
           val (tname, sname) = p.peek match {
             case Some(TId(s)) if s.equalsIgnoreCase("AS") =>
-              p.pop(); val t = p.ident(); p.expectOp(","); (t, p.ident())
+              p.pop(); val t = p.ident(); p.expect(","); (t, p.ident())
             case _ => ("type", "score")
           }
           val W = org.apache.spark.sql.expressions.Window
@@ -2020,7 +1947,7 @@ object Esql {
             "SAMPLE/KEEP/DROP/RENAME/MV_EXPAND/DISSECT/GROK/ENRICH/LOOKUP JOIN/" +
             "FORK/FUSE/CHANGE_POINT)")
       }
-      require(p.ts.isEmpty, s"esql: trailing tokens in ${kw(seg.head)}: ${p.ts.take(4)}")
+      p.end(kw(seg.head))
     }
     df
   }

@@ -136,10 +136,7 @@ object IngestPipeline {
   def parseEvolving(body: String, schema0: StructType): (Seq[Processor], StructType) = {
     val schema = schema0 // parse-time validation threads `sch` below
     import org.json4s._
-    val root = org.json4s.jackson.JsonMethods.parse(body) match {
-      case JObject(fs) => fs.toMap
-      case other => throw new IllegalArgumentException(s"pipeline must be an object: $other")
-    }
+    val root = Lex.bodyObject("pipeline", body)
     val unknown = root.keySet -- Set("description", "processors")
     require(unknown.isEmpty, s"unsupported pipeline key(s): ${unknown.mkString(", ")}")
     val procs = root.get("processors") match {

@@ -44,30 +44,25 @@ object JoinAggs {
   private final case class Hop(name: String, dir: String, relation: String,
                                metrics: Seq[Metric], next: Option[Hop])
 
-  private def obj(j: JValue, what: String): Map[String, JValue] = j match {
-    case JObject(fs) => fs.toMap
-    case other => throw new IllegalArgumentException(s"$what must be an object: $other")
-  }
-
   private def parseHop(name: String, kind: String, spec: Map[String, JValue]): Hop = {
     val unknown = spec.keySet -- Set(kind, "aggs", "aggregations")
     require(unknown.isEmpty, s"unsupported $kind agg key(s): ${unknown.mkString(", ")}")
-    val relation = obj(spec(kind), kind).get("type") match {
+    val relation = Lex.fields(spec(kind), "join aggs", kind).get("type") match {
       case Some(JString(r)) => r
       case other => throw new IllegalArgumentException(s"$kind needs a relation type: $other")
     }
     val subs = spec.get("aggs").orElse(spec.get("aggregations"))
-      .map(obj(_, "aggs")).getOrElse(Map.empty)
+      .map(Lex.fields(_, "join aggs", "aggs")).getOrElse(Map.empty)
     val (hops, metrics) = subs.partition { case (_, v) =>
-      obj(v, "sub-agg").keySet.exists(k => k == "children" || k == "parent") }
+      Lex.fields(v, "join aggs", "sub-agg").keySet.exists(k => k == "children" || k == "parent") }
     require(hops.size <= 1, "at most one children/parent agg per level")
     val ms = metrics.toSeq.sortBy(_._1).map { case (mn, mv) =>
-      val mm = obj(mv, s"metric $mn")
+      val mm = Lex.fields(mv, "join aggs", s"metric $mn")
       require(mm.size == 1, s"metric $mn must carry exactly one agg kind")
       val (mk, mspec) = mm.head
       require(Set("avg", "sum", "min", "max").contains(mk),
         s"unsupported metric under a join agg: $mk")
-      val mopts = obj(mspec, s"metric $mn")
+      val mopts = Lex.fields(mspec, "join aggs", s"metric $mn")
       val unknownM = mopts.keySet -- Set("field")
       require(unknownM.isEmpty, s"unsupported $mk option(s): ${unknownM.mkString(", ")}")
       val fld = mopts.get("field") match {
@@ -77,7 +72,7 @@ object JoinAggs {
       Metric(mn, mk, fld)
     }
     val next = hops.headOption.map { case (hn, hv) =>
-      val hm = obj(hv, s"agg $hn")
+      val hm = Lex.fields(hv, "join aggs", s"agg $hn")
       val hk = if (hm.contains("children")) "children" else "parent"
       parseHop(hn, hk, hm)
     }
@@ -88,7 +83,7 @@ object JoinAggs {
     * Output: `key`, `doc_count`, then per hop `<name>_doc_count` and
     * `<name>_<metric>` columns, flattened in tree order. */
   def run(sh: Shredded, rootTag: String, body: String): DataFrame = {
-    val root = obj(org.json4s.jackson.JsonMethods.parse(body), "body")
+    val root = Lex.bodyObject("join aggs", body)
     val unknown = root.keySet -- Set("size", "aggs", "aggregations")
     require(unknown.isEmpty, s"unsupported body key(s): ${unknown.mkString(", ")}")
     root.get("size").foreach {
@@ -96,15 +91,15 @@ object JoinAggs {
       case other => throw new IllegalArgumentException(
         s"join aggs are size:0 requests (hits are the search surface): $other")
     }
-    val aggs = obj(root.get("aggs").orElse(root.get("aggregations"))
-      .getOrElse(throw new IllegalArgumentException("body needs aggs")), "aggs")
+    val aggs = Lex.fields(root.get("aggs").orElse(root.get("aggregations"))
+      .getOrElse(throw new IllegalArgumentException("body needs aggs")), "join aggs", "aggs")
     require(aggs.size == 1, "exactly one top-level terms agg")
     val (topName @ _, topSpec0) = aggs.head
-    val topSpec = obj(topSpec0, "top agg")
+    val topSpec = Lex.fields(topSpec0, "join aggs", "top agg")
     val unknownT = topSpec.keySet -- Set("terms", "aggs", "aggregations")
     require(unknownT.isEmpty, s"unsupported top agg key(s): ${unknownT.mkString(", ")}")
-    val terms = obj(topSpec.getOrElse("terms",
-      throw new IllegalArgumentException("top-level agg must be terms")), "terms")
+    val terms = Lex.fields(topSpec.getOrElse("terms",
+      throw new IllegalArgumentException("top-level agg must be terms")), "join aggs", "terms")
     val unknownTe = terms.keySet -- Set("field", "size")
     require(unknownTe.isEmpty, s"unsupported terms option(s): ${unknownTe.mkString(", ")}")
     val bucketField = terms.get("field") match {
@@ -117,10 +112,10 @@ object JoinAggs {
       case Some(other) => throw new IllegalArgumentException(s"bad terms size: $other")
     }
     val subs = topSpec.get("aggs").orElse(topSpec.get("aggregations"))
-      .map(obj(_, "aggs")).getOrElse(Map.empty)
+      .map(Lex.fields(_, "join aggs", "aggs")).getOrElse(Map.empty)
     require(subs.size <= 1, "at most one children/parent agg under the terms split")
     val hop0 = subs.headOption.map { case (hn, hv) =>
-      val hm = obj(hv, s"agg $hn")
+      val hm = Lex.fields(hv, "join aggs", s"agg $hn")
       require(hm.contains("children") || hm.contains("parent"),
         s"sub-agg $hn must be children or parent (metrics ride inside the hops)")
       parseHop(hn, if (hm.contains("children")) "children" else "parent", hm)

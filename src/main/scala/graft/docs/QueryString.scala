@@ -21,30 +21,42 @@ import org.apache.spark.sql.types.StructType
   *   - adjacency (two clauses with no operator) uses the body's
   *     `default_operator` (ES default: OR)
   *
-  * Bare terms (no `field:`) need a default field, which this engine does
-  * not implement — rejected with a message saying so.
+  * Rejected with an IllegalArgumentException (`query_string: …` or
+  * `simple_query_string: …`, located at the offending offset):
+  *
+  *   - bare terms (no `field:`): they need a default field, which this
+  *     engine does not implement
+  *   - ranges `field:>100`, `field:<=5`, `field:[1 TO 5]`, `field:{a TO b}`
+  *   - regular expressions `field:/re/`
+  *   - fuzzy and proximity `field:roam~`, `field:"a b"~2`, and boosts
+  *     `field:foo^2` (any unquoted `~` or `^` in a value; simple_query_string
+  *     terms get the same check)
+  *   - empty values, unterminated or misplaced quotes, unbalanced
+  *     parentheses, and nesting deeper than [[Lex.MaxDepth]]
   */
 object QueryString {
 
   import SearchQuery._
 
-  private sealed trait Tok
-  private case object LP extends Tok
-  private case object RP extends Tok
-  private case object AndTok extends Tok
-  private case object OrTok extends Tok
-  private case object NotTok extends Tok
-  private final case class ClauseTok(field: String, value: String, phrase: Boolean) extends Tok
+  import Lex.{At, Off, Op}
 
-  private def lex(q: String): Vector[Tok] = {
-    val out = Vector.newBuilder[Tok]
+  /** A query_string `field:value` clause, or a simple_query_string term
+    * (`field` empty: the body's `fields` list names the targets). The
+    * structure tokens are `Op`s: parentheses and AND/OR/NOT, or `+ | -`. */
+  private final case class Clause(field: String, value: String, phrase: Boolean)
+                                 (implicit val at: Off) extends At
+
+  private val Door = "query_string"
+
+  private def lex(q: String): List[At] = {
+    val out = List.newBuilder[At]
     var i = 0
     val n = q.length
     while (i < n) {
       val c = q(i)
+      implicit val at: Off = Off(i)
       if (c.isWhitespace) i += 1
-      else if (c == '(') { out += LP; i += 1 }
-      else if (c == ')') { out += RP; i += 1 }
+      else if (c == '(' || c == ')') { out += Op(c.toString); i += 1 }
       else {
         // one atom: runs to whitespace/paren, honoring quoted segments
         val sb = new StringBuilder
@@ -53,7 +65,7 @@ object QueryString {
           q(i) match {
             case '"' =>
               val close = q.indexOf('"', i + 1)
-              require(close >= 0, s"unterminated quote in query_string at offset $i")
+              if (close < 0) Lex.fail(Door, "unterminated quote", Some(Off(i)))
               sb.append(q.substring(i, close + 1)); i = close + 1
             case w if w.isWhitespace => done = true
             case '(' | ')' => done = true
@@ -61,23 +73,19 @@ object QueryString {
           }
         }
         sb.toString match {
-          case "AND" => out += AndTok
-          case "OR" => out += OrTok
-          case "NOT" => out += NotTok
+          case kw @ ("AND" | "OR" | "NOT") => out += Op(kw)
           case atom =>
+            def bad(msg: String): Nothing = Lex.fail(Door, msg, Some(at))
             val ci = atom.indexOf(':')
-            require(ci > 0,
-              s"query_string clause must be field:value — bare term \"$atom\" needs a " +
-                "default field, which is not implemented")
+            if (ci <= 0) bad(s"clause must be field:value — bare term \"$atom\" needs a " +
+              "default field, which is not implemented")
             val f = atom.substring(0, ci)
             val v = atom.substring(ci + 1)
-            require(v.nonEmpty, s"query_string clause \"$atom\" has an empty value")
+            if (v.isEmpty) bad(s"clause \"$atom\" has an empty value")
             if (v.length >= 2 && v.startsWith("\"") && v.endsWith("\""))
-              out += ClauseTok(f, v.substring(1, v.length - 1), phrase = true)
-            else {
-              require(!v.contains('"'), s"misplaced quote in query_string clause \"$atom\"")
-              out += ClauseTok(f, v, phrase = false)
-            }
+              out += Clause(f, v.substring(1, v.length - 1), phrase = true)
+            else if (v.contains('"')) bad(s"misplaced quote in clause \"$atom\"")
+            else out += Clause(f, v, phrase = false)
         }
       }
     }
@@ -88,12 +96,10 @@ object QueryString {
     * `default_operator` is `and` (adjacency binds as AND at AND
     * precedence; the ES default OR binds at OR precedence). */
   def parse(q: String, schema: StructType, defaultAnd: Boolean = false): SearchQuery = {
-    val toks = lex(q)
-    require(toks.nonEmpty, "query_string is empty")
-    var pos = 0
-    def peek: Option[Tok] = if (pos < toks.length) Some(toks(pos)) else None
-    def startsPrimary(t: Tok): Boolean = t match {
-      case LP | NotTok | _: ClauseTok => true
+    val c = new Lex.Cursor[At](Door, lex(q))
+    if (c.atEnd) c.fail("empty query")
+    def startsPrimary(t: At): Boolean = t match {
+      case Op("(") | Op("NOT") | _: Clause => true
       case _ => false
     }
     def orExpr(): SearchQuery = {
@@ -105,14 +111,14 @@ object QueryString {
       // whole corpus.
       val shoulds = scala.collection.mutable.ListBuffer.empty[SearchQuery]
       val nots = scala.collection.mutable.ListBuffer.empty[SearchQuery]
-      def item(): Unit = peek match {
-        case Some(NotTok) => pos += 1; nots += andExpr()
+      def item(): Unit = c.peek match {
+        case Some(Op("NOT")) => c.pop(); nots += andExpr()
         case _ => shoulds += andExpr()
       }
       item()
       var go = true
-      while (go) peek match {
-        case Some(OrTok) => pos += 1; item()
+      while (go) c.peek match {
+        case Some(Op("OR")) => c.pop(); item()
         case Some(t) if !defaultAnd && startsPrimary(t) => item()
         case _ => go = false
       }
@@ -131,31 +137,24 @@ object QueryString {
     def andExpr(): SearchQuery = {
       var left = unary()
       var go = true
-      while (go) peek match {
-        case Some(AndTok) => pos += 1; left = And(left, unary())
+      while (go) c.peek match {
+        case Some(Op("AND")) => c.pop(); left = And(left, unary())
         case Some(t) if defaultAnd && startsPrimary(t) => left = And(left, unary())
         case _ => go = false
       }
       left
     }
-    def unary(): SearchQuery = peek match {
-      case Some(NotTok) => pos += 1; Not(unary())
+    def unary(): SearchQuery = c.peek match {
+      case Some(Op("NOT")) => c.pop(); Not(c.nested(unary()))
       case _ => primary()
     }
-    def primary(): SearchQuery = peek match {
-      case Some(LP) =>
-        pos += 1
-        val inner = orExpr()
-        require(peek.contains(RP), s"unbalanced parentheses in query_string at token $pos")
-        pos += 1
-        inner
-      case Some(ClauseTok(f, v, phrase)) => pos += 1; leaf(f, v, phrase, schema)
-      case other => throw new IllegalArgumentException(
-        s"query_string expected a clause or group, got $other")
+    def primary(): SearchQuery = c.pop() match {
+      case Op("(") => val inner = c.nested(orExpr()); c.expect(")"); inner
+      case t: Clause => leaf(t.field, t, schema, Door)
+      case t => c.fail(s"expected a clause or group, got $t", t)
     }
     val ast = orExpr()
-    require(pos == toks.length,
-      s"query_string has trailing tokens from position $pos: ${toks.drop(pos).mkString(" ")}")
+    c.end("the query")
     ast
   }
 
@@ -181,32 +180,27 @@ object QueryString {
     * identically. */
   def parseSimple(q: String, fields: Seq[String], schema: StructType,
                   defaultAnd: Boolean = false): SearchQuery = {
-    require(fields.nonEmpty, "simple_query_string needs a non-empty fields list " +
-      "(engine deviation: no index-level default field exists to fall back to)")
+    val door = "simple_query_string"
+    if (fields.isEmpty) throw new IllegalArgumentException(s"$door: needs a non-empty " +
+      "fields list (engine deviation: no index-level default field exists to fall back to)")
     // lex: ( ) + | are standalone operator tokens wherever unquoted; a
     // term runs to whitespace/operator, honoring one quoted segment
-    sealed trait STok
-    case object SLP extends STok; case object SRP extends STok
-    case object SAnd extends STok; case object SOr extends STok
-    case object SNeg extends STok
-    case class STerm(value: String, phrase: Boolean) extends STok
     val toks = {
-      val out = Vector.newBuilder[STok]
+      val out = List.newBuilder[At]
       var i = 0
       val n = q.length
       var atClauseStart = true // after start/operator/'(' a '-' negates
       while (i < n) {
+        implicit val at: Off = Off(i)
         q(i) match {
           case c if c.isWhitespace => i += 1; atClauseStart = true
-          case '(' => out += SLP; i += 1; atClauseStart = true
-          case ')' => out += SRP; i += 1; atClauseStart = false
-          case '+' => out += SAnd; i += 1; atClauseStart = true
-          case '|' => out += SOr; i += 1; atClauseStart = true
-          case '-' if atClauseStart => out += SNeg; i += 1; atClauseStart = false
+          case c @ ('(' | '+' | '|') => out += Op(c.toString); i += 1; atClauseStart = true
+          case ')' => out += Op(")"); i += 1; atClauseStart = false
+          case '-' if atClauseStart => out += Op("-"); i += 1; atClauseStart = false
           case '"' =>
             val close = q.indexOf('"', i + 1)
-            require(close >= 0, s"unterminated quote in simple_query_string at offset $i")
-            out += STerm(q.substring(i + 1, close), phrase = true)
+            if (close < 0) Lex.fail(door, "unterminated quote", Some(at))
+            out += Clause("", q.substring(i + 1, close), phrase = true)
             i = close + 1; atClauseStart = false
           case _ =>
             val sb = new StringBuilder
@@ -216,29 +210,22 @@ object QueryString {
               case '(' | ')' | '+' | '|' | '"' => done = true
               case c => sb.append(c); i += 1
             }
-            out += STerm(sb.toString, phrase = false); atClauseStart = false
+            out += Clause("", sb.toString, phrase = false); atClauseStart = false
         }
       }
       out.result()
     }
-    require(toks.nonEmpty, "simple_query_string is empty")
-    var pos = 0
-    def peek: Option[STok] = if (pos < toks.length) Some(toks(pos)) else None
+    val c = new Lex.Cursor[At](door, toks)
+    if (c.atEnd) c.fail("empty query")
     /** One term/phrase across the fields list: OR over per-field leaves. */
-    def expand(v: String, phrase: Boolean): SearchQuery = {
-      val leaves = fields.map(f => leaf(f, v, phrase, schema))
+    def expand(t: Clause): SearchQuery = {
+      val leaves = fields.map(f => leaf(f, t, schema, door))
       if (leaves.size == 1) leaves.head else Or(leaves: _*)
     }
-    def primary(): SearchQuery = peek match {
-      case Some(SLP) =>
-        pos += 1
-        val inner = level()
-        require(peek.contains(SRP), s"unbalanced parentheses in simple_query_string at token $pos")
-        pos += 1
-        inner
-      case Some(STerm(v, ph)) => pos += 1; expand(v, ph)
-      case other => throw new IllegalArgumentException(
-        s"simple_query_string expected a term or group, got $other")
+    def primary(): SearchQuery = c.pop() match {
+      case Op("(") => val inner = c.nested(level()); c.expect(")"); inner
+      case t: Clause => expand(t)
+      case t => c.fail(s"expected a term or group, got $t", t)
     }
     /** One paren level: left-assoc `+`/`|` over positives, `-` clauses
       * prohibited level-globally (see the contract above). */
@@ -247,12 +234,12 @@ object QueryString {
       val nots = scala.collection.mutable.ListBuffer.empty[SearchQuery]
       var nextOpAnd: Option[Boolean] = None // operator waiting for the next clause
       def clause(): Unit = {
-        val negated = peek.contains(SNeg)
-        if (negated) pos += 1
+        val negated = c.peek.contains(Op("-"))
+        if (negated) c.pop()
         val p = primary()
         if (negated) {
-          require(nextOpAnd.isEmpty,
-            "simple_query_string: an explicit +/| before a -clause is not implemented " +
+          if (nextOpAnd.nonEmpty) c.fail(
+            "an explicit +/| before a -clause is not implemented " +
               "(prohibited clauses are level-global, an operator there has no meaning)")
           nots += p
         } else positive = positive match {
@@ -264,10 +251,10 @@ object QueryString {
       }
       clause()
       var go = true
-      while (go) peek match {
-        case Some(SAnd) => pos += 1; nextOpAnd = Some(true); clause()
-        case Some(SOr) => pos += 1; nextOpAnd = Some(false); clause()
-        case Some(SLP) | Some(SNeg) | Some(_: STerm) => clause()
+      while (go) c.peek match {
+        case Some(Op("+")) => c.pop(); nextOpAnd = Some(true); clause()
+        case Some(Op("|")) => c.pop(); nextOpAnd = Some(false); clause()
+        case Some(Op("(") | Op("-") | _: Clause) => clause()
         case _ => go = false
       }
       (positive, nots.toList) match {
@@ -278,12 +265,19 @@ object QueryString {
       }
     }
     val ast = level()
-    require(pos == toks.length,
-      s"simple_query_string has trailing tokens from position $pos: ${toks.drop(pos).mkString(" ")}")
+    c.end("the query")
     ast
   }
 
-  private def leaf(f: String, v: String, phrase: Boolean, schema: StructType): SearchQuery = {
+  /** Clause `t` on field `f`. */
+  private def leaf(f: String, t: Clause, schema: StructType, door: String): SearchQuery = {
+    val v = t.value
+    val phrase = t.phrase
+    // range, regex, fuzzy and boost syntax would otherwise fall through
+    // to an analyzed term match on the raw text
+    if (!phrase && (v.headOption.exists("<>[{/".contains(_)) || v.exists("~^".contains(_))))
+      Lex.fail(door, s"range, regex, fuzzy and boost syntax is not implemented: $v",
+        Some(t.at))
     // path resolution identical to the JSON DSL's (schema-driven array
     // split, `.keyword` suffix transparent)
     val p = f.stripSuffix(".keyword").split('.').toSeq

@@ -37,10 +37,7 @@ object RankEval {
   def run(docs: DataFrame, docCol: String, body: String,
           schema: StructType): DataFrame = {
     import org.json4s._
-    val root = org.json4s.jackson.JsonMethods.parse(body) match {
-      case JObject(fields) => fields.toMap
-      case other => throw new IllegalArgumentException(s"rank_eval body must be an object: $other")
-    }
+    val root = Lex.bodyObject("rank_eval", body)
     val unknown = root.keySet -- Set("requests", "metric")
     require(unknown.isEmpty, s"unsupported rank_eval key(s): ${unknown.mkString(", ")}")
     val requests = root.get("requests") match {

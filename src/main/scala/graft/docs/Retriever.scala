@@ -46,11 +46,8 @@ object Retriever {
   def search(docs: DataFrame, docCol: String, body: String,
              schema: StructType, vectors: Option[DataFrame] = None): DataFrame = {
     import org.json4s._
-    import org.json4s.jackson.JsonMethods.{compact, render, parse => jparse}
-    val root = jparse(body) match {
-      case JObject(fs) => fs.toMap
-      case other => throw new IllegalArgumentException(s"retriever body must be an object: $other")
-    }
+    import org.json4s.jackson.JsonMethods.{compact, render}
+    val root = Lex.bodyObject("retriever", body)
     val unknown = root.keySet -- Set("retriever", "size")
     require(unknown.isEmpty, s"unsupported retriever body key(s): ${unknown.mkString(", ")}")
     val size = root.get("size") match {

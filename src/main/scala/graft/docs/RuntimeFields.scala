@@ -31,11 +31,8 @@ object RuntimeFields {
   def apply(docs: DataFrame, docCol: String, body: String,
             schema: StructType): (DataFrame, String, StructType) = {
     import org.json4s._
-    val root = org.json4s.jackson.JsonMethods.parse(body) match {
-      case JObject(fields) => fields
-      case other => throw new IllegalArgumentException(s"ES body must be an object: $other")
-    }
-    val rm = root.collectFirst { case ("runtime_mappings", v) => v }
+    val root = Lex.bodyObject("runtime_mappings", body)
+    val rm = root.get("runtime_mappings")
     if (rm.isEmpty) return (docs, body, schema)
     val mappings = rm.get match {
       case JObject(ms) if ms.nonEmpty => ms
@@ -47,10 +44,7 @@ object RuntimeFields {
     val computed: Seq[(String, Column)] = mappings.map { case (name, spec) =>
       require(!schema.fieldNames.contains(name),
         s"runtime field \"$name\" shadows a mapped field")
-      val m = spec match {
-        case JObject(f) => f.toMap
-        case other => throw new IllegalArgumentException(s"bad runtime field $name: $other")
-      }
+      val m = Lex.fields(spec, "runtime_mappings", s"runtime field $name")
       val unknown = m.keySet -- Set("type", "script")
       require(unknown.isEmpty,
         s"unsupported runtime field key(s) on $name: ${unknown.mkString(", ")} (type/script)")
@@ -88,7 +82,7 @@ object RuntimeFields {
         computed.map { case (n, c) => c.as(n) }: _*)
     val stripped = org.json4s.jackson.JsonMethods.compact(
       org.json4s.jackson.JsonMethods.render(
-        JObject(root.filterNot(_._1 == "runtime_mappings"))))
+        JObject((root - "runtime_mappings").toList)))
     (docs.select(newDoc.as(docCol)), stripped, outSchema)
   }
 }

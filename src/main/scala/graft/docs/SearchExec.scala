@@ -78,7 +78,7 @@ object SearchExec {
     */
   def search(docs0: DataFrame, docCol: String,
              body0: String, schema0: org.apache.spark.sql.types.StructType,
-             similarity: String = "boolean"): DataFrame = {
+             similarity: String = "boolean"): DataFrame = Lex.planning("search") {
     require(similarity == "boolean" || similarity == "bm25",
       s"similarity must be boolean or bm25, got $similarity")
     // runtime_mappings splice computed fields into the document struct

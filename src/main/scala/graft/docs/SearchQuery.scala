@@ -387,7 +387,7 @@ object SearchQuery {
 
   def parseBody(body: String, schema: org.apache.spark.sql.types.StructType): Parsed = {
     import org.json4s._
-    val q = org.json4s.jackson.JsonMethods.parse(body) \ "query"
+    val q = Lex.parseJson("search", body) \ "query"
     require(q != JNothing, "ES query body must contain a top-level \"query\"")
     parseQueryRoot(q, schema)
   }
@@ -633,27 +633,19 @@ object SearchQuery {
               "a stateless engine doesn't keep — state it up front)"))
         val fn = modifiers.headOption.getOrElse("saturation") match {
           case "saturation" =>
-            val m = f.get("saturation").map {
-              case JObject(sf) => sf.toMap
-              case other => throw new IllegalArgumentException(s"bad saturation spec: $other")
-            }.getOrElse(Map.empty[String, JValue])
+            val m = f.get("saturation").map(Lex.fields(_, "search", "saturation"))
+              .getOrElse(Map.empty[String, JValue])
             require((m.keySet -- Set("pivot")).isEmpty,
               s"unsupported saturation key(s): ${(m.keySet -- Set("pivot")).mkString(", ")}")
             FeatureFn("saturation", path, pivot = modNum(m, "pivot", "saturation pivot"))
           case "log" =>
-            val m = f("log") match {
-              case JObject(sf) => sf.toMap
-              case other => throw new IllegalArgumentException(s"bad log spec: $other")
-            }
+            val m = Lex.fields(f("log"), "search", "log")
             require((m.keySet -- Set("scaling_factor")).isEmpty,
               s"unsupported log key(s): ${(m.keySet -- Set("scaling_factor")).mkString(", ")}")
             FeatureFn("log", path,
               scalingFactor = modNum(m, "scaling_factor", "log scaling_factor"))
           case "sigmoid" =>
-            val m = f("sigmoid") match {
-              case JObject(sf) => sf.toMap
-              case other => throw new IllegalArgumentException(s"bad sigmoid spec: $other")
-            }
+            val m = Lex.fields(f("sigmoid"), "search", "sigmoid")
             require((m.keySet -- Set("pivot", "exponent")).isEmpty,
               s"unsupported sigmoid key(s): ${(m.keySet -- Set("pivot", "exponent")).mkString(", ")}")
             FeatureFn("sigmoid", path, pivot = modNum(m, "pivot", "sigmoid pivot"),
@@ -754,7 +746,7 @@ object SearchQuery {
 
   /** A parse position over a script source; errors carry `door` (the
     * script door's name), the offset and the whole source. */
-  private final class ScriptCursor(val s: String, door: String) {
+  private final class ScriptCursor(val s: String, door: String) extends Lex.Nesting {
     var i = 0
     def ws(): Unit = while (i < s.length && s(i).isWhitespace) i += 1
     def atEnd: Boolean = i >= s.length
@@ -768,6 +760,7 @@ object SearchQuery {
       if (peek.contains(c)) i += 1 else fail(s"expected $what, got $got")
     def fail(msg: String): Nothing =
       throw new IllegalArgumentException(s"$door: $msg at offset $i in: $s")
+    protected def tooDeep(msg: String): Nothing = fail(msg)
   }
 
   /** Recursive-descent parser shared by the script doors: standard
@@ -786,7 +779,7 @@ object SearchQuery {
       }
       l
     }
-    def expr(): ScriptExpr = chain("+-", () => term())
+    def expr(): ScriptExpr = c.nested(chain("+-", () => term()))
     def term(): ScriptExpr = chain("*/", () => factor())
     def number(): ScriptExpr = {
       val st = c.i
@@ -815,7 +808,7 @@ object SearchQuery {
       c.peek match {
         case Some('(') =>
           c.i += 1; val e = expr(); c.ws(); c.expect(')', ")"); e
-        case Some('-') => c.i += 1; SBin('-', SNum(0), factor())
+        case Some('-') => c.i += 1; SBin('-', SNum(0), c.nested(factor()))
         case Some(d) if d.isDigit => number()
         case _ if c.eat("Math.") => call()
         case _ => leaf(c).getOrElse(c.fail(s"unexpected ${c.got}"))
@@ -1039,10 +1032,7 @@ object SearchQuery {
     * wrong rows in the wrong order). */
   def parseFullBody(body: String, schema: org.apache.spark.sql.types.StructType): FullBody = {
     import org.json4s._
-    val root = org.json4s.jackson.JsonMethods.parse(body) match {
-      case JObject(fields) => fields.toMap
-      case other => throw new IllegalArgumentException(s"ES body must be an object: $other")
-    }
+    val root = Lex.bodyObject("search", body)
     val unknown = root.keySet --
       Set("query", "sort", "from", "size", "_source", "search_after", "collapse", "rescore",
         "highlight", "track_total_hits", "min_score", "slice", "script_fields",
@@ -1738,7 +1728,7 @@ object SearchQuery {
             java.nio.charset.StandardCharsets.UTF_8)
           catch { case _: IllegalArgumentException =>
             throw new IllegalArgumentException("wrapper query is not valid base64") }
-        parseNode(org.json4s.jackson.JsonMethods.parse(decoded), schema, hits)
+        parseNode(Lex.parseJson("wrapper", decoded), schema, hits)
       case JObject(List(("nested", JObject(fields)))) =>
         // Wrapper is transparent for single-leaf inner queries (inner field
         // paths are absolute in ES; Nested* already compiles to ∃element).
@@ -2493,10 +2483,7 @@ object SearchQuery {
         }
         TermsIn(Seq("objectId"), values)
       case JObject(List(("terms_set", JObject(List((p, spec)))))) =>
-        val m = spec match {
-          case JObject(f) => f.toMap
-          case other => throw new IllegalArgumentException(s"bad terms_set spec: $other")
-        }
+        val m = Lex.fields(spec, "search", "terms_set")
         val unknown = m.keySet --
           Set("terms", "minimum_should_match", "minimum_should_match_field")
         require(unknown.isEmpty,

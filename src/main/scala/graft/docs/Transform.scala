@@ -23,11 +23,6 @@ object Transform {
 
   import org.json4s._
 
-  private def obj(j: JValue, what: String): Map[String, JValue] = j match {
-    case JObject(fs) => fs.toMap
-    case other => throw new IllegalArgumentException(s"$what must be an object: $other")
-  }
-
   final case class Pivot(sourceIndex: String, destIndex: String,
                          groupBy: Seq[(String, String)], // (out name, field)
                          aggs: Seq[(String, String, String)]) // (out, kind, field)
@@ -42,23 +37,23 @@ object Transform {
                           tiebreak: Option[String])
 
   def parseLatest(body: String): Latest = {
-    val root = obj(org.json4s.jackson.JsonMethods.parse(body), "transform body")
+    val root = Lex.bodyObject("transform", body)
     val unknown = root.keySet -- Set("source", "latest", "dest")
     require(unknown.isEmpty, s"unsupported transform key(s): ${unknown.mkString(", ")}")
-    val source = obj(root.getOrElse("source",
-      throw new IllegalArgumentException("transform needs source")), "source")
+    val source = Lex.fields(root.getOrElse("source",
+      throw new IllegalArgumentException("transform needs source")), "transform", "source")
     val srcIdx = source.get("index") match {
       case Some(JString(i)) => i
       case other => throw new IllegalArgumentException(s"source needs index: $other")
     }
-    val dest = obj(root.getOrElse("dest",
-      throw new IllegalArgumentException("transform needs dest")), "dest")
+    val dest = Lex.fields(root.getOrElse("dest",
+      throw new IllegalArgumentException("transform needs dest")), "transform", "dest")
     val dstIdx = dest.get("index") match {
       case Some(JString(i)) => i
       case other => throw new IllegalArgumentException(s"dest needs index: $other")
     }
-    val latest = obj(root.getOrElse("latest",
-      throw new IllegalArgumentException("latest transform needs latest")), "latest")
+    val latest = Lex.fields(root.getOrElse("latest",
+      throw new IllegalArgumentException("latest transform needs latest")), "transform", "latest")
     val unknownL = latest.keySet -- Set("unique_key", "sort", "graft_tiebreak")
     require(unknownL.isEmpty, s"unsupported latest key(s): ${unknownL.mkString(", ")}")
     val uk = latest.get("unique_key") match {
@@ -122,32 +117,32 @@ object Transform {
   }
 
   def parse(body: String): Pivot = {
-    val root = obj(org.json4s.jackson.JsonMethods.parse(body), "transform body")
+    val root = Lex.bodyObject("transform", body)
     val unknown = root.keySet -- Set("source", "pivot", "dest")
     require(unknown.isEmpty, s"unsupported transform key(s): ${unknown.mkString(", ")}")
-    val source = obj(root.getOrElse("source",
-      throw new IllegalArgumentException("transform needs source")), "source")
+    val source = Lex.fields(root.getOrElse("source",
+      throw new IllegalArgumentException("transform needs source")), "transform", "source")
     val srcIdx = source.get("index") match {
       case Some(JString(i)) => i
       case other => throw new IllegalArgumentException(s"source needs index: $other")
     }
-    val dest = obj(root.getOrElse("dest",
-      throw new IllegalArgumentException("transform needs dest")), "dest")
+    val dest = Lex.fields(root.getOrElse("dest",
+      throw new IllegalArgumentException("transform needs dest")), "transform", "dest")
     val dstIdx = dest.get("index") match {
       case Some(JString(i)) => i
       case other => throw new IllegalArgumentException(s"dest needs index: $other")
     }
-    val pivot = obj(root.getOrElse("pivot",
+    val pivot = Lex.fields(root.getOrElse("pivot",
       throw new IllegalArgumentException("transform needs pivot (latest-form not implemented)")),
-      "pivot")
+      "transform", "pivot")
     val unknownP = pivot.keySet -- Set("group_by", "aggregations", "aggs")
     require(unknownP.isEmpty, s"unsupported pivot key(s): ${unknownP.mkString(", ")}")
-    val gb = obj(pivot.getOrElse("group_by",
-      throw new IllegalArgumentException("pivot needs group_by")), "group_by")
+    val gb = Lex.fields(pivot.getOrElse("group_by",
+      throw new IllegalArgumentException("pivot needs group_by")), "transform", "group_by")
       .toSeq.sortBy(_._1).map { case (name, spec) =>
-        obj(spec, s"group_by $name").toList match {
+        Lex.fields(spec, "transform", s"group_by $name").toList match {
           case List(("terms", t)) =>
-            obj(t, "terms").get("field") match {
+            Lex.fields(t, "transform", "terms").get("field") match {
               case Some(JString(f)) => name -> f
               case other => throw new IllegalArgumentException(s"terms needs field: $other")
             }
@@ -155,14 +150,15 @@ object Transform {
             s"only terms group_bys are implemented: $other")
         }
       }
-    val aggs = obj(pivot.get("aggregations").orElse(pivot.get("aggs"))
-      .getOrElse(throw new IllegalArgumentException("pivot needs aggregations")), "aggs")
+    val aggs = Lex.fields(pivot.get("aggregations").orElse(pivot.get("aggs"))
+      .getOrElse(throw new IllegalArgumentException("pivot needs aggregations")),
+      "transform", "aggs")
       .toSeq.sortBy(_._1).map { case (name, spec) =>
-        obj(spec, s"agg $name").toList match {
+        Lex.fields(spec, "transform", s"agg $name").toList match {
           case List((kind, aspec)) =>
             require(Set("sum", "min", "max", "avg", "value_count").contains(kind),
               s"unsupported transform agg: $kind (decomposable partials only)")
-            obj(aspec, kind).get("field") match {
+            Lex.fields(aspec, "transform", kind).get("field") match {
               case Some(JString(f)) => (name, kind, f)
               case other => throw new IllegalArgumentException(s"$kind needs field: $other")
             }

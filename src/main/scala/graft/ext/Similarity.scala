@@ -497,10 +497,7 @@ object Similarity {
       s"""{"knn": {"field": "embedding", "query_vector": [${qv.mkString(",")}],
          |"k": 5, "num_candidates": 500, "filter": {"term": {"label": 7}}}}""".stripMargin
     import org.json4s._
-    val spec = org.json4s.jackson.JsonMethods.parse(body) \ "knn" match {
-      case JObject(f) => f.toMap
-      case other => throw new IllegalArgumentException(s"bad knn body: $other")
-    }
+    val spec = graft.docs.Lex.fields(graft.docs.Lex.parseJson("knn", body) \ "knn", "knn", "knn")
     val unknown = spec.keySet -- Set("field", "query_vector", "k", "num_candidates", "filter")
     require(unknown.isEmpty, s"unsupported knn key(s): ${unknown.mkString(", ")}")
     require(spec.get("field").contains(JString("embedding")),
